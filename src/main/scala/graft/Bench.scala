@@ -433,7 +433,7 @@ object Bench {
             val t0 = System.nanoTime()
             val g = QueriesData.buildNndGraphFresh(spark, d)
             val secs = (System.nanoTime() - t0) / 1e9
-            QueriesData.releaseGraph(g)
+            Ckpt.free(g)
             secs
           }
           timeBuild(sfDir) // warm — discard

@@ -71,27 +71,14 @@ object CdcPipeline {
       }
 
   /** Streaming: continuously materialize the keyed states into a
-    * versioned parquet PK table (graft.sinks.PkTableSink) — the lake
-    * equivalent of the StarRocks target table, refreshed per
-    * micro-batch and idempotent under batch replay.
-    */
-  def toPkTableSink(states: org.apache.spark.sql.Dataset[CdcStream.KeyState],
-                    root: String): DataStreamWriter[CdcStream.KeyState] =
-    states.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[CdcStream.KeyState], _: Long) =>
-        graft.sinks.PkTableSink.merge(batch.sparkSession, root, batch.toDF(),
-          keyCols = Seq("key"), versionCols = Seq("versionMs", "seq"),
-          deleteFlag = "deleted")
-        ()
-      }
-
-  /** [[toPkTableSink]] on the TRANSACTIONAL commit log
-    * (graft.sinks.TxLog): multiple streaming queries — the reference's
-    * concurrent Routine Load + Stream Load into one PK table — can
-    * target the same root; commit races re-merge onto the winner, and
-    * readers never observe a torn table. `writer` tags the stream's
-    * commits in the manifest log (use distinct ids per query).
+    * PK lake table on the TRANSACTIONAL commit log
+    * (graft.sinks.TxLog) — the lake equivalent of the StarRocks target
+    * table, refreshed per micro-batch and idempotent under batch
+    * replay (latest-wins by version). Multiple streaming queries — the
+    * reference's concurrent Routine Load + Stream Load into one PK
+    * table — can target the same root; commit races re-merge onto the
+    * winner, and readers never observe a torn table. `writer` tags the
+    * stream's commits in the manifest log (use distinct ids per query).
     */
   def toTxPkTableSink(states: org.apache.spark.sql.Dataset[CdcStream.KeyState],
                       root: String, writer: String,

@@ -40,31 +40,17 @@ object Par {
     * staged write jobs crowd the round's critical-path merges under
     * FIFO) — inline-on-pool-thread is the measured optimum. */
   def start[T](f: () => T): () => T =
-    if (Thread.currentThread().getName.startsWith("graft-par")) {
+    if (onPool) {
       val r = scala.util.Try(f())
       () => r.get
     } else {
-      import org.apache.spark.sql.SparkSession
-      val session = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      val callerProps = session.map(s =>
-        CtxKeys.map(k => k -> s.sparkContext.getLocalProperty(k)))
-      val fut = pool.submit(new java.util.concurrent.Callable[T] {
-        override def call(): T = session match {
-          case Some(s) =>
-            SparkSession.setActiveSession(s)
-            val prev = CtxKeys.map(k => k -> s.sparkContext.getLocalProperty(k))
-            callerProps.get.foreach { case (k, v) =>
-              s.sparkContext.setLocalProperty(k, v) }
-            try f()
-            finally prev.foreach { case (k, v) =>
-              s.sparkContext.setLocalProperty(k, v) }
-          case None => f()
-        }
-      })
+      val fut = pool.submit(withCallerCtx(f))
       () => try fut.get() catch {
         case e: java.util.concurrent.ExecutionException => throw e.getCause
       }
     }
+
+  private def onPool: Boolean = Thread.currentThread().getName.startsWith("graft-par")
 
   // Spark's per-thread job-attribution/cancellation state lives in
   // SparkContext LOCAL PROPERTIES. Pool threads are created lazily and
@@ -76,6 +62,26 @@ object Par {
   // and restores the worker's own around the body.
   private val CtxKeys = Seq("spark.job.description", "spark.jobGroup.id",
     "spark.job.interruptOnCancel", "spark.scheduler.pool")
+
+  /** `f` as a pool task that runs under the CALLER's active session and
+    * job-context properties (captured now, on the caller's thread). */
+  private def withCallerCtx[T](f: () => T): java.util.concurrent.Callable[T] = {
+    import org.apache.spark.sql.SparkSession
+    val session = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+    val callerProps = session.map(s =>
+      CtxKeys.map(k => k -> s.sparkContext.getLocalProperty(k)))
+    () => session match {
+      case Some(s) =>
+        SparkSession.setActiveSession(s)
+        val prev = CtxKeys.map(k => k -> s.sparkContext.getLocalProperty(k))
+        callerProps.get.foreach { case (k, v) =>
+          s.sparkContext.setLocalProperty(k, v) }
+        try f()
+        finally prev.foreach { case (k, v) =>
+          s.sparkContext.setLocalProperty(k, v) }
+      case None => f()
+    }
+  }
 
   /** Map `f` over `xs` with each element on a pool thread, preserving
     * order. Escapes to a plain map for 0/1 elements. The FIRST failure
@@ -89,27 +95,9 @@ object Par {
     // thread BLOCK on work that needs another pool thread (deadlock
     // when all workers wait); inline keeps nesting correct and still
     // overlapped at the outermost level
-    if (xs.lengthCompare(2) < 0 ||
-        Thread.currentThread().getName.startsWith("graft-par")) xs.map(f)
+    if (xs.lengthCompare(2) < 0 || onPool) xs.map(f)
     else {
-      import org.apache.spark.sql.SparkSession
-      val session = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      val callerProps = session.map(s =>
-        CtxKeys.map(k => k -> s.sparkContext.getLocalProperty(k)))
-      def withCallerCtx[T](body: => T): T = session match {
-        case Some(s) =>
-          SparkSession.setActiveSession(s)
-          val prev = CtxKeys.map(k => k -> s.sparkContext.getLocalProperty(k))
-          callerProps.get.foreach { case (k, v) =>
-            s.sparkContext.setLocalProperty(k, v) }
-          try body
-          finally prev.foreach { case (k, v) =>
-            s.sparkContext.setLocalProperty(k, v) }
-        case None => body
-      }
-      val futs = xs.map(x => pool.submit(new java.util.concurrent.Callable[B] {
-        override def call(): B = withCallerCtx(f(x))
-      }))
+      val futs = xs.map(x => pool.submit(withCallerCtx(() => f(x))))
       var firstErr: Throwable = null
       val out = futs.map { fu =>
         try Some(fu.get())

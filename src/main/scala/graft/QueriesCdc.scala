@@ -29,13 +29,6 @@ object QueriesCdc {
       finally walk.close()
     } catch { case _: java.io.IOException => () }
 
-  /** The iterative-MV gates call [[Ckpt.free]] on every SUPERSEDED
-    * state inside their round loops — without it each run pins 8
-    * corpus-scale checkpoint sets until process exit (the r13 ±2.24×
-    * same-code bench swing). Safe only once every consumer of the
-    * frame has MATERIALIZED. */
-  private def freeCkpt(df: DataFrame): Unit = Ckpt.free(df)
-
   private def opCol: Column =
     when(col("event_type") === "signup", Envelope.OpCreate)
       .when(col("event_type") === "error", Envelope.OpDelete)
@@ -399,7 +392,7 @@ object QueriesCdc {
         .mergeMv(None, deltas.reduce(_ unionByName _), outCols)
         .drop("__mult").orderBy(col("o_orderkey"))
         .localCheckpoint(true) // result-sized; all deltas consumed here
-      states.foreach(freeCkpt)
+      states.foreach(Ckpt.free)
       out
     },
 
@@ -447,7 +440,7 @@ object QueriesCdc {
           Rounding.r(col("cents").cast("double") / 100, 2).as("revenue"))
         .orderBy(col("c_name"))
         .localCheckpoint(true) // view-sized; all group deltas consumed here
-      states.foreach(freeCkpt)
+      states.foreach(Ckpt.free)
       out
     },
 
@@ -1076,7 +1069,7 @@ object QueriesCdc {
         MaterializedAgg.mergeMv(None, gds.reduce(_ unionByName _),
             Seq("c_mktsegment", "c_name"), Seq("cents"))
           .write.mode("overwrite").parquet(mvPath)
-        states.foreach(freeCkpt) // all consumed by the MV write
+        states.foreach(Ckpt.free) // all consumed by the MV write
         // read side: register + run the user's LITERAL join SQL
         MvRewrite.registerJoin(s, oPath, cPath,
           Seq("o_custkey" -> "c_custkey"), mvPath,
@@ -1771,7 +1764,7 @@ object QueriesCdc {
         val out = r1.join(r2, Seq("c_mktsegment", "o_orderstatus"))
           .orderBy(col("c_mktsegment"), col("o_orderstatus"))
           .localCheckpoint(true)
-        freeCkpt(li) // all consumers materialized above
+        Ckpt.free(li) // all consumers materialized above
         out
       } finally {
         MvRewrite.deregisterJoin(liPath, oPath, cPath)
@@ -1875,7 +1868,7 @@ object QueriesCdc {
             col("o_orderstatus")).write.mode("overwrite").parquet(oPath),
           () => c.where(!col("cdel")).select(col("c_custkey"), col("c_mktsegment"))
             .write.mode("overwrite").parquet(cPath))
-        allStates.foreach(freeCkpt) // all consumed by the MV write
+        allStates.foreach(Ckpt.free) // all consumed by the MV write
         MvRewrite.registerJoin(s, Seq(liPath, oPath, cPath), starPairs,
           mvPath, groupCols = groupCols,
           aggs = Map("n" -> MvRewrite.CountStar,
@@ -1903,7 +1896,7 @@ object QueriesCdc {
         }
         val out = q.orderBy(col("c_mktsegment"), col("o_orderstatus"))
           .localCheckpoint(true)
-        freeCkpt(li) // last consumer (the user-table write) is done
+        Ckpt.free(li) // last consumer (the user-table write) is done
         out
       } finally {
         MvRewrite.deregisterJoin(liPath, oPath, cPath)

@@ -97,16 +97,7 @@ object QueriesData {
     * rebuilds. */
   def evictNndGraph(s: SparkSession, dir: String): Unit = {
     val g = nndGraphCache.remove(s.sparkContext.applicationId + "|" + dir)
-    if (g != null) releaseGraph(g)
-  }
-
-  /** Free a search graph's materialized blocks. A localCheckpoint'ed
-    * frame's blocks live on its LogicalRDD, not in the CacheManager —
-    * Dataset.unpersist would be a no-op on it. */
-  def releaseGraph(g: DataFrame): Unit = g.queryExecution.analyzed match {
-    case lr: org.apache.spark.sql.execution.LogicalRDD =>
-      lr.rdd.unpersist(false)
-    case _ => g.unpersist(false)
+    if (g != null) Ckpt.free(g)
   }
 
   /** Fresh UNCACHED graph build on `dir` — the bench's `graph_build`

@@ -2,6 +2,7 @@ package graft.cdc
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.sinks.PkTableSink.TableBatch
 
 /** Incremental materialized AGGREGATE view over a keyed CDC changelog
   * — the StarRocks materialized-view analogue (the reference keeps
@@ -103,19 +104,15 @@ object MaterializedAgg {
     * deployment (foreachBatch): key-state and the view commit
     * ATOMICALLY in one [[graft.sinks.PkTableSink.mergeTxGroup]]
     * manifest, with the per-writer batch watermark riding in the SAME
-    * manifest's meta map (`wm.<writer>`). foreachBatch replays a batch
-    * after a crash — and a signed delta is NOT idempotent (re-applying
-    * doubles it) — so the watermark decides: `batchId ≤` the committed
-    * watermark means the manifest landed and the replay is a no-op
-    * (returns false). Either the crash happened before the commit
-    * (nothing landed, replay re-applies cleanly) or after (everything
-    * landed, replay skips) — no partial state is reachable because
-    * state, view, and watermark flip in one manifest. The watermark
-    * check is a driver-side manifest read: a stale replay runs ZERO
-    * Spark jobs, and each live batch saves the 1-row commits-table
-    * scan+write the pre-meta protocol paid. Lakes written by that
-    * older protocol (a `commits` table, no meta key) are honored via a
-    * one-time fallback scan; their next commit upgrades them to meta.
+    * manifest's meta map (`wm.<writer>`) — one [[MvRound]]. foreachBatch
+    * replays a batch after a crash, and a signed delta is NOT
+    * idempotent (re-applying doubles it), so the watermark decides:
+    * `batchId ≤` the committed watermark means the manifest landed and
+    * the replay is a no-op (returns false, zero Spark jobs). Either
+    * the crash happened before the commit (nothing landed, replay
+    * re-applies cleanly) or after (everything landed, replay skips) —
+    * no partial state is reachable because state, view, and watermark
+    * flip in one manifest.
     *
     * Single-writer per `writer` id (the routine-load shape: one job
     * owns one view); concurrent DIFFERENT writers are serialized by
@@ -128,64 +125,63 @@ object MaterializedAgg {
   def maintainTx(root: String, batch: DataFrame, batchId: Long,
                  keyCols: Seq[String], versionCols: Seq[String], deleteFlag: Column,
                  groupCols: Seq[String], sums: Seq[(String, Column)],
-                 writer: String): Boolean = {
-    import graft.sinks.{PkTableSink, TxLog}
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val spark = batch.sparkSession
-    val sumNames = sums.map(_._1)
-    val wmKey = s"wm.$writer"
-    val manifest = TxLog.current(spark, root)
-    val applied: Option[Long] = manifest.flatMap(_.meta.get(wmKey)).map(_.toLong)
-      .orElse(manifest.filter(_.tables.contains("commits")).flatMap { _ =>
-        // pre-meta lake: one fallback scan of the 1-row-per-writer
-        // commits table; the next commit writes the meta key
-        val r = PkTableSink.readTxGroup(spark, root, "commits",
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            StructType(Seq(StructField("writer_id", StringType),
-              StructField("batch_id", LongType)))))
-          .where(col("writer_id") === writer)
-          .agg(max(col("batch_id"))).collect()(0)
-        if (r.isNullAt(0)) None else Some(r.getLong(0))
-      })
-    if (applied.exists(batchId <= _)) return false
+                 writer: String): Boolean =
+    MvRound.run(batch.sparkSession, root, batchId, writer,
+        Seq("state" -> MvRound.stateBatch(batch, keyCols, versionCols, deleteFlag))) { r =>
+      // state WITH tombstones: a deleted key's version must stay visible
+      // so a straggler insert loses latestPerKey here exactly as it does
+      // in the stored table — view and table can never diverge
+      val state = r.readAll("state", emptyState(batch, deleteFlag), deletedCol = Del)
+      val s = step(state, batch, keyCols, versionCols.map(col), deleteFlag)
+      val delta = groupDelta(s.signedDelta, groupCols, sums).localCheckpoint(true)
+      r.freeAfterCommit(delta)
+      sumView(r, delta, groupCols, sums.map(_._1), batchId)
+    }
 
-    // state-batch delta write staged now (r18): it depends only on
-    // the raw batch, so it runs on a Par thread while the state merge
-    // and delta waves below occupy the caller
-    val staged = Seq(PkTableSink.stageTableBatch(spark, root, "state",
-      PkTableSink.TableBatch(
-        batch.withColumn("__state_del", coalesce(deleteFlag, lit(false))),
-        keyCols, versionCols, "__state_del"), writer))
-    // state WITH tombstones: a deleted key's version must stay visible
-    // so a straggler insert loses latestPerKey here exactly as it does
-    // in the stored table — view and table can never diverge
-    val state = PkTableSink.readTxGroupAll(spark, root, "state",
-      emptyState(batch, deleteFlag), deletedCol = Del)
-    val s = step(state, batch, keyCols, versionCols.map(col), deleteFlag)
-    val delta = groupDelta(s.signedDelta, groupCols, sums)
-      .localCheckpoint(true)
-    // new rows for TOUCHED groups only: current view restricted to the
-    // delta's groups, merged additively; n = 0 becomes a tombstone
-    val curMv = PkTableSink.readTxGroup(spark, root, "mv", delta)
+  /** The sum view's batch for one round: the pinned view restricted to
+    * the delta's groups, merged additively; n = 0 becomes a tombstone.
+    * Shared with [[MaterializedJoin.maintainAggTx]]. */
+  private[cdc] def sumView(r: MvRound.Pinned, delta: DataFrame, groupCols: Seq[String],
+                           sumNames: Seq[String], batchId: Long): Map[String, TableBatch] = {
     val touched = delta.select(groupCols.map(col): _*)
-    val newMv = mergeMvAllowZero(
-        curMv.join(touched, groupCols, "left_semi"), delta, groupCols, sumNames)
-      .withColumn("batch_id", lit(batchId))
-      .withColumn("__mv_gone", col("n") <= 0)
-    PkTableSink.mergeTxGroup(spark, root, Map(
-      "mv" -> PkTableSink.TableBatch(newMv, groupCols, Seq("batch_id"),
-        "__mv_gone", preCompacted = true)), // one row per group by construction
-      writer = writer,
-      extraMeta = Map(wmKey -> batchId.toString),
-      staged = staged)
-    true
+    viewBatch(mergeMvAllowZero(r.read("mv", delta).join(touched, groupCols, "left_semi"),
+      delta, groupCols, sumNames), groupCols, batchId)
   }
 
+  /** The min/max view's batch for one round ([[attachExtrema]] over
+    * the sum merge); `st.state` is the live source a rescan reads.
+    * Shared with [[MaterializedJoin.maintainAggMinMaxTx]]. */
+  private[cdc] def minMaxView(r: MvRound.Pinned, st: Step, groupCols: Seq[String],
+                              sums: Seq[(String, Column)], exts: Seq[Extremum],
+                              batchId: Long): Map[String, TableBatch] = {
+    val delta = groupDelta(st.signedDelta, groupCols, sums)
+    val touched = delta.select(groupCols.map(col): _*)
+    // empty-lake schema fallback: the view's shape derived from the
+    // state (never evaluated once a manifest exists)
+    val mvSchema = st.state.groupBy(groupCols.map(col): _*)
+      .agg(count(lit(1)).as("n"),
+        sums.map { case (nm, c) => sum(c).as(nm) } ++
+          exts.map(e => (if (e.isMin) min(e.value) else max(e.value)).as(e.name)): _*)
+      .limit(0)
+    val curMv = r.read("mv", mvSchema).join(touched, groupCols, "left_semi")
+    viewBatch(attachExtrema(
+        mergeMvAllowZero(curMv.drop(exts.map(_.name): _*), delta, groupCols, sums.map(_._1)),
+        Some(curMv), st, groupCols, sums, exts),
+      groupCols, batchId)
+  }
+
+  // one row per group by construction (the merge aggregates by the
+  // group key; attachExtrema's joins have per-group-unique right
+  // sides) — preCompacted skips the write-side compaction exchange
+  private def viewBatch(mv: DataFrame, groupCols: Seq[String],
+                        batchId: Long): Map[String, TableBatch] =
+    Map("mv" -> TableBatch(
+      mv.withColumn("batch_id", lit(batchId)).withColumn("__mv_gone", col("n") <= 0),
+      groupCols, Seq("batch_id"), "__mv_gone", preCompacted = true))
+
   /** [[mergeMv]] but keeping zero-count groups (the caller tombstones
-    * them instead of dropping the rows). Shared with
-    * [[MaterializedJoin.maintainAggTx]]. */
-  private[cdc] def mergeMvAllowZero(mv: DataFrame, delta: DataFrame,
+    * them instead of dropping the rows). */
+  private def mergeMvAllowZero(mv: DataFrame, delta: DataFrame,
                                groupCols: Seq[String], sumNames: Seq[String]): DataFrame =
     mv.unionByName(delta, allowMissingColumns = true)
       .select((groupCols.map(col) :+ col("n")) ++ sumNames.map(col): _*)
@@ -332,68 +328,38 @@ object MaterializedAgg {
   }
 
   /** EXACTLY-ONCE transactional maintenance with MIN/MAX columns —
-    * [[maintainTx]]'s discipline plus [[mergeMvMinMax]]'s extremum
-    * rule: state, view, and the per-writer watermark flip in ONE
-    * manifest; the view's batch writes only TOUCHED groups (zero-count
-    * groups tombstone); stale replays run zero Spark jobs. */
+    * [[maintainTx]]'s round plus [[mergeMvMinMax]]'s extremum rule:
+    * state, view, and the per-writer watermark flip in ONE manifest;
+    * the view's batch writes only TOUCHED groups (zero-count groups
+    * tombstone); stale replays run zero Spark jobs. */
   def maintainMinMaxTx(root: String, batch: DataFrame, batchId: Long,
                        keyCols: Seq[String], versionCols: Seq[String],
                        deleteFlag: Column, groupCols: Seq[String],
                        sums: Seq[(String, Column)], exts: Seq[Extremum],
-                       writer: String): Boolean = {
-    import graft.sinks.{PkTableSink, TxLog}
-    val spark = batch.sparkSession
-    val sumNames = sums.map(_._1)
-    val wmKey = s"wm.$writer"
-    val manifest = TxLog.current(spark, root)
-    val applied = manifest.flatMap(_.meta.get(wmKey)).map(_.toLong)
-    if (applied.exists(batchId <= _)) return false
+                       writer: String): Boolean =
+    MvRound.run(batch.sparkSession, root, batchId, writer,
+        Seq("state" -> MvRound.stateBatch(batch, keyCols, versionCols, deleteFlag))) { r =>
+      minMaxView(r, pinnedStep(r, batch, keyCols, versionCols, deleteFlag),
+        groupCols, sums, exts, batchId)
+    }
 
-    // state-batch delta write staged now (see maintainTx)
-    val staged = Seq(PkTableSink.stageTableBatch(spark, root, "state",
-      PkTableSink.TableBatch(
-        batch.withColumn("__state_del", coalesce(deleteFlag, lit(false))),
-        keyCols, versionCols, "__state_del"), writer))
-    val state = PkTableSink.readTxGroupAll(spark, root, "state",
-      emptyState(batch, deleteFlag), deletedCol = Del)
-    // the extremum legs (insert candidates, retraction trigger, rescan
-    // recompute) all read the successor state / signed delta —
-    // materialize each ONCE via the step hook + a signed-delta
-    // checkpoint (r18; the r17 maintain/maintainMinMax hook fix
-    // applied to the Tx variant, which was still re-running the full
-    // state merge in every leg of the view's write job). The group
-    // delta and current view stay LAZY: every consumer sits inside
-    // the single mv-batch write job (small re-aggregations of the
-    // checkpointed signed delta / view-lake scans ∝ touched groups),
-    // so their dedicated checkpoint waves bought nothing.
+  /** A single-table round's [[step]] from the pinned key-state — WITH
+    * tombstones, so a straggler insert of a deleted key loses
+    * latestPerKey — for the non-self-maintainable views (min/max, top-k):
+    * their legs (insert candidates, retraction trigger, rescan
+    * recompute) all read the successor state and the signed delta, so
+    * each is materialized ONCE (step hook + signed-delta checkpoint,
+    * r18) and freed after the commit. The group delta and current
+    * view stay LAZY: every consumer sits inside the single mv-batch
+    * write job, so dedicated checkpoint waves would buy nothing. */
+  private[cdc] def pinnedStep(r: MvRound.Pinned, batch: DataFrame, keyCols: Seq[String],
+                              versionCols: Seq[String], deleteFlag: Column): Step = {
+    val state = r.readAll("state", emptyState(batch, deleteFlag), deletedCol = Del)
     val st = step(state, batch, keyCols, versionCols.map(col), deleteFlag,
       materialize = _.localCheckpoint(true))
     val sd = st.signedDelta.localCheckpoint(true)
-    val stC = Step(state = st.state, signedDelta = sd)
-    val delta = groupDelta(sd, groupCols, sums)
-    val touched = delta.select(groupCols.map(col): _*)
-    // empty-lake schema fallback: the view's shape derived from the
-    // state (never evaluated once a manifest exists)
-    val mvSchema = st.state.groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).as("n"),
-        sums.map { case (nm, c) => sum(c).as(nm) } ++
-          exts.map(e => (if (e.isMin) min(e.value) else max(e.value)).as(e.name)): _*)
-      .limit(0)
-    val curMv = PkTableSink.readTxGroup(spark, root, "mv", mvSchema)
-      .join(touched, groupCols, "left_semi")
-    val newMv = attachExtrema(
-        mergeMvAllowZero(curMv.drop(exts.map(_.name): _*), delta, groupCols, sumNames),
-        Some(curMv), stC, groupCols, sums, exts)
-      .withColumn("batch_id", lit(batchId))
-      .withColumn("__mv_gone", col("n") <= 0)
-    PkTableSink.mergeTxGroup(spark, root, Map(
-      "mv" -> PkTableSink.TableBatch(newMv, groupCols, Seq("batch_id"),
-        "__mv_gone", preCompacted = true)), // one row per group
-      writer = writer,
-      extraMeta = Map(wmKey -> batchId.toString),
-      staged = staged)
-    Seq(st.state, sd).foreach(graft.Ckpt.free)
-    true
+    r.freeAfterCommit(st.state, sd)
+    Step(state = st.state, signedDelta = sd)
   }
 
   /** [[maintain]] with MIN/MAX columns — same batch loop, same

@@ -152,23 +152,7 @@ object MaterializedJoin {
       require(cols.indexWhere(_.contains(a)) != cols.indexWhere(_.contains(b)),
         s"pair ($a, $b) must span two different tables")
     }
-    // table-level join graph + BFS orders (delta-first fold per term)
-    val edges: Seq[(Int, Int)] = joinPairs.map { case (a, b) =>
-      (cols.indexWhere(_.contains(a)), cols.indexWhere(_.contains(b)))
-    }
-    def bfsFrom(start: Int): Seq[Int] = {
-      val order = scala.collection.mutable.ArrayBuffer(start)
-      val seen = scala.collection.mutable.Set(start)
-      var q = List(start)
-      while (q.nonEmpty) {
-        val h = q.head; q = q.tail
-        edges.foreach { case (x, y) =>
-          val n = if (x == h) y else if (y == h) x else -1
-          if (n >= 0 && !seen(n)) { seen += n; order += n; q = q :+ n }
-        }
-      }
-      order.toSeq
-    }
+    def bfsFrom(start: Int): Seq[Int] = bfsOrder(start, cols, joinPairs)
     require(bfsFrom(0).size == tables.size,
       "the equi-pair graph must connect every table (no cross joins)")
 
@@ -193,25 +177,52 @@ object MaterializedJoin {
         if (j < i) live(stepped(j).state)
         else if (j == i) live(stepped(i).signedDelta)
         else live(tables(j).state)
-      val order = bfsFrom(i)
-      var acc = frame(order.head)
-      var seen = cols(order.head)
-      order.tail.foreach { j =>
-        val conds = joinPairs.collect {
-          case (a, b) if seen.contains(a) && cols(j).contains(b) =>
-            col(a) === col(b)
-          case (a, b) if seen.contains(b) && cols(j).contains(a) =>
-            col(b) === col(a)
-        }
-        // nonempty by BFS construction
-        acc = acc.join(frame(j), conds.reduce(_ && _))
-        seen = seen ++ cols(j)
-      }
-      acc.select(col(Sign) +: outCols.map(col): _*)
+      joinAlong(bfsFrom(i), cols, joinPairs)(frame)
+        .select(col(Sign) +: outCols.map(col): _*)
     }
 
     StepN(stepped.map(_.state),
       tables.indices.map(term).reduce(_ unionByName _))
+  }
+
+  // tables in BFS order over the equi-pair graph from `start`
+  // (`cols(i)`: table i's column names)
+  private def bfsOrder(start: Int, cols: Seq[Set[String]],
+                       joinPairs: Seq[(String, String)]): Seq[Int] = {
+    val edges: Seq[(Int, Int)] = joinPairs.map { case (a, b) =>
+      (cols.indexWhere(_.contains(a)), cols.indexWhere(_.contains(b)))
+    }
+    val order = scala.collection.mutable.ArrayBuffer(start)
+    val seen = scala.collection.mutable.Set(start)
+    var q = List(start)
+    while (q.nonEmpty) {
+      val h = q.head; q = q.tail
+      edges.foreach { case (x, y) =>
+        val n = if (x == h) y else if (y == h) x else -1
+        if (n >= 0 && !seen(n)) { seen += n; order += n; q = q :+ n }
+      }
+    }
+    order.toSeq
+  }
+
+  // join frame(j) for each table of a BFS `order`, each onto the
+  // tables already joined — every join has a condition by construction
+  private def joinAlong(order: Seq[Int], cols: Seq[Set[String]],
+                        joinPairs: Seq[(String, String)])(
+      frame: Int => DataFrame): DataFrame = {
+    var acc = frame(order.head)
+    var seen = cols(order.head)
+    order.tail.foreach { j =>
+      val conds = joinPairs.collect {
+        case (a, b) if seen.contains(a) && cols(j).contains(b) =>
+          col(a) === col(b)
+        case (a, b) if seen.contains(b) && cols(j).contains(a) =>
+          col(b) === col(a)
+      }
+      acc = acc.join(frame(j), conds.reduce(_ && _))
+      seen = seen ++ cols(j)
+    }
+    acc
   }
 
   /** One table's batch inputs to [[maintainAggTx]] (the transactional
@@ -242,116 +253,72 @@ object MaterializedJoin {
   def maintainAggTx(root: String, tables: Seq[BatchIn],
                     joinPairs: Seq[(String, String)], outCols: Seq[String],
                     groupCols: Seq[String], sums: Seq[(String, Column)],
-                    batchId: Long, writer: String): Boolean = {
-    import graft.sinks.{PkTableSink, TxLog}
+                    batchId: Long, writer: String): Boolean =
+    nWayRound(root, tables, batchId, writer) { r =>
+      // old states stay LAZY merge-on-read (r18): each consumer (the N
+      // state merges stepN checkpoints, the delta terms' old-state legs)
+      // folds the lake scan into a job that already exists instead of
+      // paying a dedicated N-checkpoint serial wave; the group delta
+      // below stays the round's ONE materialization of the N-way join
+      val s = stepN(pinnedStates(r, tables), joinPairs, outCols)
+      val delta = MaterializedAgg.groupDelta(s.delta, groupCols, sums)
+        .localCheckpoint(true)
+      s.states.foreach(graft.Ckpt.free)
+      r.freeAfterCommit(delta)
+      MaterializedAgg.sumView(r, delta, groupCols, sums.map(_._1), batchId)
+    }
+
+  /** One N-way [[MvRound]]: the N key-state batches (`state_<name>`)
+    * staged after the guard, `body` computing the view batch. */
+  private def nWayRound(root: String, tables: Seq[BatchIn], batchId: Long,
+                        writer: String)(
+      body: MvRound.Pinned => Map[String, graft.sinks.PkTableSink.TableBatch]): Boolean = {
     require(tables.map(_.name).distinct.size == tables.size,
       "table names must be distinct")
-    val spark = tables.head.batch.sparkSession
-    val sumNames = sums.map(_._1)
-    val wmKey = s"wm.$writer"
-    val applied = TxLog.current(spark, root)
-      .flatMap(_.meta.get(wmKey)).map(_.toLong)
-    if (applied.exists(batchId <= _)) return false
-
-    // state-batch delta writes staged at round open (see maintainTopKTx)
-    val staged = tables.map { t =>
-      PkTableSink.stageTableBatch(spark, root, s"state_${t.name}",
-        PkTableSink.TableBatch(
-          t.batch.withColumn("__state_del", coalesce(t.delFlag, lit(false))),
-          t.key, t.verCols, "__state_del"), writer)
-    }
-    // old states stay LAZY merge-on-read (r18): each consumer (the N
-    // state merges stepN checkpoints, the delta terms' old-state legs)
-    // folds the lake scan into a job that already exists instead of
-    // paying a dedicated N-checkpoint serial wave; the group delta
-    // below stays the round's ONE materialization of the N-way join
-    val ins = tables.map { t =>
-      val st = PkTableSink.readTxGroupAll(spark, root, s"state_${t.name}",
-        MaterializedAgg.emptyState(t.batch, t.delFlag), deletedCol = Del)
-      TableIn(st, t.batch, t.key, t.verCols.map(col), t.delFlag)
-    }
-    val s = stepN(ins, joinPairs, outCols)
-    val delta = MaterializedAgg.groupDelta(s.delta, groupCols, sums)
-      .localCheckpoint(true)
-    s.states.foreach(graft.Ckpt.free)
-    val curMv = PkTableSink.readTxGroup(spark, root, "mv", delta)
-    val touched = delta.select(groupCols.map(col): _*)
-    // one row per group by construction — skip write-side compaction
-    val newMv = MaterializedAgg.mergeMvAllowZero(
-        curMv.join(touched, groupCols, "left_semi"), delta, groupCols, sumNames)
-      .withColumn("batch_id", lit(batchId))
-      .withColumn("__mv_gone", col("n") <= 0)
-    PkTableSink.mergeTxGroup(spark, root,
-      Map("mv" -> PkTableSink.TableBatch(newMv, groupCols, Seq("batch_id"),
-        "__mv_gone", preCompacted = true)),
-      writer = writer,
-      extraMeta = Map(wmKey -> batchId.toString),
-      staged = staged)
-    true
+    MvRound.run(tables.head.batch.sparkSession, root, batchId, writer,
+      tables.map(t => s"state_${t.name}" ->
+        MvRound.stateBatch(t.batch, t.key, t.verCols, t.delFlag)))(body)
   }
 
-  /** Shared N-way transactional scaffolding for the non-self-
-    * maintainable view kinds (min/max, top-k): pin the N lake states
-    * (lazy merge-on-read — the manifest resolves here, the scan folds
-    * into each consumer's job), advance them through [[stepN]] (which
-    * checkpoints the N state merges), checkpoint the signed join
-    * delta ONCE (it feeds several maintenance legs — the N-way
-    * telescoped join must not re-run per leg), and declare the
-    * LIVE JOIN of the round's NEW states (the rescan recompute
-    * source — lazy; consumers restrict it with a group-keyed semi
-    * join that Catalyst pushes below the join, so it never evaluates
-    * corpus ⋈ corpus). `free()` releases every checkpoint once the
-    * round's commit has consumed them. */
-  private final case class NWayTx(ins: Seq[TableIn], states: Seq[DataFrame],
-                                  signedDelta: DataFrame, liveJoin: DataFrame) {
-    def free(): Unit =
-      (ins.map(_.state) ++ states :+ signedDelta).foreach(graft.Ckpt.free)
-  }
-
-  private def stepNTx(spark: org.apache.spark.sql.SparkSession, root: String,
-                      tables: Seq[BatchIn], joinPairs: Seq[(String, String)],
-                      outCols: Seq[String]): NWayTx = {
-    import graft.sinks.PkTableSink
-    // lake reads stay LAZY (r18): the manifest resolves driver-side
-    // here (pinning the dir lists), but the merge-on-read plan is
-    // left for each consumer's own job — the old-state legs of the
-    // signed delta and the N state merges each fold the scan into
-    // jobs that already exist, instead of paying a dedicated
-    // N-checkpoint serial wave per round. The recompute is one extra
-    // lake scan per old-state consumer, ∝ state and zone-map-pruned —
-    // cheaper at every scale than materializing the full state into
-    // block storage first.
-    val ins = tables.map { t =>
-      val st = PkTableSink.readTxGroupAll(spark, root, s"state_${t.name}",
-        MaterializedAgg.emptyState(t.batch, t.delFlag), deletedCol = Del)
-      TableIn(st, t.batch, t.key, t.verCols.map(col), t.delFlag)
+  /** The N tables' key-states (tombstones kept) at the round's pinned
+    * version, as [[stepN]] inputs. */
+  private def pinnedStates(r: MvRound.Pinned, tables: Seq[BatchIn]): Seq[TableIn] =
+    tables.map { t =>
+      TableIn(r.readAll(s"state_${t.name}",
+          MaterializedAgg.emptyState(t.batch, t.delFlag), deletedCol = Del),
+        t.batch, t.key, t.verCols.map(col), t.delFlag)
     }
-    val s = stepN(ins, joinPairs, outCols)
+
+  /** Shared N-way scaffolding for the non-self-maintainable view
+    * kinds (min/max, top-k): advance the N pinned lake states through
+    * [[stepN]] (which checkpoints the N state merges), checkpoint the
+    * signed join delta ONCE (it feeds several maintenance legs — the
+    * N-way telescoped join must not re-run per leg), and pair it with
+    * the LIVE JOIN of the round's NEW states as the step's state (the
+    * rescan recompute source — lazy; consumers restrict it with a
+    * group-keyed semi join that Catalyst pushes below the join, so it
+    * never evaluates corpus ⋈ corpus). The checkpoints are freed once
+    * the round's commit has consumed them.
+    *
+    * The lake reads stay LAZY (r18): the manifest is pinned
+    * driver-side, but the merge-on-read plan is left for each
+    * consumer's own job — the old-state legs of the signed delta and
+    * the N state merges each fold the scan into jobs that already
+    * exist, instead of paying a dedicated N-checkpoint serial wave per
+    * round. */
+  private def stepNTx(r: MvRound.Pinned, tables: Seq[BatchIn],
+                      joinPairs: Seq[(String, String)],
+                      outCols: Seq[String]): MaterializedAgg.Step = {
+    val s = stepN(pinnedStates(r, tables), joinPairs, outCols)
     val signedDelta = s.delta.localCheckpoint(true)
+    r.freeAfterCommit(s.states :+ signedDelta: _*)
     // live join of the NEW states: BFS fold over the same pair graph
-    val cols: Seq[Set[String]] = tables.map(_.batch.columns.toSet)
-    def liveState(i: Int): DataFrame = s.states(i).where(!col(Del)).drop(Del)
-    var acc = liveState(0)
-    var seen = cols(0)
-    var remaining = tables.indices.drop(1).toSet
-    while (remaining.nonEmpty) {
-      val next = remaining.find(j => joinPairs.exists { case (a, b) =>
-        (seen.contains(a) && cols(j).contains(b)) ||
-          (seen.contains(b) && cols(j).contains(a))
-      }).getOrElse(throw new IllegalArgumentException(
-        "the equi-pair graph must connect every table"))
-      val conds = joinPairs.collect {
-        case (a, b) if seen.contains(a) && cols(next).contains(b) =>
-          col(a) === col(b)
-        case (a, b) if seen.contains(b) && cols(next).contains(a) =>
-          col(b) === col(a)
-      }
-      acc = acc.join(liveState(next), conds.reduce(_ && _))
-      seen = seen ++ cols(next)
-      remaining -= next
-    }
-    val liveJoin = acc.select(outCols.map(col): _*).withColumn(Del, lit(false))
-    NWayTx(ins, s.states, signedDelta, liveJoin)
+    val cols = tables.map(_.batch.columns.toSet)
+    val liveJoin = joinAlong(bfsOrder(0, cols, joinPairs), cols, joinPairs)(i =>
+      s.states(i).where(!col(Del)).drop(Del))
+    MaterializedAgg.Step(
+      state = liveJoin.select(outCols.map(col): _*).withColumn(Del, lit(false)),
+      signedDelta = signedDelta)
   }
 
   /** [[maintainAggTx]] with MIN/MAX columns — the r15 verdict's #6
@@ -384,63 +351,11 @@ object MaterializedJoin {
                           groupCols: Seq[String], sums: Seq[(String, Column)],
                           exts: Seq[MaterializedAgg.Extremum],
                           batchId: Long, writer: String): Boolean = {
-    import graft.sinks.{PkTableSink, TxLog}
-    require(tables.map(_.name).distinct.size == tables.size,
-      "table names must be distinct")
     require(exts.nonEmpty, "maintainAggMinMaxTx: no extremum columns")
-    val spark = tables.head.batch.sparkSession
-    val sumNames = sums.map(_._1)
-    val wmKey = s"wm.$writer"
-    val applied = TxLog.current(spark, root)
-      .flatMap(_.meta.get(wmKey)).map(_.toLong)
-    if (applied.exists(batchId <= _)) return false
-
-    // state-batch delta writes staged at round open (see maintainTopKTx)
-    val staged = tables.map { t =>
-      PkTableSink.stageTableBatch(spark, root, s"state_${t.name}",
-        PkTableSink.TableBatch(
-          t.batch.withColumn("__state_del", coalesce(t.delFlag, lit(false))),
-          t.key, t.verCols, "__state_del"), writer)
+    nWayRound(root, tables, batchId, writer) { r =>
+      MaterializedAgg.minMaxView(r, stepNTx(r, tables, joinPairs, outCols),
+        groupCols, sums, exts, batchId)
     }
-    val w = stepNTx(spark, root, tables, joinPairs, outCols)
-    // group delta + current view are NOT checkpointed (r18): every
-    // consumer (count base, stored extrema, rescan trigger) sits
-    // inside the single mv-batch write job below — the two dedicated
-    // materialization waves bought one serial round-trip each per
-    // round, while the recompute is 2-3 small re-aggregations of the
-    // CHECKPOINTED signed delta and view-lake scans ∝ touched groups,
-    // parallel within that job
-    val delta = MaterializedAgg.groupDelta(w.signedDelta, groupCols, sums)
-    val st = MaterializedAgg.Step(state = w.liveJoin,
-      signedDelta = w.signedDelta)
-
-    val touched = delta.select(groupCols.map(col): _*)
-    // empty-lake schema fallback (never evaluated once a manifest exists)
-    val mvSchema = w.liveJoin.groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).as("n"),
-        sums.map { case (nm, c) => sum(c).as(nm) } ++
-          exts.map(e =>
-            (if (e.isMin) min(e.value) else max(e.value)).as(e.name)): _*)
-      .limit(0)
-    val curMv = PkTableSink.readTxGroup(spark, root, "mv", mvSchema)
-      .join(touched, groupCols, "left_semi")
-    // newMv is one row per group (mergeMvAllowZero aggregates by the
-    // group key; attachExtrema's joins are all per-group-unique right
-    // sides) — preCompacted skips the write-side compaction exchange
-    val newMv = MaterializedAgg.attachExtrema(
-        MaterializedAgg.mergeMvAllowZero(
-          curMv.drop(exts.map(_.name): _*), delta, groupCols, sumNames),
-        Some(curMv), st, groupCols, sums, exts)
-      .withColumn("batch_id", lit(batchId))
-      .withColumn("__mv_gone", col("n") <= 0)
-    PkTableSink.mergeTxGroup(spark, root,
-      Map("mv" -> PkTableSink.TableBatch(newMv, groupCols, Seq("batch_id"),
-        "__mv_gone", preCompacted = true)),
-      writer = writer,
-      extraMeta = Map(wmKey -> batchId.toString),
-      staged = staged)
-    w.free()
-    true
   }
 
   /** TOP-K-PER-GROUP on the JOIN-MV path — [[MaterializedTopK]]'s
@@ -472,65 +387,9 @@ object MaterializedJoin {
                      joinPairs: Seq[(String, String)], outCols: Seq[String],
                      groupCols: Seq[String], keyCols: Seq[String],
                      value: Column, k: Int,
-                     batchId: Long, writer: String): Boolean = {
-    import graft.sinks.{PkTableSink, TxLog}
-    require(tables.map(_.name).distinct.size == tables.size,
-      "table names must be distinct")
-    val spark = tables.head.batch.sparkSession
-    val wmKey = s"wm.$writer"
-    val applied = TxLog.current(spark, root)
-      .flatMap(_.meta.get(wmKey)).map(_.toLong)
-    if (applied.exists(batchId <= _)) return false
-
-    // state-batch delta writes STAGED at round open (r18): they
-    // depend only on the raw batches, so they run on Par threads
-    // while the state merges / signed-delta waves below occupy the
-    // caller — the commit then pays only the mv write's wall
-    val staged = tables.map { t =>
-      PkTableSink.stageTableBatch(spark, root, s"state_${t.name}",
-        PkTableSink.TableBatch(
-          t.batch.withColumn("__state_del", coalesce(t.delFlag, lit(false))),
-          t.key, t.verCols, "__state_del"), writer)
+                     batchId: Long, writer: String): Boolean =
+    nWayRound(root, tables, batchId, writer) { r =>
+      MaterializedTopK.topKView(r, stepNTx(r, tables, joinPairs, outCols),
+        groupCols, keyCols, value, k, batchId)
     }
-    val w = stepNTx(spark, root, tables, joinPairs, outCols)
-    val st = MaterializedAgg.Step(state = w.liveJoin,
-      signedDelta = w.signedDelta)
-    val gkCols = groupCols ++ keyCols
-    // semi-join right side — set semantics, no distinct exchange (r18)
-    val touched = w.signedDelta.select(groupCols.map(col): _*)
-    val mvSchema = w.liveJoin
-      .select(gkCols.map(col) :+ value.as(MaterializedTopK.Val): _*).limit(0)
-    // NOT checkpointed (r18): every consumer sits inside the single
-    // mv-batch write job below, so the dedicated materialization wave
-    // bought one serial round-trip per round; the recompute cost is
-    // 2-3 merge-on-read scans of the view lake WITHIN that job — work
-    // ∝ touched groups' k, parallel, never a new serial wave
-    val curMv = PkTableSink.readTxGroup(spark, root, "mv", mvSchema)
-      .select(gkCols.map(col) :+ col(MaterializedTopK.Val): _*)
-      .join(touched, groupCols, "left_semi")
-    val newRows = MaterializedTopK.mergeTopK(Some(curMv), st, groupCols,
-        keyCols, value, k)
-    // single-pass tombstone diff (r18): union + per-(group,key) argmax
-    // replaces the left-anti join AND the write-side compaction — a gk
-    // present in newRows keeps the NEW row (__mv_gone = false), a gk
-    // only in curMv surfaces as a tombstone of its stored value. Each
-    // side is unique per gk (topK emits ≤ one row per key; curMv is a
-    // PK read), so the argmax output is too — preCompacted holds.
-    val mvBatch = newRows.withColumn("__is_new", lit(true))
-      .unionByName(curMv.withColumn("__is_new", lit(false)))
-      .groupBy(gkCols.map(col): _*)
-      .agg(max_by(col(MaterializedTopK.Val), col("__is_new"))
-          .as(MaterializedTopK.Val),
-        max(col("__is_new")).as("__is_new"))
-      .select(gkCols.map(col) ++ Seq(col(MaterializedTopK.Val),
-        (!col("__is_new")).as("__mv_gone"), lit(batchId).as("batch_id")): _*)
-    PkTableSink.mergeTxGroup(spark, root,
-      Map("mv" -> PkTableSink.TableBatch(mvBatch, gkCols, Seq("batch_id"),
-        "__mv_gone", preCompacted = true)),
-      writer = writer,
-      extraMeta = Map(wmKey -> batchId.toString),
-      staged = staged)
-    w.free()
-    true
-  }
 }

@@ -3,6 +3,7 @@ package graft.cdc
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.sinks.PkTableSink
 
 /** Incremental TOP-K-PER-GROUP materialized view over a keyed CDC
   * changelog — the materialized top-N the reference keeps warm as a
@@ -95,67 +96,55 @@ object MaterializedTopK {
   }
 
   /** EXACTLY-ONCE transactional maintenance —
-    * [[MaterializedAgg.maintainTx]]'s discipline for the top-k view:
+    * [[MaterializedAgg.maintainTx]]'s round for the top-k view:
     * key-state, the (groupCols ++ keyCols)-keyed view table, and the
-    * per-writer batch watermark commit ATOMICALLY in one
-    * [[graft.sinks.PkTableSink.mergeTxGroup]] manifest. A replayed
-    * batch (id ≤ the committed watermark) is a driver-side no-op
-    * running zero Spark jobs. The view's batch writes only TOUCHED
-    * groups: the new top-k rows upsert, and previously-stored members
-    * that fell out (demoted by inserts, retracted, or migrated away)
-    * tombstone — commit I/O ∝ batch + touched groups' k, never the
-    * view. Read the live view with `PkTableSink.readTxGroup(spark,
+    * per-writer batch watermark commit ATOMICALLY in one manifest. A
+    * replayed batch (id ≤ the committed watermark) is a driver-side
+    * no-op running zero Spark jobs. The view's batch writes only
+    * TOUCHED groups: the new top-k rows upsert, and previously-stored
+    * members that fell out (demoted by inserts, retracted, or migrated
+    * away) tombstone — commit I/O ∝ batch + touched groups' k, never
+    * the view. Read the live view with `PkTableSink.readTxGroup(spark,
     * root, "mv", …)` and attach ranks with [[rank]]. */
   def maintainTx(root: String, batch: DataFrame, batchId: Long,
                  keyCols: Seq[String], versionCols: Seq[String],
                  deleteFlag: Column, groupCols: Seq[String], value: Column,
-                 k: Int, writer: String): Boolean = {
-    import graft.sinks.{PkTableSink, TxLog}
-    val spark = batch.sparkSession
-    val wmKey = s"wm.$writer"
-    val manifest = TxLog.current(spark, root)
-    val applied = manifest.flatMap(_.meta.get(wmKey)).map(_.toLong)
-    if (applied.exists(batchId <= _)) return false
+                 k: Int, writer: String): Boolean =
+    MvRound.run(batch.sparkSession, root, batchId, writer,
+        Seq("state" -> MvRound.stateBatch(batch, keyCols, versionCols, deleteFlag))) { r =>
+      topKView(r, MaterializedAgg.pinnedStep(r, batch, keyCols, versionCols, deleteFlag),
+        groupCols, keyCols, value, k, batchId)
+    }
 
-    // state-batch delta write staged now (r18): it depends only on
-    // the raw batch, so it runs on a Par thread while the state merge
-    // and delta waves below occupy the caller
-    val staged = Seq(PkTableSink.stageTableBatch(spark, root, "state",
-      PkTableSink.TableBatch(
-        batch.withColumn("__state_del", coalesce(deleteFlag, lit(false))),
-        keyCols, versionCols, "__state_del"), writer))
-    // state WITH tombstones (the A24 rule: a deleted key's version
-    // must stay visible so a straggler insert loses latestPerKey).
-    // The merge/rescan legs all read the successor state / signed
-    // delta — materialize each ONCE via the step hook + a signed-
-    // delta checkpoint (r18; the r17 maintain hook fix applied to the
-    // Tx variant, which re-ran the full state merge in every leg)
-    val state = PkTableSink.readTxGroupAll(spark, root, "state",
-      MaterializedAgg.emptyState(batch, deleteFlag), deletedCol = MaterializedAgg.Del)
-    val st0 = MaterializedAgg.step(state, batch, keyCols, versionCols.map(col),
-      deleteFlag, materialize = _.localCheckpoint(true))
-    val sd = st0.signedDelta.localCheckpoint(true)
-    val st = MaterializedAgg.Step(state = st0.state, signedDelta = sd)
-
-    // current view restricted to the TOUCHED groups, then the normal
-    // merge/rescan rule over exactly those groups. touched / curMv /
-    // the merge output stay LAZY (r18): every consumer sits inside
-    // the single mv-batch write job, so their dedicated checkpoint
-    // waves bought one serial round-trip each — the recompute is 2-3
-    // view-lake scans ∝ touched groups' k within that job
+  /** The top-k view's batch for one round: the pinned view restricted
+    * to the TOUCHED groups, the [[mergeTopK]] rule over exactly those
+    * groups, then a tombstone diff against the stored members.
+    * `st.state` is the live source a rescan reads. Shared with
+    * [[MaterializedJoin.maintainTopKTx]]. */
+  private[cdc] def topKView(r: MvRound.Pinned, st: MaterializedAgg.Step,
+                            groupCols: Seq[String], keyCols: Seq[String],
+                            value: Column, k: Int,
+                            batchId: Long): Map[String, PkTableSink.TableBatch] = {
     val gkCols = groupCols ++ keyCols
-    val touched = sd.select(groupCols.map(col): _*)
+    // semi-join right side — set semantics, no distinct exchange (r18)
+    val touched = st.signedDelta.select(groupCols.map(col): _*)
     val mvSchema = st.state.select(gkCols.map(col) :+ value.as(Val): _*).limit(0)
     // project the stored view down to (group, key, value) — stored
     // rows also carry their commit's batch_id, which must not leak
-    // into the merge unions
-    val curMv = PkTableSink.readTxGroup(spark, root, "mv", mvSchema)
+    // into the merge unions. touched / curMv / the merge output stay
+    // LAZY (r18): every consumer sits inside the single mv-batch write
+    // job, so the recompute is 2-3 view-lake scans ∝ touched groups' k
+    // within that job, never a new serial wave
+    val curMv = r.read("mv", mvSchema)
       .select(gkCols.map(col) :+ col(Val): _*)
       .join(touched, groupCols, "left_semi")
     val newRows = mergeTopK(Some(curMv), st, groupCols, keyCols, value, k)
-    // single-pass tombstone diff (r18): union + per-(group,key) argmax
-    // replaces the left-anti join and the write-side compaction — each
-    // side is unique per gk, so the argmax output is too
+    // single-pass tombstone diff: union + per-(group,key) argmax — a
+    // gk present in newRows keeps the NEW row (__mv_gone = false), a gk
+    // only in curMv surfaces as a tombstone of its stored value. Each
+    // side is unique per gk (topK emits ≤ one row per key; curMv is a
+    // PK read), so the argmax output is too — preCompacted holds and
+    // the write needs no compaction exchange.
     val mvBatch = newRows.withColumn("__is_new", lit(true))
       .unionByName(curMv.withColumn("__is_new", lit(false)))
       .groupBy(gkCols.map(col): _*)
@@ -163,14 +152,8 @@ object MaterializedTopK {
         max(col("__is_new")).as("__is_new"))
       .select(gkCols.map(col) ++ Seq(col(Val),
         (!col("__is_new")).as("__mv_gone"), lit(batchId).as("batch_id")): _*)
-    PkTableSink.mergeTxGroup(spark, root, Map(
-      "mv" -> PkTableSink.TableBatch(mvBatch, gkCols, Seq("batch_id"),
-        "__mv_gone", preCompacted = true)),
-      writer = writer,
-      extraMeta = Map(wmKey -> batchId.toString),
-      staged = staged)
-    Seq(st0.state, sd).foreach(graft.Ckpt.free)
-    true
+    Map("mv" -> PkTableSink.TableBatch(mvBatch, gkCols, Seq("batch_id"),
+      "__mv_gone", preCompacted = true))
   }
 
   /** Live ranked view of a [[maintainTx]] lake: (groupCols, rank,
@@ -196,7 +179,7 @@ object MaterializedTopK {
         StructType(gkCols.map(StructField(_, StringType)) :+
           StructField(Val, DoubleType)))
     }
-    rank(graft.sinks.PkTableSink.readTxGroup(spark, root, "mv", empty),
+    rank(PkTableSink.readTxGroup(spark, root, "mv", empty),
       groupCols, keyCols, valueName)
   }
 

@@ -6,104 +6,18 @@ import graft.cdc.PkTable
 
 /** Incremental primary-key table maintenance on a parquet lake path —
   * the continuously-refreshed StarRocks PK table, minus the database:
-  * each micro-batch of changes merges into the stored table
-  * (latest-wins by version, deletes drop keys) and atomically replaces
-  * it via a versioned directory + pointer file.
-  *
-  * Scale notes: the merge is `PkTable.snapshotMerge` — one shuffle of
-  * (current ∪ changes) hashed by key. For 100 TB tables the same code
-  * runs per-partition when the table is stored partitioned by a key
-  * range/date (merge only partitions containing changed keys — the
-  * caller filters); a transactional table format (Delta/Iceberg) slots
-  * in by replacing [[commit]] with its own MERGE, with identical
-  * semantics.
+  * each micro-batch of changes lands as a delta dir under a
+  * [[TxLog]]-committed manifest (latest-wins by version, deletes kept
+  * as stored tombstones) and readers merge base ∪ deltas on read.
+  * Single tables commit through [[mergeTx]], multi-table groups
+  * (incremental MVs, schema history, index maintenance) through
+  * [[mergeTxGroup]] — one storage protocol for every writer.
   */
 object PkTableSink {
-
-  // Commit pointers are versioned files (_CURRENT.v<N>): a commit is
-  // one atomic rename to a NEW name, and the current version resolves
-  // as max(N) — there is no delete-then-rename window in which a crash
-  // could leave the table pointing at nothing. Single-writer protocol;
-  // a multi-writer deployment swaps in a transactional table format.
-  private val PtrPrefix = "_CURRENT.v"
 
   private def fsOf(spark: SparkSession, root: String) =
     new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Current table contents (empty frame with `schemaOf` if absent). */
-  def read(spark: SparkSession, root: String, schemaOf: => DataFrame): DataFrame =
-    currentVersion(spark, root) match {
-      case Some(v) => graft.SchemaCache.read(spark, s"$root/v$v")
-      case None    => schemaOf.limit(0)
-    }
-
-  def currentVersion(spark: SparkSession, root: String): Option[Long] = {
-    val fs = fsOf(spark, root)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    if (!fs.exists(rootPath)) return None
-    val versions = fs.listStatus(rootPath).map(_.getPath.getName)
-      .filter(_.startsWith(PtrPrefix))
-      .flatMap(n => scala.util.Try(n.stripPrefix(PtrPrefix).toLong).toOption)
-    if (versions.nonEmpty) Some(versions.max)
-    else {
-      // legacy layout: a single _CURRENT file whose CONTENT is the
-      // version — still readable so pre-existing tables migrate on
-      // their next commit
-      val legacy = new org.apache.hadoop.fs.Path(root, "_CURRENT")
-      if (!fs.exists(legacy)) None
-      else {
-        val in = fs.open(legacy)
-        try Some(new String(in.readAllBytes(), "UTF-8").trim.toLong)
-        finally in.close()
-      }
-    }
-  }
-
-  /** Merge one batch of keyed changes into the table and commit a new
-    * version. Deletes are rows where deleteFlag evaluates true.
-    * Re-applying the same batch is idempotent (latest-wins by version).
-    */
-  def merge(spark: SparkSession, root: String, changes: DataFrame,
-            keyCols: Seq[String], versionCols: Seq[String], deleteFlag: String): Unit = {
-    // the stored table never carries the delete flag; align schemas for
-    // the union-based merge, then drop it again before writing
-    val current = read(spark, root, changes.drop(deleteFlag))
-      .withColumn(deleteFlag, lit(false))
-    val merged = PkTable.snapshotMerge(current, changes,
-      keyCols, versionCols.map(col), deleteFlag = col(deleteFlag))
-      .drop(deleteFlag)
-    val next = currentVersion(spark, root).getOrElse(-1L) + 1
-    merged.write.mode(SaveMode.Overwrite).parquet(s"$root/v$next")
-    commit(spark, root, next)
-  }
-
-  /** Lake maintenance: delete data version directories older than the
-    * `keepVersions` most recent (current always kept). Old versions
-    * exist for time travel / reader isolation; unbounded retention is
-    * unbounded storage. Never touches pointers (crash-safe by the same
-    * max(N)-resolution argument as [[commit]]); returns the versions
-    * deleted.
-    */
-  def vacuum(spark: SparkSession, root: String, keepVersions: Int = 2): Seq[Long] = {
-    require(keepVersions >= 1, "must keep at least the current version")
-    val fs = fsOf(spark, root)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    if (!fs.exists(rootPath)) return Nil
-    val dataVersions = fs.listStatus(rootPath)
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith("v"))
-      .flatMap(n => scala.util.Try(n.drop(1).toLong).toOption)
-      .sorted
-    if (dataVersions.isEmpty) Nil
-    else {
-      val current = currentVersion(spark, root)
-      val cutoff = dataVersions.takeRight(keepVersions).head
-      val victims = dataVersions.filter(v => v < cutoff && !current.contains(v))
-      victims.foreach(v => fs.delete(new org.apache.hadoop.fs.Path(root, s"v$v"), true))
-      victims.toSeq
-    }
-  }
 
   /** Transactional multi-writer merge on a [[TxLog]]-backed table,
     * MERGE-ON-READ: a commit writes ONLY its batch (compacted to one
@@ -834,23 +748,48 @@ object PkTableSink {
     * after their replay/watermark guard (a skipped batch must run
     * zero jobs). */
   def stageTableBatch(spark: SparkSession, groupRoot: String, table: String,
-                      b: TableBatch, writer: String): StagedBatch = {
+                      b: TableBatch, writer: String): StagedBatch =
+    stageAt(spark, groupRoot, table, b, writer,
+      TxLog.current(spark, groupRoot).map(_.version + 1).getOrElse(0L),
+      graft.Par.start[Unit])
+
+  /** [[stageTableBatch]] with the dir named for log version `next` — a
+    * caller holding a pinned manifest names its dirs without listing
+    * the log again — and the write run by `run`: [[graft.Par.start]]
+    * overlaps it with the caller, [[inline]] runs it now. Either way a
+    * write failure surfaces at the handle's join. */
+  private[graft] def stageAt(spark: SparkSession, groupRoot: String, table: String,
+                             b: TableBatch, writer: String, next: Long,
+                             run: (() => Unit) => (() => Unit)): StagedBatch = {
     require(!groupRoot.contains(","), s"groupRoot may not contain ',': $groupRoot")
     validGroupTableName(table)
-    val next0 = TxLog.current(spark, groupRoot).map(_.version + 1).getOrElse(0L)
     val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val dir = s"$groupRoot/$table/d$next0-$writer-$nonce"
+    val dir = s"$groupRoot/$table/d$next-$writer-$nonce"
     val chg = compactedWithTomb(b)
-    val join = graft.Par.start { () =>
+    StagedBatch(table, dir, groupMetaOf(table, b.keyCols, b.versionCols), run { () =>
       chg.write.mode(SaveMode.Overwrite).parquet(dir)
       ZoneMap.write(spark, dir, b.keyCols)
-      // pre-populate the schema cache on this worker thread: the first
+      // pre-populate the schema cache on the writing thread: the first
       // reader of the dir (next round's merge-on-read) then skips its
       // inference job entirely
       graft.SchemaCache.prime(spark, dir)
-    }
-    StagedBatch(table, dir, groupMetaOf(table, b.keyCols, b.versionCols), join)
+    })
   }
+
+  /** Run `f` now on the caller's thread; its failure is deferred to the
+    * returned join. */
+  private[graft] def inline(f: () => Unit): () => Unit = {
+    val r = scala.util.Try(f())
+    () => r.get
+  }
+
+  /** A commit refused by the watermark fence of [[mergeTxGroup]]: the
+    * claimed base already carries this writer's batch or a later one. */
+  final class StaleWatermark(msg: String) extends IllegalStateException(msg)
+
+  // per-writer batch watermarks in the manifest meta (MV rounds,
+  // schema history, incremental snapshot) — fenced monotone
+  private val WmPrefix = "wm."
 
   /** Multi-table ATOMIC commit, MERGE-ON-READ like [[mergeTx]]: each
     * touched table's batch (compacted to one row per key) lands as a
@@ -870,6 +809,12 @@ object PkTableSink {
     * whole commit fails. `staged` accepts writes the caller started
     * earlier via [[stageTableBatch]] (overlapping its own pre-commit
     * waves); their tables must be disjoint from `batches`.
+    *
+    * `wm.*` keys in `extraMeta` are FENCED inside the claim: an
+    * attempt whose base already holds an equal or higher value for the
+    * key fails with [[StaleWatermark]] (dirs deleted, nothing
+    * committed), so a zombie round and its restart cannot both commit
+    * one batch and a late retry cannot lower the watermark.
     * [[compactTxGroup]] folds a table's list back to one dir;
     * [[vacuumTxGroup]] reference-counts shared dirs.
     */
@@ -887,55 +832,56 @@ object PkTableSink {
     val allNames = batches.keys.toSeq ++ staged.map(_.table)
     require(allNames.distinct.size == allNames.size,
       s"mergeTxGroup: duplicate table across batches/staged: $allNames")
-    val next0 = TxLog.current(spark, groupRoot).map(_.version + 1).getOrElse(0L)
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val planned = batches.toSeq.map { case (t, b) =>
-      (t, b, compactedWithTomb(b), s"$groupRoot/$t/d$next0-$writer-$nonce")
-    }
-    val allDirs = planned.map(_._4) ++ staged.map(_.dir)
+    // only named when this call writes dirs itself: an all-staged
+    // commit lists the log once, for the claim
+    lazy val next0 = TxLog.current(spark, groupRoot).map(_.version + 1).getOrElse(0L)
+    // the per-table delta writes land in DISTINCT dirs and share no
+    // state — independent jobs, overlapped from driver threads
+    // (guide §2.6) so one multi-table commit pays one write's fixed
+    // job overhead, not one per table
+    val run: (() => Unit) => (() => Unit) =
+      if (batches.size < 2) inline else graft.Par.start[Unit]
+    val all = scala.collection.mutable.ArrayBuffer[StagedBatch](staged: _*)
     try {
-      // the per-table delta writes land in DISTINCT dirs and share no
-      // state — independent jobs, overlapped from driver threads
-      // (guide §2.6) so one multi-table commit pays one write's fixed
-      // job overhead, not one per table
-      graft.Par.map(planned) { case (t, b, chg, dir) =>
-        chg.write.mode(SaveMode.Overwrite).parquet(dir)
-        ZoneMap.write(spark, dir, b.keyCols)
-        // schema-cache prime off the serial path (see stageTableBatch)
-        graft.SchemaCache.prime(spark, dir)
-      }
-      // join the caller's staged writes; a failure surfaces here,
-      // before any claim, with every sibling quiesced (Par contract)
-      staged.foreach(_.join())
-      val newDirs = planned.map { case (t, b, _, dir) =>
-        (t, dir, groupMetaOf(t, b.keyCols, b.versionCols))
-      } ++ staged.map(s => (s.table, s.dir, s.meta))
+      batches.foreach { case (t, b) =>
+        all += stageAt(spark, groupRoot, t, b, writer, next0, run) }
+      // a write failure surfaces here, before any claim
+      all.foreach(_.join())
       TxLog.commitWith(spark, groupRoot, writer, maxAttempts, recoverTornAfterMs) { base =>
         val prevTables = base.map(_.tables).getOrElse(Map.empty)
         val prevMeta = base.map(_.meta).getOrElse(Map.empty)
-        newDirs.foreach { case (t, _, meta) =>
-          meta.foreach { case (k, v) => prevMeta.get(k).foreach(pv => require(pv == v,
-            s"mergeTxGroup: $t key/version columns differ from the table's ($pv)")) }
+        all.foreach { s =>
+          s.meta.foreach { case (k, v) => prevMeta.get(k).foreach(pv => require(pv == v,
+            s"mergeTxGroup: ${s.table} key/version columns differ from the table's ($pv)")) }
+        }
+        extraMeta.foreach { case (k, v) =>
+          if (k.startsWith(WmPrefix))
+            prevMeta.get(k).filter(pv => v.toLong <= pv.toLong).foreach(pv =>
+              throw new StaleWatermark(
+                s"mergeTxGroup: $k=$v is not above the committed $pv on $groupRoot"))
         }
         // caller meta (e.g. per-writer batch watermarks) rides in the
         // same manifest flip — readable driver-side with zero jobs;
         // table key/version meta wins on any key collision
         TxLog.Prepared(
-          tables = prevTables ++ newDirs.map { case (t, dir, _) =>
-            t -> (prevTables.get(t).toSeq.filter(_.nonEmpty) :+ dir).mkString(",")
+          tables = prevTables ++ all.map { s =>
+            s.table -> (prevTables.get(s.table).toSeq.filter(_.nonEmpty) :+ s.dir).mkString(",")
           },
-          meta = prevMeta ++ extraMeta ++ newDirs.flatMap(_._3),
+          meta = prevMeta ++ extraMeta ++ all.flatMap(_.meta),
           written = Nil)
       }
-    } catch {
-      case e: Throwable =>
-        val fs = new org.apache.hadoop.fs.Path(groupRoot)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        allDirs.foreach(d =>
-          try fs.delete(new org.apache.hadoop.fs.Path(d), true)
-          catch { case _: java.io.IOException => () })
-        throw e
-    }
+    } catch { case e: Throwable => discard(spark, groupRoot, all.toSeq); throw e }
+  }
+
+  /** Delete staged dirs that will never commit, after every write
+    * has finished (a still-running write would recreate its dir). */
+  private[graft] def discard(spark: SparkSession, groupRoot: String,
+                             staged: Seq[StagedBatch]): Unit = {
+    staged.foreach(s => scala.util.Try(s.join()))
+    val fs = fsOf(spark, groupRoot)
+    staged.foreach(s =>
+      try fs.delete(new org.apache.hadoop.fs.Path(s.dir), true)
+      catch { case _: java.io.IOException => () })
   }
 
   /** Fold one group table's base + deltas into a single fresh dir
@@ -952,9 +898,7 @@ object PkTableSink {
         s"compactTxGroup: no table '$table' under $groupRoot")).split(",").toSeq
       if (dirs.size < math.max(minDeltas, 2)) throw CompactSkip(m.version)
       val keyCols = m.meta.getOrElse(s"$MetaKeys.$table", "").split(",").toSeq
-      val vers = m.meta(s"$MetaVers.$table").split(",").toSeq
-      val merged = mergeDirs(spark, dirs,
-        Map(MetaKeys -> keyCols.mkString(","), MetaVers -> vers.mkString(",")))
+      val merged = mergeDirs(spark, dirs, groupTableMeta(m, table))
       val next = m.version + 1
       val nonce = java.util.UUID.randomUUID().toString.take(8)
       val dataDir = s"$groupRoot/$table/t$next-$writer-$nonce"
@@ -972,14 +916,7 @@ object PkTableSink {
     * merge-on-read over the table's dir list. */
   def readTxGroup(spark: SparkSession, groupRoot: String, table: String,
                   schemaOf: => DataFrame): DataFrame =
-    TxLog.current(spark, groupRoot).flatMap { m =>
-      m.tables.get(table).map { list =>
-        val dirs = list.split(",").toSeq.filter(_.nonEmpty)
-        dropTombstones(mergeDirs(spark, dirs, Map(
-          MetaKeys -> m.meta.getOrElse(s"$MetaKeys.$table", ""),
-          MetaVers -> m.meta.getOrElse(s"$MetaVers.$table", ""))))
-      }
-    }.getOrElse(schemaOf.limit(0))
+    readGroupAt(spark, TxLog.current(spark, groupRoot), table, schemaOf, None)
 
   /** Like [[readTxGroup]] but RETAINING stored tombstones, surfaced
     * as boolean `deletedCol` (false when the table predates deletes).
@@ -989,17 +926,30 @@ object PkTableSink {
     * diverging the view from the table. */
   def readTxGroupAll(spark: SparkSession, groupRoot: String, table: String,
                      schemaOf: => DataFrame, deletedCol: String): DataFrame =
-    TxLog.current(spark, groupRoot).flatMap { m =>
-      m.tables.get(table).map { list =>
-        val dirs = list.split(",").toSeq.filter(_.nonEmpty)
-        val merged = mergeDirs(spark, dirs, Map(
-          MetaKeys -> m.meta.getOrElse(s"$MetaKeys.$table", ""),
-          MetaVers -> m.meta.getOrElse(s"$MetaVers.$table", "")))
-        if (merged.columns.contains(Tombstone))
-          merged.withColumnRenamed(Tombstone, deletedCol)
-        else merged.withColumn(deletedCol, lit(false))
+    readGroupAt(spark, TxLog.current(spark, groupRoot), table, schemaOf, Some(deletedCol))
+
+  /** One group table as of manifest `m` ([[readTxGroup]] without
+    * `deletedCol`, [[readTxGroupAll]] with it); `schemaOf`'s empty
+    * frame when `m` is absent or lacks the table. */
+  private[graft] def readGroupAt(spark: SparkSession, m: Option[TxLog.Manifest],
+                                 table: String, schemaOf: => DataFrame,
+                                 deletedCol: Option[String]): DataFrame =
+    m.flatMap(mf => mf.tables.get(table).map { list =>
+      val merged = mergeDirs(spark, list.split(",").toSeq.filter(_.nonEmpty),
+        groupTableMeta(mf, table))
+      deletedCol match {
+        case None => dropTombstones(merged)
+        case Some(d) if merged.columns.contains(Tombstone) =>
+          merged.withColumnRenamed(Tombstone, d)
+        case Some(d) => merged.withColumn(d, lit(false))
       }
-    }.getOrElse(schemaOf.limit(0))
+    }).getOrElse(schemaOf.limit(0))
+
+  // one group table's key/version meta in the single-table shape
+  // mergeDirs reads
+  private def groupTableMeta(m: TxLog.Manifest, table: String): Map[String, String] =
+    Map(MetaKeys -> m.meta.getOrElse(s"$MetaKeys.$table", ""),
+      MetaVers -> m.meta.getOrElse(s"$MetaVers.$table", ""))
 
   /** Group retention: drop manifests older than the `keepVersions`
     * most recent, then delete only data dirs NO KEPT manifest still
@@ -1386,39 +1336,5 @@ object PkTableSink {
           .foreach(d => fs.delete(new org.apache.hadoop.fs.Path(d), true)))
     }
     victims
-  }
-
-  /** Single-writer commit: write the pointer content aside, then one
-    * atomic rename to `_CURRENT.v<version>`. A crash before the rename
-    * leaves the previous pointer current; a crash after leaves the new
-    * one current — no state points the table at nothing. Older
-    * pointers (and any legacy `_CURRENT`) are pruned best-effort after
-    * the rename; a crash mid-prune only leaves stale lower-numbered
-    * pointers, which max(N) resolution ignores.
-    *
-    * Optimistic concurrency: rename-to-existing fails on HDFS-like
-    * filesystems, so two writers racing to the same version number
-    * cannot clobber each other — the loser gets an exception, never a
-    * silent overwrite. (Package-visible for the protocol spec.)
-    */
-  private[graft] def commit(spark: SparkSession, root: String, version: Long): Unit = {
-    val fs = fsOf(spark, root)
-    val tmp = new org.apache.hadoop.fs.Path(root, s"_CURRENT.tmp$version")
-    val out = fs.create(tmp, true)
-    try out.write(version.toString.getBytes("UTF-8")) finally out.close()
-    val ptr = new org.apache.hadoop.fs.Path(root, s"$PtrPrefix$version")
-    if (!fs.rename(tmp, ptr))
-      throw new IllegalStateException(s"commit of v$version failed")
-    // best-effort cleanup — never load-bearing
-    try {
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      fs.listStatus(rootPath).map(_.getPath).foreach { p =>
-        val n = p.getName
-        val stale = n == "_CURRENT" || n.startsWith("_CURRENT.tmp") ||
-          (n.startsWith(PtrPrefix) &&
-            scala.util.Try(n.stripPrefix(PtrPrefix).toLong).toOption.exists(_ < version))
-        if (stale) fs.delete(p, false)
-      }
-    } catch { case _: java.io.IOException => () }
   }
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.cdc.MvRound
 import graft.sinks.{PkTableSink, TxLog}
 
 /** The transactional SKETCH-COLUMN materialized-view engine — the
@@ -20,10 +21,10 @@ import graft.sinks.{PkTableSink, TxLog}
   *  - the stored state for a touched key is re-folded with the batch
   *    partial through the caller's MERGE aggregates (associative and
   *    order-free by contract, so distinct batches replay in any order
-  *    and converge) and committed with [[PkTableSink.mergeTxGroup]] —
-  *    one manifest flips state and watermark atomically;
-  *  - exactly-once per `writer` via the `wm.<writer>` manifest meta
-  *    key: a replayed/stale `batchId` runs ZERO Spark jobs and
+  *    and converge) and committed by one [[MvRound]] — one manifest
+  *    flips state and watermark atomically;
+  *  - exactly-once per `writer` via the round's `wm.<writer>` manifest
+  *    meta key: a replayed/stale `batchId` runs ZERO Spark jobs and
   *    returns false (crash before commit → replay re-applies; after →
   *    replay skips; no partial state is reachable).
   *
@@ -36,7 +37,7 @@ import graft.sinks.{PkTableSink, TxLog}
   * Flavor safety: both flavors commit to the same fixed table name,
   * so a QskMv writer pointed at a KmvMv root would silently
   * interleave incompatible sketch encodings. The FIRST commit stamps
-  * `sketch.flavor` in the manifest meta; every later maintainTx
+  * `sketch.flavor` in the manifest meta; every later live round
   * fails fast on a mismatch instead of corrupting the view.
   */
 object SketchMv {
@@ -57,60 +58,51 @@ object SketchMv {
                  groupCols: Seq[String],
                  partialAggs: Seq[Column], mergeAggs: Seq[Column],
                  stateCols: Seq[String], writer: String,
-                 gone: String, flavor: String): Boolean = {
-    val spark = batch.sparkSession
-    val cur0 = TxLog.current(spark, root)
-    cur0.foreach { m =>
-      m.meta.get(FlavorKey) match {
-        case Some(committed) =>
-          require(committed == flavor,
-            s"sketch MV at $root holds flavor '$committed'; a '$flavor' " +
-              "writer would interleave incompatible sketch encodings")
-        case None =>
-          // a committed root with NO stamp is foreign (or pre-guard):
-          // letting the first post-upgrade writer stamp its own flavor
-          // would bless a wrong writer and interleave encodings — the
-          // exact corruption the guard exists to prevent. Fail and
-          // require an explicit migration; only an EMPTY root (no
-          // committed manifest at all) may be claimed by a first write.
-          throw new IllegalStateException(
-            s"sketch MV at $root has committed state but no " +
-              s"'$FlavorKey' stamp — foreign or pre-guard root; migrate " +
-              "explicitly (re-commit its state with the stamp) before " +
-              "writing")
+                 gone: String, flavor: String): Boolean =
+    MvRound.run(batch.sparkSession, root, batchId, writer, stateBatches = Nil,
+        meta = Map(FlavorKey -> flavor)) { r =>
+      r.manifest.foreach { m =>
+        m.meta.get(FlavorKey) match {
+          case Some(committed) =>
+            require(committed == flavor,
+              s"sketch MV at $root holds flavor '$committed'; a '$flavor' " +
+                "writer would interleave incompatible sketch encodings")
+          case None =>
+            // a committed root with NO stamp is foreign (or pre-guard):
+            // letting the first post-upgrade writer stamp its own flavor
+            // would bless a wrong writer and interleave encodings — the
+            // exact corruption the guard exists to prevent. Fail and
+            // require an explicit migration; only an EMPTY root (no
+            // committed manifest at all) may be claimed by a first write.
+            throw new IllegalStateException(
+              s"sketch MV at $root has committed state but no " +
+                s"'$FlavorKey' stamp — foreign or pre-guard root; migrate " +
+                "explicitly (re-commit its state with the stamp) before " +
+                "writing")
+        }
       }
-    }
-    if (cur0.flatMap(_.meta.get(wmKey(writer))).map(_.toLong)
-        .exists(batchId <= _))
-      return false
-    val gc = groupCols.map(col)
-    // the batch's partial aggregate stays LAZY (r18): its consumers
-    // (the touched-group broadcast and the merge union) both sit
-    // inside the single commit write job, so the old dedicated
-    // checkpoint wave bought one serial round-trip per batch — the
-    // recompute is one extra batch-sized aggregation within that job
-    val partial = batch.groupBy(gc: _*)
-      .agg(partialAggs.head, partialAggs.tail: _*)
-    // stored state for TOUCHED groups only — an untouched group's
-    // row carries forward in its delta dir, unread
-    val cur = PkTableSink.readTxGroup(spark, root, Mv,
-      partial.withColumn("batch_id", lit(batchId)))
-    val touched = partial.select(gc: _*)
-    val merged = cur.join(broadcast(touched), groupCols, "left_semi")
-      .select((gc ++ stateCols.map(col)): _*)
-      .unionByName(partial)
-      .groupBy(gc: _*)
-      .agg(mergeAggs.head, mergeAggs.tail: _*)
-      .withColumn("batch_id", lit(batchId))
-      .withColumn(gone, lit(false))
-    PkTableSink.mergeTxGroup(spark, root,
+      val gc = groupCols.map(col)
+      // the batch's partial aggregate stays LAZY (r18): its consumers
+      // (the touched-group broadcast and the merge union) both sit
+      // inside the single commit write job, so a dedicated checkpoint
+      // wave would buy one serial round-trip per batch — the recompute
+      // is one extra batch-sized aggregation within that job
+      val partial = batch.groupBy(gc: _*)
+        .agg(partialAggs.head, partialAggs.tail: _*)
+      // stored state for TOUCHED groups only — an untouched group's
+      // row carries forward in its delta dir, unread
+      val cur = r.read(Mv, partial.withColumn("batch_id", lit(batchId)))
+      val touched = partial.select(gc: _*)
+      val merged = cur.join(broadcast(touched), groupCols, "left_semi")
+        .select((gc ++ stateCols.map(col)): _*)
+        .unionByName(partial)
+        .groupBy(gc: _*)
+        .agg(mergeAggs.head, mergeAggs.tail: _*)
+        .withColumn("batch_id", lit(batchId))
+        .withColumn(gone, lit(false))
       Map(Mv -> PkTableSink.TableBatch(merged, groupCols,
-        Seq("batch_id"), gone, preCompacted = true)), // one row per group
-      writer = writer,
-      extraMeta = Map(wmKey(writer) -> batchId.toString,
-        FlavorKey -> flavor))
-    true
-  }
+        Seq("batch_id"), gone, preCompacted = true)) // one row per group
+    }
 
   /** The committed view: (groupCols…, stateCols…, batch_id). */
   def readMv(spark: SparkSession, root: String,

@@ -58,13 +58,14 @@ class PipelineSpec extends SparkSpec {
     val root = TestTmp.dir("pipe_pk").toString + "/t"
     val input = MemoryStream[String]
     input.addData(env(1, 1, "a", "c", 10), env(2, 1, "b", "c", 10))
-    val q = CdcPipeline.toPkTableSink(
-      CdcPipeline.stream(input.toDF().withColumnRenamed("value", "json"), "json", cfg), root)
+    val q = CdcPipeline.toTxPkTableSink(
+      CdcPipeline.stream(input.toDF().withColumnRenamed("value", "json"), "json", cfg),
+      root, writer = "pipe")
       .option("checkpointLocation", root + "_ckpt").start()
     q.processAllAvailable()
     input.addData(env(1, 2, "a2", "u", 20), env(2, 2, "b", "d", 30)) // update 1, delete 2
     q.processAllAvailable(); q.stop()
-    val t = graft.sinks.PkTableSink.read(spark, root,
+    val t = graft.sinks.PkTableSink.readTx(spark, root,
       spark.emptyDataFrame).orderBy("key").collect()
     assert(t.length == 1)
     assert(t(0).getAs[Long]("key") == 1L && t(0).getAs[String]("payload").contains("a2"))

@@ -33,92 +33,93 @@ class SinkSpec extends SparkSpec {
   }
 
   test("incremental PK-table sink: micro-batch merges accumulate correctly") {
-    import graft.sinks.PkTableSink
+    import graft.sinks.{PkTableSink, TxLog}
     val root = TestTmp.dir("pkinc").toString + "/t"
     def batch(rows: (Long, Long, String, Boolean)*) =
       rows.toDF("id", "ver", "v", "del")
-    // batch 1: two inserts
-    PkTableSink.merge(spark, root, batch((1L, 1L, "a", false), (2L, 1L, "b", false)),
-      Seq("id"), Seq("ver"), "del")
-    // batch 2: update 1, delete 2, insert 3
-    PkTableSink.merge(spark, root, batch((1L, 2L, "a2", false), (2L, 2L, "x", true), (3L, 1L, "c", false)),
-      Seq("id"), Seq("ver"), "del")
-    val t = PkTableSink.read(spark, root, batch().drop("del"))
+    def merge(df: org.apache.spark.sql.DataFrame) =
+      PkTableSink.mergeTx(spark, root, df, Seq("id"), Seq("ver"), "del", writer = "w1")
+    def live() = PkTableSink.readTx(spark, root, batch().drop("del"))
       .orderBy("id").select("id", "v").as[(Long, String)].collect().toSeq
+    // batch 1: two inserts
+    merge(batch((1L, 1L, "a", false), (2L, 1L, "b", false)))
+    // batch 2: update 1, delete 2, insert 3
+    merge(batch((1L, 2L, "a2", false), (2L, 2L, "x", true), (3L, 1L, "c", false)))
+    val t = live()
     assert(t == Seq((1L, "a2"), (3L, "c")))
     // replaying batch 2 is idempotent
-    PkTableSink.merge(spark, root, batch((1L, 2L, "a2", false), (2L, 2L, "x", true), (3L, 1L, "c", false)),
-      Seq("id"), Seq("ver"), "del")
-    val t2 = PkTableSink.read(spark, root, batch().drop("del"))
-      .orderBy("id").select("id", "v").as[(Long, String)].collect().toSeq
-    assert(t2 == t)
-    assert(PkTableSink.currentVersion(spark, root).contains(2L))
+    merge(batch((1L, 2L, "a2", false), (2L, 2L, "x", true), (3L, 1L, "c", false)))
+    assert(live() == t)
+    assert(TxLog.current(spark, root).map(_.version).contains(2L))
   }
 
   test("PK-table sink vacuum keeps recent versions, never the current") {
-    import graft.sinks.PkTableSink
+    import graft.sinks.{PkTableSink, TxLog}
     val root = TestTmp.dir("pkvac").toString + "/t"
     def batch(rows: (Long, Long, String, Boolean)*) =
       rows.toDF("id", "ver", "v", "del")
     (1 to 4).foreach { i =>
-      PkTableSink.merge(spark, root, batch((i.toLong, i.toLong, s"v$i", false)),
-        Seq("id"), Seq("ver"), "del")
+      PkTableSink.mergeTx(spark, root, batch((i.toLong, i.toLong, s"v$i", false)),
+        Seq("id"), Seq("ver"), "del", writer = "w1")
     }
     // versions 0..3 exist, current = 3; keep 2 → delete 0 and 1
-    val deleted = PkTableSink.vacuum(spark, root, keepVersions = 2)
+    val deleted = PkTableSink.vacuumTx(spark, root, keepVersions = 2)
     assert(deleted == Seq(0L, 1L))
-    assert(PkTableSink.currentVersion(spark, root).contains(3L))
-    val t = PkTableSink.read(spark, root, batch().drop("del"))
+    assert(TxLog.current(spark, root).map(_.version).contains(3L))
+    val t = PkTableSink.readTx(spark, root, batch().drop("del"))
     assert(t.count() == 4) // table content untouched
     // idempotent
-    assert(PkTableSink.vacuum(spark, root, keepVersions = 2).isEmpty)
+    assert(PkTableSink.vacuumTx(spark, root, keepVersions = 2).isEmpty)
   }
 
   test("PK-table sink commit refuses to overwrite a concurrent writer's pointer") {
-    import graft.sinks.PkTableSink
-    import java.nio.file.{Files, Paths}
+    import graft.sinks.{PkTableSink, TxLog}
     val root = TestTmp.dir("pkconc").toString + "/t"
     def batch(rows: (Long, Long, String, Boolean)*) =
       rows.toDF("id", "ver", "v", "del")
-    PkTableSink.merge(spark, root, batch((1L, 1L, "a", false)), Seq("id"), Seq("ver"), "del")
-    // another writer won the race to v1: our rename target exists, so
-    // the commit must FAIL (rename-to-existing), never clobber
-    Files.writeString(Paths.get(root, "_CURRENT.v1"), "1")
-    intercept[IllegalStateException] {
-      PkTableSink.commit(spark, root, 1L)
-    }
-    assert(PkTableSink.currentVersion(spark, root).contains(1L))
+    PkTableSink.mergeTx(spark, root, batch((1L, 1L, "a", false)),
+      Seq("id"), Seq("ver"), "del", writer = "w1")
+    // our writer plans v1 on top of v0 …
+    val ours = TxLog.current(spark, root).get.copy(version = 1L, baseVersion = 0L)
+    // … but another writer wins the race to v1 first
+    PkTableSink.mergeTx(spark, root, batch((2L, 1L, "b", false)),
+      Seq("id"), Seq("ver"), "del", writer = "rival")
+    // the claim must FAIL (create-exclusive), never clobber the winner
+    assert(!TxLog.tryCommit(spark, root, ours))
+    assert(TxLog.current(spark, root).exists(m => m.version == 1L && m.writer == "rival"))
+    val t = PkTableSink.readTx(spark, root, batch().drop("del"))
+      .orderBy("id").select("id", "v").as[(Long, String)].collect().toSeq
+    assert(t == Seq((1L, "a"), (2L, "b")))
   }
 
   test("PK-table sink commit survives crash debris and legacy pointers") {
-    import graft.sinks.PkTableSink
+    import graft.sinks.{PkTableSink, TxLog}
     import java.nio.file.{Files, Paths}
     val root = TestTmp.dir("pkcrash").toString + "/t"
     def batch(rows: (Long, Long, String, Boolean)*) =
       rows.toDF("id", "ver", "v", "del")
-    PkTableSink.merge(spark, root, batch((1L, 1L, "a", false)), Seq("id"), Seq("ver"), "del")
-    PkTableSink.merge(spark, root, batch((2L, 1L, "b", false)), Seq("id"), Seq("ver"), "del")
-    // crash debris: an orphaned tmp pointer and a stale lower-version
-    // pointer must not affect resolution (max version wins)
-    Files.writeString(Paths.get(root, "_CURRENT.tmp7"), "7")
-    Files.writeString(Paths.get(root, "_CURRENT.v0"), "0")
-    assert(PkTableSink.currentVersion(spark, root).contains(1L))
-    val t = PkTableSink.read(spark, root, batch().drop("del"))
+    def merge(df: org.apache.spark.sql.DataFrame) =
+      PkTableSink.mergeTx(spark, root, df, Seq("id"), Seq("ver"), "del", writer = "w1")
+    def live() = PkTableSink.readTx(spark, root, batch().drop("del"))
       .orderBy("id").select("id", "v").as[(Long, String)].collect().toSeq
-    assert(t == Seq((1L, "a"), (2L, "b")))
-    // legacy single-_CURRENT layout still reads, and the next merge
-    // migrates it to a versioned pointer
-    val legacyRoot = TestTmp.dir("pklegacy").toString + "/t"
-    PkTableSink.merge(spark, legacyRoot, batch((5L, 1L, "e", false)), Seq("id"), Seq("ver"), "del")
-    val ptr = Paths.get(legacyRoot).toFile.listFiles().map(_.getName)
-      .filter(_.startsWith("_CURRENT")).toSeq
-    Files.writeString(Paths.get(legacyRoot, "_CURRENT"), "0")
-    ptr.filter(_.startsWith("_CURRENT.v")).foreach(n => Files.delete(Paths.get(legacyRoot, n)))
-    assert(PkTableSink.currentVersion(spark, legacyRoot).contains(0L))
-    PkTableSink.merge(spark, legacyRoot, batch((6L, 1L, "f", false)), Seq("id"), Seq("ver"), "del")
-    assert(PkTableSink.currentVersion(spark, legacyRoot).contains(1L))
-    val names = Paths.get(legacyRoot).toFile.listFiles().map(_.getName).toSet
-    assert(names.contains("_CURRENT.v1") && !names.contains("_CURRENT"))
+    merge(batch((1L, 1L, "a", false)))
+    merge(batch((2L, 1L, "b", false)))
+    // crash debris: a torn higher-version claim and an orphaned temp
+    // file in the log must not affect resolution
+    Files.writeString(Paths.get(root, "_log", "7.manifest"),
+      s"data=$root/bogus\nbase=1\nwriter=crashed\n")
+    Files.writeString(Paths.get(root, "_log", "tmp7.manifest"), "ok=true\n")
+    // pointer files of the pre-log layout are inert: the log alone
+    // decides the current version
+    Files.writeString(Paths.get(root, "_CURRENT"), "0")
+    Files.writeString(Paths.get(root, "_CURRENT.v9"), "9")
+    assert(TxLog.current(spark, root).map(_.version).contains(1L))
+    assert(TxLog.versions(spark, root) == Seq(0L, 1L))
+    assert(live() == Seq((1L, "a"), (2L, "b")))
+    // the next merge commits past the debris
+    assert(merge(batch((3L, 1L, "c", false))) == 2L)
+    assert(TxLog.current(spark, root).map(_.version).contains(2L))
+    assert(live() == Seq((1L, "a"), (2L, "b"), (3L, "c")))
   }
 
   test("D2: JSON-lines and CSV sources read with explicit schemas") {

@@ -27,9 +27,15 @@ class TxCommitSpec extends SparkSpec {
       batch((1L, 2L, "a2", false), (2L, 2L, "x", true), (3L, 1L, "c", false)),
       Seq("id"), Seq("ver"), "del", writer = "w1")
     assert(v0 == 0L && v1 == 1L)
-    val t = PkTableSink.readTx(spark, root, batch().drop("del"))
+    def live() = PkTableSink.readTx(spark, root, batch().drop("del"))
       .orderBy("id").select("id", "v").as[(Long, String)].collect().toSeq
+    val t = live()
     assert(t == Seq((1L, "a2"), (3L, "c")))
+    // replaying the second batch is idempotent (latest-wins by version)
+    PkTableSink.mergeTx(spark, root,
+      batch((1L, 2L, "a2", false), (2L, 2L, "x", true), (3L, 1L, "c", false)),
+      Seq("id"), Seq("ver"), "del", writer = "w1")
+    assert(live() == t)
     // time travel: version 0 still reads the pre-update snapshot
     val t0 = PkTableSink.readTxAt(spark, root, 0L)
       .orderBy("id").select("id", "v").as[(Long, String)].collect().toSeq
@@ -365,15 +371,17 @@ class TxCommitSpec extends SparkSpec {
       batch((2L, 2L, "b2", false), (4L, 1L, "d1", false)),
       batch((2L, 3L, "b3", false), (3L, 2L, "c2", true)),   // b → b3; c deleted
       batch((5L, 1L, "e1", false)))
-    val cowRoot = tmpRoot("txcow")
     val morRoot = tmpRoot("txmor2")
-    batches.foreach { b =>
-      PkTableSink.merge(spark, cowRoot, b, Seq("id"), Seq("ver"), "del")
-      PkTableSink.mergeTx(spark, morRoot, b, Seq("id"), Seq("ver"), "del", writer = "w1")
-    }
+    batches.foreach(b =>
+      PkTableSink.mergeTx(spark, morRoot, b, Seq("id"), Seq("ver"), "del", writer = "w1"))
     def dump(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("id").select("id", "ver", "v").as[(Long, Long, String)].collect().toSeq
-    val cow = dump(PkTableSink.read(spark, cowRoot, batches.head.drop("del")))
+    // reference: the copy-on-write merge — the whole snapshot re-merged
+    // with each batch in turn
+    val cow = dump(batches.foldLeft(batches.head.limit(0).drop("del")) { (cur, b) =>
+      graft.cdc.PkTable.snapshotMerge(cur.withColumn("del", lit(false)), b,
+        Seq("id"), Seq(col("ver")), deleteFlag = col("del")).drop("del")
+    })
     val mor = dump(PkTableSink.readTx(spark, morRoot, batches.head.drop("del")))
     assert(mor == cow)
     // and compaction preserves the view exactly
