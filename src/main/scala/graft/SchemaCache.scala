@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
-/** Schema-inference cache for parquet dirs that are IMMUTABLE for the
-  * life of the JVM (guide §1: measure the overhead, then remove it).
+/** Schema cache for parquet dirs that are IMMUTABLE for the life of
+  * the JVM (guide §1: measure the overhead, then remove it).
   *
   * A bare `spark.read.parquet(dir)` EAGERLY infers the schema, and the
   * footer read runs as a one-task Spark job (~50-100 ms of serial
@@ -14,21 +14,24 @@ import org.apache.spark.sql.types.StructType
   * per round, and every query re-opens its corpus tables, so the suite
   * paid hundreds of these jobs per run.
   *
-  * Caching is sound ONLY because the cached paths never change
-  * content:
-  *  - corpus tables (`Tables.load`) are read-only inputs;
-  *  - TxLog-managed dirs (`t/d/p<version>-<writer>-<nonce>`) are
-  *    written once and never appended — a new commit writes a NEW
-  *    nonce-named dir (vacuum deletes dirs, but a deleted dir is never
-  *    read again, and the nonce makes name reuse impossible).
-  * Callers whose paths can be REWRITTEN in place (gate-level flat
-  * tables, ResultCache regeneration) must keep using bare
-  * `spark.read.parquet`. [[invalidatePrefix]] covers the one rewrite
-  * the bench does (the 10× scaling replica).
+  * Two ways in:
+  *  - [[writeNew]] — the writer of a fresh dir records the schema it
+  *    wrote. The write refuses an existing dir, so the record is the
+  *    dir's schema by construction; this covers every TxLog dir the
+  *    lake and the MV rounds write (`t/d/p<version>-<writer>-<nonce>`,
+  *    written once, never appended, the nonce making name reuse
+  *    impossible).
+  *  - [[read]]/[[schemaOf]] on a miss infer once and cache. Sound only
+  *    for dirs that never change content: corpus tables
+  *    (`Tables.load`) and TxLog dirs written by an earlier JVM.
+  *    Callers whose paths can be REWRITTEN in place (gate-level flat
+  *    tables, ResultCache regeneration, MV publish generations, whose
+  *    numbers a failed publish reuses) must keep using bare
+  *    `spark.read.parquet`. [[invalidatePrefix]] covers the one
+  *    rewrite the bench does (the 10× scaling replica).
   *
-  * The cache stores what inference itself returned (populated on first
-  * read, or off the critical path via [[prime]] on writer threads), so
-  * a cached read is plan-identical to the uncached one.
+  * A cached read is plan-identical to the inferred one: a parquet read
+  * returns its file schema made nullable, which is what is recorded.
   */
 object SchemaCache {
 
@@ -36,23 +39,44 @@ object SchemaCache {
   // far above any real run's dir count — a leak guard, not a tuning knob
   private val MaxEntries = 100000
 
-  /** `spark.read.parquet(dir)`, schema-cached. First call per dir
-    * infers (and pays the footer job); later calls are job-free. */
+  private def put(dir: String, schema: StructType): Unit = {
+    if (cache.size >= MaxEntries) cache.clear()
+    cache.put(dir, schema)
+  }
+
+  /** `spark.read.parquet(dir)`, schema-cached: job-free once the
+    * schema is recorded or inferred. */
   def read(spark: SparkSession, dir: String): DataFrame = {
     val hit = cache.get(dir)
     if (hit != null) spark.read.schema(hit).parquet(dir)
-    else {
-      val df = spark.read.parquet(dir)
-      if (cache.size >= MaxEntries) cache.clear()
-      cache.put(dir, df.schema)
-      df
-    }
+    else { val df = spark.read.parquet(dir); put(dir, df.schema); df }
   }
 
-  /** Populate the cache for a just-written dir — called from the
-    * writer's own (Par) thread so the one inference job never lands on
-    * a serial path. */
-  def prime(spark: SparkSession, dir: String): Unit = { read(spark, dir); () }
+  /** The schema of `dir`: recorded by its writer, else inferred once
+    * (one footer job) and cached. */
+  def schemaOf(spark: SparkSession, dir: String): StructType = {
+    val hit = cache.get(dir)
+    if (hit != null) hit else read(spark, dir).schema
+  }
+
+  /** Write `df` as parquet into `dir`, which must not exist yet, with
+    * the given writer `options`, and record the schema a read of the
+    * dir returns — later reads skip inference entirely. */
+  private[graft] def writeNew(df: DataFrame, dir: String,
+                              options: Map[String, String] = Map.empty): Unit = {
+    df.write.mode(SaveMode.ErrorIfExists).options(options).parquet(dir)
+    put(dir, nullable(df.schema).asInstanceOf[StructType])
+  }
+
+  // Spark's `asNullable`, which is private to Spark
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
+  }
 
   /** Drop entries under `prefix` — for the one path the bench rewrites
     * in place (the scaling replica dir). */

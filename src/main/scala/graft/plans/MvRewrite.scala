@@ -127,17 +127,23 @@ object MvRewrite {
   /** Register an MV for `sourcePath` — ADDS to the source's MV set
     * (re-registering the same mvPath replaces that entry: the
     * refresh-then-re-pin cycle). Resolves and PINS the MV table's
-    * current snapshot, and records its row count — register-time work
-    * on a result-sized table — as the candidate-selection cost. */
+    * current snapshot, and records its row count — summed from the
+    * parquet footers — as the candidate-selection cost. */
   def register(spark: SparkSession, sourcePath: String, mvPath: String,
-               groupCols: Seq[String], aggs: Map[String, AggKind]): Unit = {
+               groupCols: Seq[String], aggs: Map[String, AggKind]): Unit =
+    registerRead(spark, sourcePath, spark.read.parquet(mvPath), mvPath, groupCols, aggs)
+
+  // [[register]] over `mvDf`, a read of `mvPath` — a publish passes
+  // the schema it wrote, so no inference job runs
+  private def registerRead(spark: SparkSession, sourcePath: String,
+                           mvDf: org.apache.spark.sql.DataFrame, mvPath: String,
+                           groupCols: Seq[String], aggs: Map[String, AggKind]): Unit = {
     require(groupCols.nonEmpty, "MV must group by at least one column")
-    val mvDf = spark.read.parquet(mvPath)
     val plan = mvDf.queryExecution.analyzed
     val mvCols = plan.output.map(_.name).toSet
     (groupCols ++ aggs.keys).foreach(c =>
       require(mvCols.contains(c), s"MV table $mvPath lacks column $c"))
-    val rows = mvDf.count()
+    val rows = rowsOf(spark, mvDf, mvPath)
     val src = normalize(sourcePath)
     val entry = MvDef(src, mvPath, groupCols, aggs, plan, rows)
     registry.updateWith(src) {
@@ -145,6 +151,12 @@ object MvRewrite {
       case None    => Some(Map(mvPath -> entry))
     }
   }
+
+  /** The MV's row count from its footers (exact, zero jobs); a count
+    * job past [[graft.sinks.Footers.MaxFiles]] files. */
+  private def rowsOf(spark: SparkSession, mvDf: org.apache.spark.sql.DataFrame,
+                     mvPath: String): Long =
+    graft.sinks.Footers.rowCount(spark, mvPath).getOrElse(mvDf.count())
 
   // ---- versioned snapshot publish (shared by the single-table sketch
   // path and the join path) ------------------------------------------
@@ -189,14 +201,17 @@ object MvRewrite {
     *
     * Returns the new generation's data dir. `registeredGens` must be
     * the generation numbers registered for this base BEFORE the swap;
-    * `registerFn` installs the new dir; `deregisterOld` removes the
-    * superseded registrations. */
+    * `registerFn` installs the new dir, given a read of it under the
+    * schema just written (no inference, and the row count comes from
+    * the footers: the swap runs no job); `deregisterOld` removes the
+    * superseded registrations. The generation's schema is not put in
+    * [[graft.SchemaCache]]: a failed publish's number is reused. */
   private def publishVersioned(spark: SparkSession, snapshotDir: String,
                                mvFrame: org.apache.spark.sql.DataFrame,
                                mvRoot: Option[String],
                                registeredGens: Set[Long],
                                registrationJson: String => String,
-                               registerFn: String => Unit,
+                               registerFn: (String, org.apache.spark.sql.DataFrame) => Unit,
                                deregisterOld: () => Unit): String = {
     val base = new org.apache.hadoop.fs.Path(snapshotDir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -239,7 +254,7 @@ object MvRewrite {
     // swap: register the new generation, then drop the previous
     // generation's registration (new queries plan against v<gen>;
     // already-planned queries keep reading their pinned listing)
-    registerFn(dataDir)
+    registerFn(dataDir, spark.read.schema(mvFrame.schema).parquet(dataDir))
     deregisterOld()
     val keep = prevServing + gen
     existing.filterNot(keep).foreach { n =>
@@ -302,8 +317,8 @@ object MvRewrite {
       registeredGens = prevPaths.flatMap(p => genOf(normalize(p))).toSet,
       registrationJson = dataDir => registrationJsonTable(
         sourcePath, dataDir, groupCols, aggs, mvRoot),
-      registerFn = dataDir =>
-        register(spark, sourcePath, dataDir, groupCols, aggs),
+      registerFn = (dataDir, mvDf) =>
+        registerRead(spark, sourcePath, mvDf, dataDir, groupCols, aggs),
       deregisterOld = () =>
         prevPaths.foreach(old => deregister(sourcePath, old)))
     ()
@@ -331,8 +346,8 @@ object MvRewrite {
       registeredGens = prevPaths.flatMap(p => genOf(normalize(p))).toSet,
       registrationJson = dataDir => registrationJsonJoin(
         paths, joinPairs, dataDir, groupCols, aggs, mvRoot),
-      registerFn = dataDir =>
-        registerJoin(spark, paths, joinPairs, dataDir, groupCols, aggs),
+      registerFn = (dataDir, mvDf) =>
+        registerJoinRead(spark, paths, joinPairs, mvDf, dataDir, groupCols, aggs),
       deregisterOld = () =>
         prevPaths.foreach(old => deregisterJoinMv(paths, old)))
     ()
@@ -397,7 +412,14 @@ object MvRewrite {
     * records its row count the same way. */
   def registerJoin(spark: SparkSession, paths: Seq[String],
                    joinPairs: Seq[(String, String)], mvPath: String,
-                   groupCols: Seq[String], aggs: Map[String, AggKind]): Unit = {
+                   groupCols: Seq[String], aggs: Map[String, AggKind]): Unit =
+    registerJoinRead(spark, paths, joinPairs, spark.read.parquet(mvPath), mvPath,
+      groupCols, aggs)
+
+  private def registerJoinRead(spark: SparkSession, paths: Seq[String],
+                               joinPairs: Seq[(String, String)],
+                               mvDf: org.apache.spark.sql.DataFrame, mvPath: String,
+                               groupCols: Seq[String], aggs: Map[String, AggKind]): Unit = {
     require(paths.size >= 2, "join MV needs at least two tables")
     require(joinPairs.size >= paths.size - 1,
       "join MV needs at least N-1 equi-key pairs to connect N tables")
@@ -406,12 +428,11 @@ object MvRewrite {
       "join MVs accept classic aggregate kinds only")
     val key = paths.map(normalize).toSet
     require(key.size == paths.size, "join MV table paths must be distinct")
-    val mvDf = spark.read.parquet(mvPath)
     val plan = mvDf.queryExecution.analyzed
     val mvCols = plan.output.map(_.name).toSet
     (groupCols ++ aggs.keys).foreach(c =>
       require(mvCols.contains(c), s"join MV table $mvPath lacks column $c"))
-    val rows = mvDf.count()
+    val rows = rowsOf(spark, mvDf, mvPath)
     val entry = JoinMvDef(
       joinPairs.map { case (a, b) => normPair(a, b) }.toSet,
       MvDef(key.toSeq.sorted.mkString(" JOIN "), mvPath, groupCols, aggs,
@@ -644,10 +665,15 @@ object MvRewrite {
     * the MV table's current snapshot like [[register]]. */
   def registerTopK(spark: SparkSession, sourcePath: String, mvPath: String,
                    groupCols: Seq[String], keyCols: Seq[String],
-                   valueCol: String, k: Int): Unit = {
+                   valueCol: String, k: Int): Unit =
+    registerTopKRead(sourcePath, spark.read.parquet(mvPath), mvPath, groupCols,
+      keyCols, valueCol, k)
+
+  private def registerTopKRead(sourcePath: String, mvDf: org.apache.spark.sql.DataFrame,
+                               mvPath: String, groupCols: Seq[String],
+                               keyCols: Seq[String], valueCol: String, k: Int): Unit = {
     require(k >= 1, s"registerTopK: need k >= 1, got $k")
     require(groupCols.nonEmpty && keyCols.nonEmpty, "registerTopK: need group and key columns")
-    val mvDf = spark.read.parquet(mvPath)
     val plan = mvDf.queryExecution.analyzed
     val mvCols = plan.output.map(_.name).toSet
     (groupCols ++ keyCols :+ valueCol).foreach(c =>
@@ -694,8 +720,8 @@ object MvRewrite {
       registeredGens = prevPaths.flatMap(p => genOf(normalize(p))).toSet,
       registrationJson = dataDir => registrationJsonTopK(
         sourcePath, dataDir, groupCols, keyCols, valueCol, k, mvRoot),
-      registerFn = dataDir =>
-        registerTopK(spark, sourcePath, dataDir, groupCols, keyCols, valueCol, k),
+      registerFn = (dataDir, mvDf) =>
+        registerTopKRead(sourcePath, mvDf, dataDir, groupCols, keyCols, valueCol, k),
       deregisterOld = () =>
         prevPaths.foreach(old => deregisterTopK(sourcePath, old)))
     ()

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.cdc.PkTable
 
@@ -104,9 +104,7 @@ object PkTableSink {
     }
     if (dirs.size == 1) rd(dirs.head)
     else {
-      val keys = meta.get(MetaKeys).filter(_.nonEmpty).getOrElse(
-        throw new IllegalStateException(
-          "manifest has deltas but no stored key columns")).split(",").toSeq
+      val keys = storedKeys(meta)
       val vers = meta(MetaVers).split(",").toSeq
       // allowMissingColumns: WIDENED tables (a later commit added a
       // column) read older dirs with the new column as null — exactly
@@ -131,18 +129,19 @@ object PkTableSink {
     * @param compactAfterDeltas fold deltas into a new base once this
     *   many layers accumulate (post-commit, its own transaction);
     *   `Int.MaxValue` disables — run [[compactTx]] as maintenance
-    * @param bloomCols non-key columns to index with a per-file Bloom
-    *   sidecar on EVERY written dir — deltas included, so point
-    *   lookups ([[readTxPointOn]]) stay pruned while a hot table has
-    *   deltas outstanding. Persisted in the manifest; later commits
-    *   and auto-compaction inherit it when they pass Nil.
+    * @param bloomCols non-key columns to give a parquet-native bloom
+    *   filter in EVERY written dir — deltas included (plus the first
+    *   key column), so point lookups ([[readTxPointOn]]) stay pruned
+    *   while a hot table has deltas outstanding. Persisted in the
+    *   manifest; later commits and auto-compaction inherit it when
+    *   they pass Nil.
     * @param statsCols non-key columns recorded in every dir's zone-map
     *   sidecar (range-pruning twin of `bloomCols`, for
     *   [[readTxRangeOn]] on a delta-outstanding table); inherited the
     *   same way
-    * @param bloomExpectedPerFile per-file Bloom capacity for DELTA
-    *   dirs (batch-sized files — compaction sizes its own from
-    *   `targetRowsPerFile`) */
+    * @param bloomExpectedPerFile expected distinct values per file
+    *   for the blooms of DELTA dirs (batch-sized files — compaction
+    *   sizes its own from `targetRowsPerFile`) */
   def mergeTx(spark: SparkSession, root: String, changes: DataFrame,
               keyCols: Seq[String], versionCols: Seq[String], deleteFlag: String,
               writer: String, maxAttempts: Int = 5,
@@ -167,16 +166,17 @@ object PkTableSink {
               else prev.get(MetaStats)
       b.map(MetaBloom -> _).toMap ++ s.map(MetaStats -> _).toMap
     }
-    def writeSidecars(dir: String, m: Map[String, String]): Unit = {
-      ZoneMap.write(spark, dir,
-        keyCols ++ m.get(MetaStats).map(_.split(",").toSeq).getOrElse(Nil))
+    // the blooms are built inside the write task; the zone map reads
+    // the footers — neither costs a job beyond the write's own
+    def write(dir: String, m: Map[String, String]): Unit = {
       // the first key column rides along in every delta's bloom: a
       // sparse delta (keys scattered across the domain) zone-covers
       // almost any candidate range, but a POINT candidate can still be
       // bloom-rejected per file (see readTxPointOn pass 2)
-      m.get(MetaBloom).foreach(bc =>
-        BloomSidecar.write(spark, dir, (bc.split(",").toSeq :+ keyCols.head).distinct,
-          bloomExpectedPerFile))
+      val blooms = m.get(MetaBloom).map(_.split(",").toSeq :+ keyCols.head).getOrElse(Nil)
+      graft.SchemaCache.writeNew(chg, dir, Footers.bloomOptions(blooms, bloomExpectedPerFile))
+      ZoneMap.write(spark, dir,
+        keyCols ++ m.get(MetaStats).map(_.split(",").toSeq).getOrElse(Nil))
     }
     val batchCols = chg.columns.toSeq.filterNot(_ == Tombstone)
     batchCols.foreach(c => require(!c.exists(ch => ch == ',' || ch == '=' || ch == '\n'),
@@ -190,10 +190,9 @@ object PkTableSink {
       base match {
         case None =>
           val dataDir = s"$root/t$next-$writer-$nonce"
-          chg.write.mode(SaveMode.Overwrite).parquet(dataDir)
           val fullMeta = meta ++ sidecarMeta(Map.empty) +
             (MetaCols -> batchCols.mkString(","))
-          writeSidecars(dataDir, fullMeta)
+          write(dataDir, fullMeta)
           TxLog.Prepared(dataDir = dataDir, meta = fullMeta, written = Seq(dataDir))
         case Some(m) =>
           requireNoPartial(m.meta, "mergeTx") // meta replace would drop pcols
@@ -212,10 +211,9 @@ object PkTableSink {
               "schema can widen, never narrow (use mergeTxPartial for column subsets)")
           val widened = stored ++ batchCols.filterNot(stored.contains)
           val deltaDir = s"$root/d$next-$writer-$nonce"
-          chg.write.mode(SaveMode.Overwrite).parquet(deltaDir)
           val fullMeta = meta ++ sidecarMeta(m.meta) +
             (MetaCols -> widened.mkString(","))
-          writeSidecars(deltaDir, fullMeta)
+          write(deltaDir, fullMeta)
           TxLog.Prepared(dataDir = m.dataDir, deltas = m.deltas :+ deltaDir,
             meta = fullMeta, written = Seq(deltaDir))
       }
@@ -265,19 +263,18 @@ object PkTableSink {
           merged.repartitionByRange(nFiles, keyCols.map(col): _*)
             .sortWithinPartitions(keyCols.map(col): _*)
         else merged.repartition(nFiles)
-      packed.write.mode(SaveMode.Overwrite).parquet(dataDir)
-      // sidecar config: explicit args win, else the manifest's record
+      // pruning config: explicit args win, else the manifest's record
       // (written by mergeTx) — auto-compaction keeps a bloom/stats
       // table pruned without re-passing the columns
       val effStats = m.meta.get(MetaStats).map(_.split(",").toSeq).getOrElse(Nil)
       val effBloom = if (bloomCols.nonEmpty) bloomCols
         else m.meta.get(MetaBloom).map(_.split(",").toSeq).getOrElse(Nil)
-      ZoneMap.write(spark, dataDir, (keyCols ++ effStats).distinct)
-      // default filter capacity = the packing target, so each per-file
+      // default bloom capacity = the packing target, so each file's
       // filter is sized for the rows actually landing in it (a fixed
       // smaller default realizes ~25-30% fpp at 4M-row files)
-      BloomSidecar.write(spark, dataDir, effBloom,
-        if (bloomExpectedPerFile > 0) bloomExpectedPerFile else targetRowsPerFile)
+      graft.SchemaCache.writeNew(packed, dataDir, Footers.bloomOptions(effBloom,
+        if (bloomExpectedPerFile > 0) bloomExpectedPerFile else targetRowsPerFile))
+      ZoneMap.write(spark, dataDir, (keyCols ++ effStats).distinct)
       val keptMeta = m.meta ++
         (if (bloomCols.nonEmpty) Map(MetaBloom -> bloomCols.mkString(",")) else Map.empty)
       TxLog.Prepared(dataDir = dataDir, meta = keptMeta, written = Seq(dataDir))
@@ -327,7 +324,7 @@ object PkTableSink {
         .repartitionByRange(nFiles, col(zc))
         .sortWithinPartitions(col(zc))
         .drop(zc)
-      packed.write.mode(SaveMode.Overwrite).parquet(dataDir)
+      graft.SchemaCache.writeNew(packed, dataDir)
       ZoneMap.write(spark, dataDir, (keyCols ++ zCols).distinct)
       TxLog.Prepared(dataDir = dataDir,
         meta = m.meta + ("zorder" -> zCols.mkString(",")),
@@ -335,23 +332,24 @@ object PkTableSink {
     } catch { case CompactSkip(v) => v }
   }
 
-  /** Point lookup on an arbitrary column, BLOOM-SIDECAR pruned — the
+  /** Point lookup on an arbitrary column, BLOOM pruned — the
     * [[readTxRangeOn]] twin for columns with no layout correlation
     * (uuid-ish ids, foreign keys) where zone ranges cannot prune:
-    * scans only the files whose per-file Bloom
-    * ([[BloomSidecar]], written by [[compactTx]] `bloomCols`) may
-    * contain `value` — ~1 + fpp·F of F files. Matching rows are
-    * re-filtered exactly after the scan, so Bloom false positives
-    * cost I/O, never correctness. The probe compares the column's
-    * canonical STRING rendering (what the sidecar inserted), so pass
-    * e.g. "42" for a long column.
+    * scans only the files whose footers ([[Footers]]: the parquet
+    * bloom filters `bloomCols` asks the writers for, dictionaries,
+    * min/max) admit `value` — ~1 + fpp·F of F files, decided
+    * driver-side with zero jobs. Matching rows are re-filtered
+    * exactly after the scan, so false positives cost I/O, never
+    * correctness. `value` is the column's STRING rendering (the
+    * filter is a cast-to-string compare), so pass e.g. "42" for a
+    * long column.
     *
     * With DELTAS OUTSTANDING a one-pass bloom prune on a non-key
     * column is UNSOUND — a pruned-away delta row can supersede (or
     * tombstone) a matching base row, resurrecting a stale value — so
     * the hot-table path runs TWO passes, both pruned:
     *  1. candidate discovery: bloom-pruned files of EVERY layer
-    *     (mergeTx writes per-delta sidecars) are scanned for rows
+    *     (mergeTx writes per-delta blooms) are scanned for rows
     *     matching `value`, aggregated to the candidates' first-key
     *     bounds (a scalar job ∝ matching files);
     *  2. key resolution: the zone-map-pruned latest-per-key merge
@@ -364,65 +362,91 @@ object PkTableSink {
     */
   def readTxPointOn(spark: SparkSession, root: String, schemaOf: => DataFrame,
                     colName: String, value: String): DataFrame =
+    prunedRead(spark, root, schemaOf, "readTxPointOn",
+      col(colName).cast("string") === value, bloomed(spark, _, colName, value))
+
+  /** The pruned non-key read behind [[readTxPointOn]] and
+    * [[readTxRangeOn]]: rows matching `cond`, `pruned` picking each
+    * dir's candidate files — one pass over a single-dir table, the two
+    * passes with deltas outstanding. */
+  private def prunedRead(spark: SparkSession, root: String, schemaOf: => DataFrame,
+                         op: String, cond: org.apache.spark.sql.Column,
+                         pruned: String => Seq[String]): DataFrame =
     TxLog.current(spark, root) match {
       case None => schemaOf.limit(0)
       case Some(m0) =>
         val m = requireSingleTable(m0, root)
-        val eq = col(colName).cast("string") === value
-        requireNoPartial(m.meta, "readTxPointOn")
+        requireNoPartial(m.meta, op)
         if (m.deltas.isEmpty) {
-          val files = BloomSidecar.pruneFiles(spark, m.dataDir, colName, value)
+          val files = pruned(m.dataDir)
           if (files.isEmpty) schemaOf.limit(0)
-          else dropTombstones(spark.read.parquet(files: _*)).where(eq)
+          else dropTombstones(readFiles(spark, m.dataDir, files)).where(cond)
         } else {
-          val keys = m.meta.get(MetaKeys).filter(_.nonEmpty).getOrElse(
-            throw new IllegalStateException(
-              "manifest has deltas but no stored key columns")).split(",").toSeq
-          val vers = m.meta(MetaVers).split(",").toSeq
+          val keys = storedKeys(m.meta)
           val dirs = m.dataDir +: m.deltas
-          candidateKeyBounds(spark, dirs, keys.head, eq,
-            d => BloomSidecar.pruneFiles(spark, d, colName, value)) match {
+          candidateKeyBounds(spark, dirs, keys.head, cond, pruned) match {
             case None => schemaOf.limit(0)
             case Some((lo, hi)) =>
-              readPrunedDirs(spark, dirs, keys, vers, lo, hi,
-                keyPointBloom(spark, keys.head, lo, hi)).where(eq)
+              readPrunedDirs(spark, dirs, keys, m.meta(MetaVers).split(",").toSeq, lo, hi)
+                .where(cond)
           }
         }
     }
 
+  private def storedKeys(meta: Map[String, String]): Seq[String] =
+    meta.get(MetaKeys).filter(_.nonEmpty).getOrElse(throw new IllegalStateException(
+      "manifest has no stored key columns")).split(",").toSeq
+
+  /** The files of `dir` whose footers admit `colName` = `value`. */
+  private def bloomed(spark: SparkSession, dir: String, colName: String,
+                      value: String): Seq[String] =
+    Footers.pruneFiles(spark, Footers.dataFiles(spark, dir), colName, value)
+
+  /** `files` of immutable Tx dir `dir`, read with the dir's recorded
+    * schema — no per-read inference job. */
+  private def readFiles(spark: SparkSession, dir: String, files: Seq[String]): DataFrame =
+    spark.read.schema(graft.SchemaCache.schemaOf(spark, dir)).parquet(files: _*)
+
   /** Pass 1 of the delta-outstanding pruned lookups: scan each layer's
-    * sidecar-pruned files for rows matching `cond` and return the
-    * candidates' (min, max) on `keyCol` — None when nothing matches.
-    * One scalar aggregate job over the matching files only. */
+    * pruned files for rows matching `cond` and return the candidates'
+    * (min, max) on `keyCol` — None when nothing matches. One scalar
+    * aggregate job over the matching files only. */
   private def candidateKeyBounds(spark: SparkSession, dirs: Seq[String],
                                  keyCol: String, cond: org.apache.spark.sql.Column,
                                  pruned: String => Seq[String]): Option[(Any, Any)] = {
     val perDir = dirs.flatMap { d =>
       val files = pruned(d)
-      if (files.isEmpty) None else Some(spark.read.parquet(files: _*))
+      if (files.isEmpty) None else Some(readFiles(spark, d, files))
     }
     if (perDir.isEmpty) return None
-    val r = perDir.reduce(_ unionByName _).where(cond)
+    val r = unionUnder(spark, dirs, perDir).where(cond)
       .agg(min(col(keyCol)), max(col(keyCol))).head()
     if (r.isNullAt(0)) None else Some((r.get(0), r.get(1)))
   }
 
-  /** Per-dir pass-2 refinement for a POINT candidate (lo == hi): a
-    * sparse delta's key zone spans nearly the whole domain, but its
-    * bloom sidecar (mergeTx inserts the first key column) can reject
-    * the single candidate key per file. Identity for true ranges or
-    * dirs without a key filter. */
-  private def keyPointBloom(spark: SparkSession, keyCol: String,
-                            lo: Any, hi: Any): (String, Seq[String]) => Seq[String] =
-    if (lo != hi) (_, fs) => fs
-    else (d, fs) => {
-      // compare by file NAME: zone paths are scheme-less, bloom paths
-      // are fs-qualified URIs — both unique within one dir
-      def nameOf(f: String) = new org.apache.hadoop.fs.Path(f).getName
-      val keep = BloomSidecar.pruneFiles(spark, d, keyCol, String.valueOf(lo))
-        .map(nameOf).toSet
-      fs.filter(f => keep.contains(nameOf(f)))
-    }
+  /** `frames` (reads of some of `dirs`) unioned by name under the
+    * columns merge-on-read gives `dirs`: a widened table's older dirs
+    * lack its newer columns, and so may every frame pruning kept — the
+    * missing ones read as null, in the merged read's order. */
+  private def unionUnder(spark: SparkSession, dirs: Seq[String],
+                         frames: Seq[DataFrame]): DataFrame = {
+    val u = frames.reduce(_.unionByName(_, allowMissingColumns = true))
+    val fields = dirs.map(graft.SchemaCache.schemaOf(spark, _).fields.toSeq)
+      .reduce((a, b) => a ++ b.filterNot(f => a.exists(_.name == f.name)))
+    u.select(fields.map(f => if (u.columns.contains(f.name)) col(f.name)
+      else lit(null).cast(f.dataType).as(f.name)) ++
+      u.columns.filterNot(c => fields.exists(_.name == c)).map(col): _*)
+  }
+
+  /** The files of `dir` that can hold a first-key value in [lo,hi]: the
+    * zone map's pick, and for a POINT (lo == hi) only those whose
+    * footers admit the key — a sparse delta's key zone spans nearly
+    * the whole domain, but mergeTx blooms the first key column. */
+  private def keyFiles(spark: SparkSession, dir: String, keyCol: String,
+                       lo: Any, hi: Any): Seq[String] = {
+    val zoned = ZoneMap.pruneFiles(spark, dir, keyCol, lo.toString, hi.toString)
+    if (lo != hi) zoned else Footers.pruneFiles(spark, zoned, keyCol, String.valueOf(lo))
+  }
 
   /** PARTIAL-COLUMN upsert — the StarRocks primary-key
     * `partial_update` mode (Debezium patch-event shape): `changes`
@@ -484,7 +508,7 @@ object PkTableSink {
       val next = m.version + 1
       val nonce = java.util.UUID.randomUUID().toString.take(8)
       val deltaDir = s"$root/p$next-$writer-$nonce"
-      chg.write.mode(SaveMode.Overwrite).parquet(deltaDir)
+      graft.SchemaCache.writeNew(chg, deltaDir)
       ZoneMap.write(spark, deltaDir, keyCols)
       val dirName = deltaDir.substring(deltaDir.lastIndexOf('/') + 1)
       TxLog.Prepared(dataDir = m.dataDir, deltas = m.deltas :+ deltaDir,
@@ -573,7 +597,7 @@ object PkTableSink {
           full.repartitionByRange(nFiles, keyCols.map(col): _*)
             .sortWithinPartitions(keyCols.map(col): _*)
         else full.repartition(nFiles)
-      packed.write.mode(SaveMode.Overwrite).parquet(dataDir)
+      graft.SchemaCache.writeNew(packed, dataDir)
       ZoneMap.write(spark, dataDir, keyCols)
       TxLog.Prepared(dataDir = dataDir,
         meta = m.meta.filterNot(_._1.startsWith(PcolsPrefix)),
@@ -624,9 +648,7 @@ object PkTableSink {
         s"readTxChanges: no committed version $v under $root"))
     val mF = manifest(fromVersion); val mT = manifest(toVersion)
     requireNoPartial(mF.meta, "readTxChanges"); requireNoPartial(mT.meta, "readTxChanges")
-    val keys = mT.meta.get(MetaKeys).filter(_.nonEmpty).getOrElse(
-      throw new IllegalStateException(
-        s"readTxChanges: $root has no stored key columns")).split(",").toSeq
+    val keys = storedKeys(mT.meta)
     val ChangeType = "_change_type"
     // across a WIDENING boundary the from-image lacks the new columns;
     // align both sides to the union schema (nulls fill the gap — the
@@ -650,8 +672,8 @@ object PkTableSink {
         .withColumn(ChangeType, lit(""))
     val (sFrom, sTo) = newDirs match {
       case Some(dirs) =>
-        val touched = dirs.map(graft.SchemaCache.read(spark, _))
-          .reduce(_ unionByName _).select(keys.map(col): _*).distinct()
+        val touched = dirs.map(graft.SchemaCache.read(spark, _).select(keys.map(col): _*))
+          .reduce(_ unionByName _).distinct()
         (sFrom0.join(touched, keys, "left_semi"),
           sTo0.join(touched, keys, "left_semi"))
       case None => (sFrom0, sTo0)
@@ -767,12 +789,10 @@ object PkTableSink {
     val dir = s"$groupRoot/$table/d$next-$writer-$nonce"
     val chg = compactedWithTomb(b)
     StagedBatch(table, dir, groupMetaOf(table, b.keyCols, b.versionCols), run { () =>
-      chg.write.mode(SaveMode.Overwrite).parquet(dir)
+      // the recorded schema spares the dir's first reader (next
+      // round's merge-on-read) its inference job
+      graft.SchemaCache.writeNew(chg, dir)
       ZoneMap.write(spark, dir, b.keyCols)
-      // pre-populate the schema cache on the writing thread: the first
-      // reader of the dir (next round's merge-on-read) then skips its
-      // inference job entirely
-      graft.SchemaCache.prime(spark, dir)
     })
   }
 
@@ -906,7 +926,7 @@ object PkTableSink {
       val nFiles = math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile).toInt
       val packed = merged.repartitionByRange(nFiles, keyCols.map(col): _*)
         .sortWithinPartitions(keyCols.map(col): _*)
-      packed.write.mode(SaveMode.Overwrite).parquet(dataDir)
+      graft.SchemaCache.writeNew(packed, dataDir)
       ZoneMap.write(spark, dataDir, keyCols)
       TxLog.Prepared(tables = m.tables + (table -> dataDir), meta = m.meta,
         written = Seq(dataDir))
@@ -996,6 +1016,10 @@ object PkTableSink {
         "use the Group/IvfIndex APIs")
     m
   }
+
+  private def committed(spark: SparkSession, root: String): TxLog.Manifest =
+    TxLog.current(spark, root).map(requireSingleTable(_, root))
+      .getOrElse(throw new IllegalStateException(s"no committed version under $root"))
 
   /** Current LIVE contents of a [[TxLog]]-backed table — the
     * merge-on-read view (latest-per-key over base ∪ deltas), stored
@@ -1112,8 +1136,7 @@ object PkTableSink {
   def readTxCols(spark: SparkSession, root: String,
                  columns: Seq[String]): DataFrame = {
     require(columns.nonEmpty, "readTxCols: no columns requested")
-    val m = requireSingleTable(TxLog.current(spark, root).getOrElse(
-      throw new IllegalStateException(s"readTxCols: no committed version under $root")), root)
+    val m = committed(spark, root)
     val keys = m.meta.get(MetaKeys).filter(_.nonEmpty).map(_.split(",").toSeq)
       .getOrElse(Nil)
     val vers = m.meta.get(MetaVers).filter(_.nonEmpty).map(_.split(",").toSeq)
@@ -1145,10 +1168,7 @@ object PkTableSink {
       case Some(m0) =>
         val m = requireSingleTable(m0, root)
         requireNoPartial(m.meta, "readTxRange")
-        val keys = m.meta.get(MetaKeys).filter(_.nonEmpty).getOrElse(
-          throw new IllegalStateException(
-            s"readTxRange: $root has no stored key columns")).split(",").toSeq
-        readPrunedDirs(spark, m.dataDir +: m.deltas, keys,
+        readPrunedDirs(spark, m.dataDir +: m.deltas, storedKeys(m.meta),
           m.meta(MetaVers).split(",").toSeq, lo, hi)
     }
 
@@ -1165,30 +1185,27 @@ object PkTableSink {
       }
     }.getOrElse(schemaOf.limit(0))
 
-  // zone-map-pruned latest-per-key merge over an ordered dir list;
-  // bounds are Any (long/string/double key domains) — the zone probe
-  // uses their canonical string rendering, the row filter a typed lit
+  // key-pruned ([[keyFiles]]) latest-per-key merge over an ordered dir
+  // list; bounds are Any (long/string/double key domains) — the probes
+  // use their canonical string rendering, the row filter a typed lit
   private def readPrunedDirs(spark: SparkSession, dirs: Seq[String],
                              keys: Seq[String], vers: Seq[String],
-                             lo: Any, hi: Any,
-                             extraPrune: (String, Seq[String]) => Seq[String] =
-                               (_, fs) => fs): DataFrame = {
+                             lo: Any, hi: Any): DataFrame = {
     val keyCol = keys.head
     val perDir = dirs.zipWithIndex.flatMap { case (d, i) =>
-      val files = extraPrune(d,
-        ZoneMap.pruneFiles(spark, d, keyCol, lo.toString, hi.toString))
+      val files = keyFiles(spark, d, keyCol, lo, hi)
       if (files.isEmpty) None
-      else Some(spark.read.parquet(files: _*).withColumn(CommitSeq, lit(i.toLong)))
+      else Some(readFiles(spark, d, files).withColumn(CommitSeq, lit(i.toLong)))
     }
     val range = col(keyCol).between(lo, hi)
     perDir match {
-      case Seq() => dropTombstones(graft.SchemaCache.read(spark, dirs.head).limit(0))
+      case Seq() =>
+        dropTombstones(unionUnder(spark, dirs, Seq(graft.SchemaCache.read(spark, dirs.head).limit(0))))
       case Seq(one) if dirs.size == 1 =>
         // single-dir table: same no-merge path as readTx
         dropTombstones(one.drop(CommitSeq)).where(range)
       case some =>
-        val merged = PkTable.latestPerKey(
-          some.reduce(_ unionByName _).where(range),
+        val merged = PkTable.latestPerKey(unionUnder(spark, dirs, some).where(range),
           keys, vers.map(col) :+ col(CommitSeq)).drop(CommitSeq)
         dropTombstones(merged)
     }
@@ -1200,8 +1217,7 @@ object PkTableSink {
     * and ops introspection. */
   def pruneStats(spark: SparkSession, root: String,
                  lo: Long, hi: Long): (Seq[String], Int) = {
-    val m = TxLog.current(spark, root).map(requireSingleTable(_, root))
-      .getOrElse(throw new IllegalStateException(s"no committed version under $root"))
+    val m = committed(spark, root)
     pruneStatsOn(spark, root, m.meta(MetaKeys).split(",").head, lo, hi)
   }
 
@@ -1209,14 +1225,9 @@ object PkTableSink {
     * [[compactTxZOrder]] clustering column, typically). */
   def pruneStatsOn(spark: SparkSession, root: String, zoneCol: String,
                    lo: Long, hi: Long): (Seq[String], Int) = {
-    val m = TxLog.current(spark, root).map(requireSingleTable(_, root))
-      .getOrElse(throw new IllegalStateException(s"no committed version under $root"))
+    val m = committed(spark, root)
     val dirs = m.dataDir +: m.deltas
-    val fs = fsOf(spark, m.dataDir)
-    val total = dirs.map(d => fs.listStatus(new org.apache.hadoop.fs.Path(d))
-      .count { s =>
-        val n = s.getPath.getName; !n.startsWith("_") && !n.startsWith(".")
-      }).sum
+    val total = dirs.map(Footers.dataFiles(spark, _).size).sum
     (dirs.flatMap(d => ZoneMap.pruneFiles(spark, d, zoneCol, lo.toString, hi.toString)),
       total)
   }
@@ -1229,26 +1240,17 @@ object PkTableSink {
     * and ops introspection. */
   def pointPruneStatsOn(spark: SparkSession, root: String, colName: String,
                         value: String): (Seq[String], Seq[String], Int) = {
-    val m = TxLog.current(spark, root).map(requireSingleTable(_, root))
-      .getOrElse(throw new IllegalStateException(s"no committed version under $root"))
+    val m = committed(spark, root)
     val dirs = m.dataDir +: m.deltas
-    val fs = fsOf(spark, m.dataDir)
-    val total = dirs.map(d => fs.listStatus(new org.apache.hadoop.fs.Path(d))
-      .count { s =>
-        val n = s.getPath.getName; !n.startsWith("_") && !n.startsWith(".")
-      }).sum
-    def bloomed(d: String) = BloomSidecar.pruneFiles(spark, d, colName, value)
-    val pass1 = dirs.flatMap(bloomed)
+    val total = dirs.map(Footers.dataFiles(spark, _).size).sum
+    val pass1 = dirs.map(d => d -> bloomed(spark, d, colName, value)).toMap
     val keyCol = m.meta(MetaKeys).split(",").head
     val pass2 = candidateKeyBounds(spark, dirs, keyCol,
-      col(colName).cast("string") === value, bloomed) match {
+      col(colName).cast("string") === value, pass1) match {
       case None => Nil
-      case Some((lo, hi)) =>
-        val extra = keyPointBloom(spark, keyCol, lo, hi)
-        dirs.flatMap(d => extra(d, ZoneMap.pruneFiles(
-          spark, d, keyCol, String.valueOf(lo), String.valueOf(hi))))
+      case Some((lo, hi)) => dirs.flatMap(keyFiles(spark, _, keyCol, lo, hi))
     }
-    (pass1, pass2, total)
+    (dirs.flatMap(pass1), pass2, total)
   }
 
   /** Range read pruned on an ARBITRARY recorded zone column — the read
@@ -1268,31 +1270,8 @@ object PkTableSink {
     */
   def readTxRangeOn(spark: SparkSession, root: String, schemaOf: => DataFrame,
                     zoneCol: String, lo: Long, hi: Long): DataFrame =
-    TxLog.current(spark, root) match {
-      case None => schemaOf.limit(0)
-      case Some(m0) =>
-        val m = requireSingleTable(m0, root)
-        val range = col(zoneCol).between(lo, hi)
-        requireNoPartial(m.meta, "readTxRangeOn")
-        if (m.deltas.isEmpty) {
-          val files = ZoneMap.pruneFiles(spark, m.dataDir, zoneCol,
-            lo.toString, hi.toString)
-          if (files.isEmpty) schemaOf.limit(0)
-          else dropTombstones(spark.read.parquet(files: _*)).where(range)
-        } else {
-          val keys = m.meta.get(MetaKeys).filter(_.nonEmpty).getOrElse(
-            throw new IllegalStateException(
-              "manifest has deltas but no stored key columns")).split(",").toSeq
-          val vers = m.meta(MetaVers).split(",").toSeq
-          val dirs = m.dataDir +: m.deltas
-          candidateKeyBounds(spark, dirs, keys.head, range,
-            d => ZoneMap.pruneFiles(spark, d, zoneCol, lo.toString, hi.toString)) match {
-            case None => schemaOf.limit(0)
-            case Some((kLo, kHi)) =>
-              readPrunedDirs(spark, dirs, keys, vers, kLo, kHi).where(range)
-          }
-        }
-    }
+    prunedRead(spark, root, schemaOf, "readTxRangeOn", col(zoneCol).between(lo, hi),
+      ZoneMap.pruneFiles(spark, _, zoneCol, lo.toString, hi.toString))
 
   /** Live contents as of a specific committed version (time travel). */
   def readTxAt(spark: SparkSession, root: String, version: Long): DataFrame =

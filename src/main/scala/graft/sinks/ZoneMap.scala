@@ -95,11 +95,6 @@ object ZoneMap {
     writeViaJob(spark, dir, keyCols)
   }
 
-  /** How many data files the driver-side footer path will read before
-    * deferring to the distributed job (per-footer reads are serial
-    * driver round trips — fine for commit-batch dirs, wrong at scale). */
-  private val FooterMaxFiles = 64
-
   private[graft] def footerWrite(spark: SparkSession, dir: String, keyCols: Seq[String]): Boolean = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -109,10 +104,10 @@ object ZoneMap {
     val dirPath = new Path(dir)
     val fs = dirPath.getFileSystem(conf)
     if (!fs.exists(dirPath)) return false
-    val files = fs.listStatus(dirPath).filter(_.isFile).map(_.getPath).filter { p =>
-      val n = p.getName; !n.startsWith("_") && !n.startsWith(".")
-    }
-    if (files.length > FooterMaxFiles) return false
+    // per-footer reads are serial driver round trips — fine for
+    // commit-batch dirs, wrong at scale
+    val files = Footers.dataFiles(fs, dirPath)
+    if (files.length > Footers.MaxFiles) return false
     val lines = files.toSeq.flatMap { f =>
       val footer = try {
         val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
@@ -290,13 +285,8 @@ object ZoneMap {
     * reader stays correct on legacy dirs, it just doesn't skip). */
   def pruneFiles(spark: SparkSession, dir: String, keyCol: String,
                  lo: String, hi: String): Seq[String] = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dataFiles: Seq[String] = fs.listStatus(new Path(dir))
-      .map(_.getPath).filter { p =>
-        val n = p.getName; !n.startsWith("_") && !n.startsWith(".")
-      }.map(_.toString).toSeq
     read(spark, dir) match {
-      case None => dataFiles
+      case None => Footers.dataFiles(spark, dir)
       case Some(stats) =>
         stats.filter(mayMatch(_, keyCol, lo, hi))
           .map(st => new Path(dir, st.file).toString)

@@ -1,10 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.sinks.{BloomSidecar, PkTableSink, TxLog}
+import graft.sinks.{Footers, PkTableSink, TxLog}
 
-/** D21: per-file Bloom sidecars — point-lookup pruning on columns zone
-  * maps cannot help with. */
+/** D21: per-file bloom pruning — point lookups on columns zone maps
+  * cannot help with, through the parquet-native blooms the writers
+  * build inside the write task and the driver-side footer probe
+  * ([[Footers]]). The spec keeps the name of the per-file sidecar
+  * format those blooms replaced; its properties are unchanged. */
 class BloomSidecarSpec extends SparkSpec {
   import spark.implicits._
 
@@ -33,7 +36,7 @@ class BloomSidecarSpec extends SparkSpec {
     val refs = (0L until 2000L by 97L).map(i => (i * 48271L + 11L) % 1000000007L)
     var scannedTotal = 0
     refs.foreach { r =>
-      val files = BloomSidecar.pruneFiles(spark, dir, "ref", r.toString)
+      val files = Footers.pruneFiles(spark, Footers.dataFiles(spark, dir), "ref", r.toString)
       scannedTotal += files.size
       val got = PkTableSink.readTxPointOn(spark, root, rows().drop("del"),
         "ref", r.toString).select("ref").as[Long].collect()
@@ -53,7 +56,7 @@ class BloomSidecarSpec extends SparkSpec {
   test("delta-outstanding point lookups stay pruned (two-pass, <= 2x matching files)") {
     val root = freshRoot(); build(root)
     def ref(i: Long) = (i * 48271L + 11L) % 1000000007L
-    // deltas carry their own bloom sidecars (mergeTx bloomCols):
+    // deltas carry their own blooms (mergeTx bloomCols):
     //  - key 5's ref value CHANGES (old value must not resurrect)
     //  - key 2500 is NEW with a fresh ref
     //  - key 7 is tombstoned (its ref must disappear)
@@ -115,6 +118,43 @@ class BloomSidecarSpec extends SparkSpec {
     val atNew = PkTableSink.readTxRangeOn(spark, root, base.drop("del"),
       "val5", 99999L, 99999L).select("v").as[String].collect()
     assert(atNew.toSeq === Seq("moved"))
+  }
+
+  test("dictionary-encoded column: no bloom, matching files kept, lookups exact") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    // grp has 8 values: parquet-mr keeps the chunk dictionary-encoded
+    // and writes no bloom for it, though bloomCols asks for one
+    val df = rows().withColumn("grp", col("id") % 8)
+    val root = freshRoot()
+    PkTableSink.mergeTx(spark, root, df, Seq("id"), Seq("ver"), "del", writer = "w")
+    PkTableSink.compactTx(spark, root, "w", targetRowsPerFile = 200,
+      bloomCols = Seq("grp", "ref"), bloomExpectedPerFile = 10000)
+    val dir = TxLog.current(spark, root).get.dataDir
+    val files = Footers.dataFiles(spark, dir)
+    val conf = spark.sessionState.newHadoopConf()
+    def hasBloom(f: String, c: String) = {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f), conf))
+      try r.getRowGroups.asScala.forall { b =>
+        val chunk = b.getColumns.asScala.find(_.getPath.toDotString == c).get
+        r.readBloomFilter(chunk) != null
+      } finally r.close()
+    }
+    assert(files.size >= 8)
+    assert(files.forall(f => !hasBloom(f, "grp")), "dictionary-encoded grp has no bloom")
+    assert(files.forall(f => hasBloom(f, "ref")), "plain-encoded ref has a bloom")
+    val byFile = spark.read.parquet(dir).select(col("grp"), input_file_name().as("f"))
+      .distinct().collect().map(r => (r.getLong(0), new org.apache.hadoop.fs.Path(r.getString(1)).getName))
+    (0L until 8L).foreach { g =>
+      val kept = Footers.pruneFiles(spark, files, "grp", g.toString)
+        .map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
+      val needed = byFile.filter(_._1 == g).map(_._2).toSet
+      assert(needed.subsetOf(kept), s"grp=$g: a file holding the value was pruned")
+      val got = PkTableSink.readTxPointOn(spark, root, df.drop("del"), "grp", g.toString)
+      assert(got.count() === 250, s"grp=$g")
+    }
+    assert(PkTableSink.readTxPointOn(spark, root, df.drop("del"), "grp", "9").count() === 0)
   }
 
   test("legacy dirs (no sidecar) and outstanding deltas stay correct") {

@@ -1,0 +1,52 @@
+package graft.plans
+
+import org.apache.spark.sql.functions._
+import graft.{JobCount, SparkSpec, TestTmp}
+import graft.sinks.{PkTableSink, TxLog}
+import graft.streaming.KmvMv
+
+/** The write and publish paths run only the jobs that write data: the
+  * blooms are built inside the parquet write, schemas are recorded by
+  * the writer, and a publish does not re-read what it wrote. */
+class JobCountSpec extends SparkSpec {
+  import spark.implicits._
+
+  test("a mergeTx commit with bloomCols and no compaction runs exactly one job") {
+    val root = TestTmp.dir("jobs").toString + "/lake"
+    // one partition, like a one-file micro-batch: the latest-per-key
+    // compaction needs no exchange, so the write is the only job left
+    def batch(from: Long) = (from until from + 50L)
+      .map(i => (i, 1L, i * 7919L % 1000L, s"v$i", false)).toDF("id", "ver", "ref", "v", "del")
+      .coalesce(1)
+    def merge(from: Long) = PkTableSink.mergeTx(spark, root, batch(from), Seq("id"), Seq("ver"),
+      "del", writer = "w", bloomCols = Seq("ref"), compactAfterDeltas = Int.MaxValue)
+    val (_, baseJobs) = JobCount(spark)(merge(0L))
+    val (_, deltaJobs) = JobCount(spark)(merge(25L))
+    assert(TxLog.current(spark, root).get.deltas.size == 1)
+    assert(baseJobs == 1, s"base commit ran $baseJobs jobs")
+    assert(deltaJobs == 1, s"delta commit ran $deltaJobs jobs")
+    assert(PkTableSink.readTx(spark, root, batch(0L).drop("del")).count() == 75L)
+  }
+
+  test("registerSketchSnapshot runs only its write's jobs, and MvDef.rows equals count()") {
+    val base = TestTmp.dir("jobs").toString
+    val (root, src, snap) = (s"$base/kmv", s"$base/src", s"$base/snap")
+    def batch(from: Int) = (from until from + 40)
+      .map(i => (i.toLong, s"g${i % 5}")).toDF("id", "g")
+    assert(KmvMv.maintainTx(root, batch(0), 1L, Seq("g"), col("id"), writer = "j"))
+    assert(KmvMv.maintainTx(root, batch(20), 2L, Seq("g"), col("id"), writer = "j"))
+    assert(TxLog.current(spark, root).get.tables("mv").split(",").length == 2,
+      "a two-dir MV")
+    val frame = KmvMv.readMv(spark, root, spark.emptyDataFrame)
+    val (_, writeJobs) = JobCount(spark)(frame.write.parquet(s"$base/scratch"))
+    val aggs = Map[String, MvRewrite.AggKind]("sk" -> MvRewrite.KmvSketchOf("id"))
+    val (_, publishJobs) = JobCount(spark)(MvRewrite.registerSketchSnapshot(
+      spark, src, frame, snap, Seq("g"), aggs, mvRoot = Some(root)))
+    assert(publishJobs == writeJobs,
+      s"publish ran $publishJobs jobs; writing the frame runs $writeJobs")
+    val Seq(mv) = MvRewrite.lookup(MvRewrite.normalize(src))
+    assert(mv.rows == spark.read.parquet(mv.mvPath).count())
+    assert(mv.rows == 5L)
+    MvRewrite.deregister(src)
+  }
+}
