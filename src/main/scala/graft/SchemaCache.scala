@@ -20,7 +20,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   *    dir's schema by construction; this covers every TxLog dir the
   *    lake and the MV rounds write (`t/d/p<version>-<writer>-<nonce>`,
   *    written once, never appended, the nonce making name reuse
-  *    impossible).
+  *    impossible), and the unpartitioned nonce-named dirs of the LSH,
+  *    IVF and graph indexes.
   *  - [[read]]/[[schemaOf]] on a miss infer once and cache. Sound only
   *    for dirs that never change content: corpus tables
   *    (`Tables.load`) and TxLog dirs written by an earlier JVM.

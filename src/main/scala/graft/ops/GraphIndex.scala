@@ -82,14 +82,14 @@ object GraphIndex {
   private def writeVectors(spark: SparkSession, root: String,
                            v: DataFrame): String = {
     val dir = s"$root/v-${nonce()}"
-    v.select(col("id"), col("v"), col("n2")).write.parquet(dir)
+    graft.SchemaCache.writeNew(v.select(col("id"), col("v"), col("n2")), dir)
     dir
   }
 
   private def writeEdges(spark: SparkSession, root: String,
                          g: DataFrame): String = {
     val dir = s"$root/g-${nonce()}"
-    g.select(col("src"), col("dst")).distinct().write.parquet(dir)
+    graft.SchemaCache.writeNew(g.select(col("src"), col("dst")).distinct(), dir)
     dir
   }
 
@@ -216,7 +216,7 @@ object GraphIndex {
         s"GraphIndex.delete: no committed index under $root"))
       val ord = dirs(m, Vectors).length
       val dir = s"$root/t$ord-${nonce()}"
-      ids.select(idCol.cast("long").as("id")).distinct().write.parquet(dir)
+      graft.SchemaCache.writeNew(ids.select(idCol.cast("long").as("id")).distinct(), dir)
       (m.tables + (Tombstones -> (dirs(m, Tombstones) :+ dir).mkString(",")),
         m.meta, Seq(dir))
     }

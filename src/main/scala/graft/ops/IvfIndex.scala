@@ -86,11 +86,10 @@ object IvfIndex {
                              cents: Seq[(Long, Array[Double])]): String = {
     import spark.implicits._
     val dir = s"$root/c-${nonce()}"
-    cents.map { case (cid, c) => (cid, c.toSeq) }.toDF("cid", "cv")
+    graft.SchemaCache.writeNew(cents.map { case (cid, c) => (cid, c.toSeq) }.toDF("cid", "cv")
       .select(col("cid"), col("cv").cast("array<double>").as("cv"))
       .withColumn("cn2", Similarity.normSq(col("cv")))
-      .coalesce(1)
-      .write.parquet(dir)
+      .coalesce(1), dir)
     dir
   }
 
@@ -196,7 +195,7 @@ object IvfIndex {
         s"IvfIndex.delete: no committed index under $root"))
       val ord = dirs(m, Vectors).length
       val dir = s"$root/t$ord-${nonce()}"
-      ids.select(idCol.cast("long").as("id")).distinct().write.parquet(dir)
+      graft.SchemaCache.writeNew(ids.select(idCol.cast("long").as("id")).distinct(), dir)
       (m.tables + (Tombstones -> (dirs(m, Tombstones) :+ dir).mkString(",")),
         m.meta, Seq(dir))
     }

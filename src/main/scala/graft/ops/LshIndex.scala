@@ -63,11 +63,11 @@ object LshIndex {
     val sigs = Dedup.minhashSignatures(
       Dedup.shingleRows(df, id, text, shingleN), k)
     val sDir = s"$root/s-${nonce()}"
-    sigs.write.parquet(sDir)
+    graft.SchemaCache.writeNew(sigs, sDir)
     val bDir = s"$root/b-${nonce()}"
     // derive bands from the WRITTEN sigs so both tables of the commit
     // are consistent even if the input frame is non-deterministic
-    Dedup.bandRowsOfSigs(graft.SchemaCache.read(spark, sDir), k, bands).write.parquet(bDir)
+    graft.SchemaCache.writeNew(Dedup.bandRowsOfSigs(graft.SchemaCache.read(spark, sDir), k, bands), bDir)
     (sDir, bDir)
   }
 
@@ -173,9 +173,9 @@ object LshIndex {
       val m = base.getOrElse(throw new IllegalStateException(
         s"LshIndex.compact: no committed index under $root"))
       val sDir = s"$root/s-${nonce()}"
-      readAll(spark, m, Sigs).coalesce(4).write.parquet(sDir)
+      graft.SchemaCache.writeNew(readAll(spark, m, Sigs).coalesce(4), sDir)
       val bDir = s"$root/b-${nonce()}"
-      readAll(spark, m, Bands).coalesce(4).write.parquet(bDir)
+      graft.SchemaCache.writeNew(readAll(spark, m, Bands).coalesce(4), bDir)
       (m.tables + (Sigs -> sDir) + (Bands -> bDir), m.meta, Seq(sDir, bDir))
     }
 

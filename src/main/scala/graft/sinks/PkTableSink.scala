@@ -52,10 +52,9 @@ object PkTableSink {
   // manifest meta keys persisting the merge configuration
   private val MetaKeys = "keys"
   private val MetaVers = "vers"
-  // sidecar configuration carried in the manifest so maintenance
-  // (auto-compaction) and reads keep pruning without re-passing it
+  // bloom columns carried in the manifest so later commits and
+  // auto-compaction keep writing them without re-passing the list
   private val MetaBloom = "bloom"
-  private val MetaStats = "stats"
   // the table's CURRENT column set (ordered, Tombstone excluded) —
   // grows on widening commits, never shrinks; commits missing a
   // stored column are refused (a whole-row latest-wins merge would
@@ -65,6 +64,10 @@ object PkTableSink {
   // versions of a key, the later commit wins (deterministic, where
   // copy-on-write tie-break was unspecified)
   private val CommitSeq = "__graft_commit_seq"
+
+  // fresh dir names: two writers (even with the same writer tag) never
+  // share a dir, so a loser's cleanup only ever deletes its own files
+  private def nonce(): String = java.util.UUID.randomUUID().toString.take(8)
 
   private def metaOf(keyCols: Seq[String], versionCols: Seq[String]): Map[String, String] = {
     (keyCols ++ versionCols).foreach(c => require(
@@ -135,10 +138,9 @@ object PkTableSink {
     *   while a hot table has deltas outstanding. Persisted in the
     *   manifest; later commits and auto-compaction inherit it when
     *   they pass Nil.
-    * @param statsCols non-key columns recorded in every dir's zone-map
-    *   sidecar (range-pruning twin of `bloomCols`, for
-    *   [[readTxRangeOn]] on a delta-outstanding table); inherited the
-    *   same way
+    * @param statsCols ignored: every dir's parquet footers record
+    *   min/max for every column, which is what [[readTxRangeOn]]
+    *   prunes on; kept so existing callers compile
     * @param bloomExpectedPerFile expected distinct values per file
     *   for the blooms of DELTA dirs (batch-sized files — compaction
     *   sizes its own from `targetRowsPerFile`) */
@@ -157,40 +159,30 @@ object PkTableSink {
         .drop(deleteFlag),
       keyCols, versionCols.map(col))
     val meta = metaOf(keyCols, versionCols)
-    def sidecarMeta(prev: Map[String, String]): Map[String, String] = {
-      // a commit passing Nil inherits the table's recorded sidecar
-      // config instead of silently dropping it from the manifest
-      val b = if (bloomCols.nonEmpty) Some(bloomCols.mkString(","))
-              else prev.get(MetaBloom)
-      val s = if (statsCols.nonEmpty) Some(statsCols.mkString(","))
-              else prev.get(MetaStats)
-      b.map(MetaBloom -> _).toMap ++ s.map(MetaStats -> _).toMap
-    }
-    // the blooms are built inside the write task; the zone map reads
-    // the footers — neither costs a job beyond the write's own
+    // a commit passing Nil inherits the table's recorded bloom columns
+    // instead of silently dropping them from the manifest
+    def bloomMeta(prev: Map[String, String]): Map[String, String] =
+      (if (bloomCols.nonEmpty) Some(bloomCols.mkString(",")) else prev.get(MetaBloom))
+        .map(MetaBloom -> _).toMap
+    // the blooms are built inside the write task: no job beyond the
+    // write's own
     def write(dir: String, m: Map[String, String]): Unit = {
       // the first key column rides along in every delta's bloom: a
-      // sparse delta (keys scattered across the domain) zone-covers
+      // sparse delta (keys scattered across the domain) min/max-covers
       // almost any candidate range, but a POINT candidate can still be
       // bloom-rejected per file (see readTxPointOn pass 2)
       val blooms = m.get(MetaBloom).map(_.split(",").toSeq :+ keyCols.head).getOrElse(Nil)
       graft.SchemaCache.writeNew(chg, dir, Footers.bloomOptions(blooms, bloomExpectedPerFile))
-      ZoneMap.write(spark, dir,
-        keyCols ++ m.get(MetaStats).map(_.split(",").toSeq).getOrElse(Nil))
     }
     val batchCols = chg.columns.toSeq.filterNot(_ == Tombstone)
     batchCols.foreach(c => require(!c.exists(ch => ch == ',' || ch == '=' || ch == '\n'),
       s"column name '$c' unusable in a manifest"))
     val v = TxLog.commitWith(spark, root, writer, maxAttempts, recoverTornAfterMs) { base =>
       val next = base.map(_.version + 1).getOrElse(0L)
-      // unique nonce: two writers (even misconfigured with the SAME
-      // writer tag) can never share a snapshot dir, so the loser's
-      // orphan cleanup can only ever delete its own files
-      val nonce = java.util.UUID.randomUUID().toString.take(8)
       base match {
         case None =>
-          val dataDir = s"$root/t$next-$writer-$nonce"
-          val fullMeta = meta ++ sidecarMeta(Map.empty) +
+          val dataDir = s"$root/t$next-$writer-${nonce()}"
+          val fullMeta = meta ++ bloomMeta(Map.empty) +
             (MetaCols -> batchCols.mkString(","))
           write(dataDir, fullMeta)
           TxLog.Prepared(dataDir = dataDir, meta = fullMeta, written = Seq(dataDir))
@@ -210,8 +202,8 @@ object PkTableSink {
             s"mergeTx: batch is missing stored columns ${missing.mkString(", ")} — " +
               "schema can widen, never narrow (use mergeTxPartial for column subsets)")
           val widened = stored ++ batchCols.filterNot(stored.contains)
-          val deltaDir = s"$root/d$next-$writer-$nonce"
-          val fullMeta = meta ++ sidecarMeta(m.meta) +
+          val deltaDir = s"$root/d$next-$writer-${nonce()}"
+          val fullMeta = meta ++ bloomMeta(m.meta) +
             (MetaCols -> widened.mkString(","))
           write(deltaDir, fullMeta)
           TxLog.Prepared(dataDir = m.dataDir, deltas = m.deltas :+ deltaDir,
@@ -226,16 +218,50 @@ object PkTableSink {
 
   private final case class CompactSkip(version: Long) extends RuntimeException
 
+  /** What one compaction folds: the merged `rows`, laid out by `pack`
+    * into the given number of files and written with `options`, then
+    * `claim`ed as the commit for the new dir under `dirPrefix`. */
+  private final case class Fold(rows: DataFrame, pack: (DataFrame, Int) => DataFrame,
+                                dirPrefix: String, claim: String => TxLog.Prepared,
+                                options: Map[String, String] = Map.empty)
+
+  /** The base rewrite every compaction shares: under `root`'s claim,
+    * `fold` sees the current manifest and returns what to rewrite — or
+    * None to skip, returning the current version with no commit. A
+    * count pass sizes the file count (compaction is already an
+    * O(live keys) rewrite; one aggregate-only pass is noise), and the
+    * packed rows land in a fresh nonce-named `t<version>` dir. */
+  private def compactWith(spark: SparkSession, root: String, writer: String, op: String,
+                          targetRowsPerFile: Long, maxAttempts: Int,
+                          recoverTornAfterMs: Long)(fold: TxLog.Manifest => Option[Fold]): Long =
+    try TxLog.commitWith(spark, root, writer, maxAttempts, recoverTornAfterMs) { base =>
+      val m = base.getOrElse(throw new IllegalStateException(
+        s"$op: no committed version under $root"))
+      val f = fold(m).getOrElse(throw CompactSkip(m.version))
+      val dir = s"${f.dirPrefix}/t${m.version + 1}-$writer-${nonce()}"
+      val rows = f.rows.count()
+      val nFiles = math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile).toInt
+      graft.SchemaCache.writeNew(f.pack(f.rows, nFiles), dir, f.options)
+      f.claim(dir)
+    } catch { case CompactSkip(v) => v }
+
+  /** Key-range-sorted bin-packing: each file covers a disjoint range
+    * of `keyCols`. */
+  private def byKey(keyCols: Seq[String])(df: DataFrame, nFiles: Int): DataFrame =
+    if (keyCols.isEmpty) df.repartition(nFiles)
+    else df.repartitionByRange(nFiles, keyCols.map(col): _*)
+      .sortWithinPartitions(keyCols.map(col): _*)
+
   /** Fold base + deltas into ONE fresh base dir, bin-packed to
     * `targetRowsPerFile` and RANGE-SORTED by the table's key columns —
-    * each output file covers a disjoint key range, so parquet
-    * column-index min/max stats prune point/range lookups to the files
-    * that can match (the small-files cure and the sorted-layout
-    * optimization in one rewrite). Tombstones are RETAINED: a later
-    * commit may still carry an older version of a deleted key, and
-    * only the stored tombstone stops its resurrection. Conflict-safe —
-    * a retry re-reads the winner's manifest, so a concurrent delta
-    * commit is folded in, never dropped.
+    * each output file covers a disjoint key range, so the footers'
+    * min/max prune point/range lookups to the files that can match
+    * (the small-files cure and the sorted-layout optimization in one
+    * rewrite). Tombstones are RETAINED: a later commit may still carry
+    * an older version of a deleted key, and only the stored tombstone
+    * stops its resurrection. Conflict-safe — a retry re-reads the
+    * winner's manifest, so a concurrent delta commit is folded in,
+    * never dropped.
     *
     * @param minDeltas skip (returning the current version, no commit)
     *   unless at least this many deltas are stacked — lets concurrent
@@ -245,49 +271,38 @@ object PkTableSink {
                 maxAttempts: Int = 5, recoverTornAfterMs: Long = 60000L,
                 bloomCols: Seq[String] = Nil,
                 bloomExpectedPerFile: Long = -1L): Long =
-    try TxLog.commitWith(spark, root, writer, maxAttempts, recoverTornAfterMs) { base =>
-      val m = requireSingleTable(base.getOrElse(throw new IllegalStateException(
-        s"compactTx: no committed version under $root")), root)
-      if (m.deltas.size < minDeltas) throw CompactSkip(m.version)
-      val merged = mergedTx(spark, m)
-      val next = m.version + 1
-      val nonce = java.util.UUID.randomUUID().toString.take(8)
-      val dataDir = s"$root/t$next-$writer-$nonce"
-      // count pass sizes the bin-packing; compaction is already an
-      // O(live keys) rewrite, one extra aggregate-only pass is noise
-      val rows = merged.count()
-      val nFiles = math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-      val keyCols = m.meta.get(MetaKeys).map(_.split(",").toSeq).getOrElse(Nil)
-      val packed =
-        if (keyCols.nonEmpty)
-          merged.repartitionByRange(nFiles, keyCols.map(col): _*)
-            .sortWithinPartitions(keyCols.map(col): _*)
-        else merged.repartition(nFiles)
-      // pruning config: explicit args win, else the manifest's record
-      // (written by mergeTx) — auto-compaction keeps a bloom/stats
-      // table pruned without re-passing the columns
-      val effStats = m.meta.get(MetaStats).map(_.split(",").toSeq).getOrElse(Nil)
-      val effBloom = if (bloomCols.nonEmpty) bloomCols
-        else m.meta.get(MetaBloom).map(_.split(",").toSeq).getOrElse(Nil)
-      // default bloom capacity = the packing target, so each file's
-      // filter is sized for the rows actually landing in it (a fixed
-      // smaller default realizes ~25-30% fpp at 4M-row files)
-      graft.SchemaCache.writeNew(packed, dataDir, Footers.bloomOptions(effBloom,
-        if (bloomExpectedPerFile > 0) bloomExpectedPerFile else targetRowsPerFile))
-      ZoneMap.write(spark, dataDir, (keyCols ++ effStats).distinct)
-      val keptMeta = m.meta ++
-        (if (bloomCols.nonEmpty) Map(MetaBloom -> bloomCols.mkString(",")) else Map.empty)
-      TxLog.Prepared(dataDir = dataDir, meta = keptMeta, written = Seq(dataDir))
-    } catch { case CompactSkip(v) => v }
+    compactWith(spark, root, writer, "compactTx", targetRowsPerFile, maxAttempts,
+        recoverTornAfterMs) { m0 =>
+      val m = requireSingleTable(m0, root)
+      if (m.deltas.size < minDeltas) None
+      else {
+        // explicit bloom columns win, else the manifest's record
+        // (written by mergeTx) — auto-compaction keeps a bloomed table
+        // bloomed without re-passing the columns
+        val effBloom = if (bloomCols.nonEmpty) bloomCols
+          else m.meta.get(MetaBloom).map(_.split(",").toSeq).getOrElse(Nil)
+        val keptMeta = m.meta ++
+          (if (bloomCols.nonEmpty) Map(MetaBloom -> bloomCols.mkString(",")) else Map.empty)
+        // default bloom capacity = the packing target, so each file's
+        // filter is sized for the rows actually landing in it (a fixed
+        // smaller default realizes ~25-30% fpp at 4M-row files)
+        Some(Fold(mergedTx(spark, m), byKey(keyColsOf(m.meta)), root,
+          dir => TxLog.Prepared(dataDir = dir, meta = keptMeta, written = Seq(dir)),
+          Footers.bloomOptions(effBloom,
+            if (bloomExpectedPerFile > 0) bloomExpectedPerFile else targetRowsPerFile)))
+      }
+    }
+
+  private def keyColsOf(meta: Map[String, String]): Seq[String] =
+    meta.get(MetaKeys).map(_.split(",").toSeq).getOrElse(Nil)
 
   /** [[compactTx]] variant that clusters the rewritten base in
     * Z-ORDER of two NUMERIC columns (Delta `OPTIMIZE ZORDER BY`
     * analogue, [[ZOrder]]): files then cover rectangles of the
-    * (zCols(0), zCols(1)) space and the dir's zone-map sidecar records
-    * min/max for the key AND both z columns, so a range read on EITHER
-    * z column ([[readTxRangeOn]]) prunes to ~√F of F files — where
-    * key-range-sorted compaction prunes only the first key column and
-    * scans everything for the rest.
+    * (zCols(0), zCols(1)) space, so the footers' min/max prune a range
+    * read on EITHER z column ([[readTxRangeOn]]) to ~√F of F files —
+    * where key-range-sorted compaction prunes only the first key
+    * column and scans everything for the rest.
     *
     * The z-column bounds come from one aggregate-only scalar job over
     * the merged rows (maintenance path, same budget class as the
@@ -302,39 +317,31 @@ object PkTableSink {
                       recoverTornAfterMs: Long = 60000L): Long = {
     require(zCols.size >= 2 && zCols.size <= 4,
       s"z-order takes 2-4 columns, got $zCols")
-    try TxLog.commitWith(spark, root, writer, maxAttempts, recoverTornAfterMs) { base =>
-      val m = requireSingleTable(base.getOrElse(throw new IllegalStateException(
-        s"compactTxZOrder: no committed version under $root")), root)
-      if (m.deltas.size < minDeltas) throw CompactSkip(m.version)
-      val merged = mergedTx(spark, m)
-      val next = m.version + 1
-      val nonce = java.util.UUID.randomUUID().toString.take(8)
-      val dataDir = s"$root/t$next-$writer-$nonce"
-      val rows = merged.count()
-      val nFiles = math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-      val keyCols = m.meta.get(MetaKeys).map(_.split(",").toSeq).getOrElse(Nil)
+    def zorder(merged: DataFrame, nFiles: Int): DataFrame = {
       val boundAggs = zCols.flatMap(c => Seq(
         min(col(c).cast("double")), max(col(c).cast("double"))))
       val b = merged.agg(boundAggs.head, boundAggs.tail: _*).head()
       def bound(i: Int) = if (b.isNullAt(i)) 0.0 else b.getDouble(i)
       val zc = "__graft_z"
-      val packed = merged
+      merged
         .withColumn(zc, ZOrder.zvalueN(zCols.zipWithIndex.map { case (c, i) =>
           (col(c), bound(2 * i), bound(2 * i + 1)) }))
         .repartitionByRange(nFiles, col(zc))
         .sortWithinPartitions(col(zc))
         .drop(zc)
-      graft.SchemaCache.writeNew(packed, dataDir)
-      ZoneMap.write(spark, dataDir, (keyCols ++ zCols).distinct)
-      TxLog.Prepared(dataDir = dataDir,
-        meta = m.meta + ("zorder" -> zCols.mkString(",")),
-        written = Seq(dataDir))
-    } catch { case CompactSkip(v) => v }
+    }
+    compactWith(spark, root, writer, "compactTxZOrder", targetRowsPerFile, maxAttempts,
+        recoverTornAfterMs) { m0 =>
+      val m = requireSingleTable(m0, root)
+      if (m.deltas.size < minDeltas) None
+      else Some(Fold(mergedTx(spark, m), zorder, root, dir => TxLog.Prepared(dataDir = dir,
+        meta = m.meta + ("zorder" -> zCols.mkString(",")), written = Seq(dir))))
+    }
   }
 
   /** Point lookup on an arbitrary column, BLOOM pruned — the
     * [[readTxRangeOn]] twin for columns with no layout correlation
-    * (uuid-ish ids, foreign keys) where zone ranges cannot prune:
+    * (uuid-ish ids, foreign keys) where min/max ranges cannot prune:
     * scans only the files whose footers ([[Footers]]: the parquet
     * bloom filters `bloomCols` asks the writers for, dictionaries,
     * min/max) admit `value` — ~1 + fpp·F of F files, decided
@@ -352,9 +359,9 @@ object PkTableSink {
     *     (mergeTx writes per-delta blooms) are scanned for rows
     *     matching `value`, aggregated to the candidates' first-key
     *     bounds (a scalar job ∝ matching files);
-    *  2. key resolution: the zone-map-pruned latest-per-key merge
-    *     over that key range (sound — key zones prune correctly
-    *     through deltas), exact-filtered to `value`.
+    *  2. key resolution: the footer-pruned latest-per-key merge over
+    *     that key range (sound — key ranges prune correctly through
+    *     deltas), exact-filtered to `value`.
     * Any key whose LATEST row matches is bloom-found in pass 1 (no
     * false negatives) and fully resolved in pass 2; a key whose match
     * was superseded is eliminated by the final filter. File opens
@@ -363,7 +370,7 @@ object PkTableSink {
   def readTxPointOn(spark: SparkSession, root: String, schemaOf: => DataFrame,
                     colName: String, value: String): DataFrame =
     prunedRead(spark, root, schemaOf, "readTxPointOn",
-      col(colName).cast("string") === value, bloomed(spark, _, colName, value))
+      col(colName).cast("string") === value, Footers.pruneDir(spark, _, colName, value, value))
 
   /** The pruned non-key read behind [[readTxPointOn]] and
     * [[readTxRangeOn]]: rows matching `cond`, `pruned` picking each
@@ -396,11 +403,6 @@ object PkTableSink {
   private def storedKeys(meta: Map[String, String]): Seq[String] =
     meta.get(MetaKeys).filter(_.nonEmpty).getOrElse(throw new IllegalStateException(
       "manifest has no stored key columns")).split(",").toSeq
-
-  /** The files of `dir` whose footers admit `colName` = `value`. */
-  private def bloomed(spark: SparkSession, dir: String, colName: String,
-                      value: String): Seq[String] =
-    Footers.pruneFiles(spark, Footers.dataFiles(spark, dir), colName, value)
 
   /** `files` of immutable Tx dir `dir`, read with the dir's recorded
     * schema — no per-read inference job. */
@@ -436,16 +438,6 @@ object PkTableSink {
     u.select(fields.map(f => if (u.columns.contains(f.name)) col(f.name)
       else lit(null).cast(f.dataType).as(f.name)) ++
       u.columns.filterNot(c => fields.exists(_.name == c)).map(col): _*)
-  }
-
-  /** The files of `dir` that can hold a first-key value in [lo,hi]: the
-    * zone map's pick, and for a POINT (lo == hi) only those whose
-    * footers admit the key — a sparse delta's key zone spans nearly
-    * the whole domain, but mergeTx blooms the first key column. */
-  private def keyFiles(spark: SparkSession, dir: String, keyCol: String,
-                       lo: Any, hi: Any): Seq[String] = {
-    val zoned = ZoneMap.pruneFiles(spark, dir, keyCol, lo.toString, hi.toString)
-    if (lo != hi) zoned else Footers.pruneFiles(spark, zoned, keyCol, String.valueOf(lo))
   }
 
   /** PARTIAL-COLUMN upsert — the StarRocks primary-key
@@ -505,11 +497,8 @@ object PkTableSink {
         s"mergeTxPartial: change columns ${unknown.mkString(", ")} do not " +
           s"exist in the base table (known value columns: " +
           s"${baseValueCols.toSeq.sorted.mkString(", ")})")
-      val next = m.version + 1
-      val nonce = java.util.UUID.randomUUID().toString.take(8)
-      val deltaDir = s"$root/p$next-$writer-$nonce"
+      val deltaDir = s"$root/p${m.version + 1}-$writer-${nonce()}"
       graft.SchemaCache.writeNew(chg, deltaDir)
-      ZoneMap.write(spark, deltaDir, keyCols)
       val dirName = deltaDir.substring(deltaDir.lastIndexOf('/') + 1)
       TxLog.Prepared(dataDir = m.dataDir, deltas = m.deltas :+ deltaDir,
         meta = m.meta + (s"$PcolsPrefix$dirName" -> present.mkString(",")),
@@ -580,28 +569,14 @@ object PkTableSink {
                        targetRowsPerFile: Long = 4L << 20,
                        maxAttempts: Int = 5,
                        recoverTornAfterMs: Long = 60000L): Long =
-    TxLog.commitWith(spark, root, writer, maxAttempts, recoverTornAfterMs) { base =>
-      val m = requireSingleTable(base.getOrElse(throw new IllegalStateException(
-        s"compactTxPartial: no committed version under $root")), root)
+    compactWith(spark, root, writer, "compactTxPartial", targetRowsPerFile, maxAttempts,
+        recoverTornAfterMs) { m0 =>
+      val m = requireSingleTable(m0, root)
       val (live, dead) = partialMerge(spark, m)
       val full = live.withColumn(Tombstone, lit(false))
         .unionByName(dead.withColumn(Tombstone, lit(true)))
-      val next = m.version + 1
-      val nonce = java.util.UUID.randomUUID().toString.take(8)
-      val dataDir = s"$root/t$next-$writer-$nonce"
-      val rows = full.count()
-      val nFiles = math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-      val keyCols = m.meta.get(MetaKeys).map(_.split(",").toSeq).getOrElse(Nil)
-      val packed =
-        if (keyCols.nonEmpty)
-          full.repartitionByRange(nFiles, keyCols.map(col): _*)
-            .sortWithinPartitions(keyCols.map(col): _*)
-        else full.repartition(nFiles)
-      graft.SchemaCache.writeNew(packed, dataDir)
-      ZoneMap.write(spark, dataDir, keyCols)
-      TxLog.Prepared(dataDir = dataDir,
-        meta = m.meta.filterNot(_._1.startsWith(PcolsPrefix)),
-        written = Seq(dataDir))
+      Some(Fold(full, byKey(keyColsOf(m.meta)), root, dir => TxLog.Prepared(dataDir = dir,
+        meta = m.meta.filterNot(_._1.startsWith(PcolsPrefix)), written = Seq(dir))))
     }
 
   /** CHANGE FEED between two committed versions (Delta CDF /
@@ -617,7 +592,7 @@ object PkTableSink {
     * no-compaction-between case) both snapshots are first semi-joined
     * to the keys TOUCHED by the new deltas, so the diff's shuffle is
     * ∝ touched keys, never table keys (the scans stay full-width but
-    * zone-sorted bases make the semi-join's exchange the only real
+    * key-sorted bases make the semi-join's exchange the only real
     * cost). Across a compaction boundary the dir lists diverge and
     * the diff falls back to the full snapshot pair — correct, just
     * unpruned; vacuumed `from` dirs fail like [[readTxAt]].
@@ -785,15 +760,12 @@ object PkTableSink {
                              run: (() => Unit) => (() => Unit)): StagedBatch = {
     require(!groupRoot.contains(","), s"groupRoot may not contain ',': $groupRoot")
     validGroupTableName(table)
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val dir = s"$groupRoot/$table/d$next-$writer-$nonce"
+    val dir = s"$groupRoot/$table/d$next-$writer-${nonce()}"
     val chg = compactedWithTomb(b)
-    StagedBatch(table, dir, groupMetaOf(table, b.keyCols, b.versionCols), run { () =>
-      // the recorded schema spares the dir's first reader (next
-      // round's merge-on-read) its inference job
-      graft.SchemaCache.writeNew(chg, dir)
-      ZoneMap.write(spark, dir, b.keyCols)
-    })
+    // the recorded schema spares the dir's first reader (next round's
+    // merge-on-read) its inference job
+    StagedBatch(table, dir, groupMetaOf(table, b.keyCols, b.versionCols),
+      run(() => graft.SchemaCache.writeNew(chg, dir)))
   }
 
   /** Run `f` now on the caller's thread; its failure is deferred to the
@@ -911,26 +883,18 @@ object PkTableSink {
                      writer: String, minDeltas: Int = 0,
                      targetRowsPerFile: Long = 4L << 20,
                      maxAttempts: Int = 5, recoverTornAfterMs: Long = 60000L): Long =
-    try TxLog.commitWith(spark, groupRoot, writer, maxAttempts, recoverTornAfterMs) { base =>
-      val m = base.getOrElse(throw new IllegalStateException(
-        s"compactTxGroup: no committed version under $groupRoot"))
+    compactWith(spark, groupRoot, writer, "compactTxGroup", targetRowsPerFile, maxAttempts,
+        recoverTornAfterMs) { m =>
       val dirs = m.tables.getOrElse(table, throw new IllegalArgumentException(
         s"compactTxGroup: no table '$table' under $groupRoot")).split(",").toSeq
-      if (dirs.size < math.max(minDeltas, 2)) throw CompactSkip(m.version)
-      val keyCols = m.meta.getOrElse(s"$MetaKeys.$table", "").split(",").toSeq
-      val merged = mergeDirs(spark, dirs, groupTableMeta(m, table))
-      val next = m.version + 1
-      val nonce = java.util.UUID.randomUUID().toString.take(8)
-      val dataDir = s"$groupRoot/$table/t$next-$writer-$nonce"
-      val rows = merged.count()
-      val nFiles = math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-      val packed = merged.repartitionByRange(nFiles, keyCols.map(col): _*)
-        .sortWithinPartitions(keyCols.map(col): _*)
-      graft.SchemaCache.writeNew(packed, dataDir)
-      ZoneMap.write(spark, dataDir, keyCols)
-      TxLog.Prepared(tables = m.tables + (table -> dataDir), meta = m.meta,
-        written = Seq(dataDir))
-    } catch { case CompactSkip(v) => v }
+      if (dirs.size < math.max(minDeltas, 2)) None
+      else {
+        val meta = groupTableMeta(m, table)
+        Some(Fold(mergeDirs(spark, dirs, meta), byKey(storedKeys(meta)), s"$groupRoot/$table",
+          dir => TxLog.Prepared(tables = m.tables + (table -> dir), meta = m.meta,
+            written = Seq(dir))))
+      }
+    }
 
   /** Live contents of one table of a group-committed snapshot —
     * merge-on-read over the table's dir list. */
@@ -938,19 +902,13 @@ object PkTableSink {
                   schemaOf: => DataFrame): DataFrame =
     readGroupAt(spark, TxLog.current(spark, groupRoot), table, schemaOf, None)
 
-  /** Like [[readTxGroup]] but RETAINING stored tombstones, surfaced
-    * as boolean `deletedCol` (false when the table predates deletes).
-    * For maintenance jobs whose own derived state must see deleted
-    * keys' versions — e.g. incremental view maintenance, where a
-    * tombstone's version is what stops a straggler insert from
-    * diverging the view from the table. */
-  def readTxGroupAll(spark: SparkSession, groupRoot: String, table: String,
-                     schemaOf: => DataFrame, deletedCol: String): DataFrame =
-    readGroupAt(spark, TxLog.current(spark, groupRoot), table, schemaOf, Some(deletedCol))
-
-  /** One group table as of manifest `m` ([[readTxGroup]] without
-    * `deletedCol`, [[readTxGroupAll]] with it); `schemaOf`'s empty
-    * frame when `m` is absent or lacks the table. */
+  /** One group table as of manifest `m` — live rows, or with
+    * `deletedCol` every row, stored tombstones surfaced as that boolean
+    * column (false when the table predates deletes), for maintenance
+    * whose derived state must see deleted keys' versions (an MV
+    * round's state, where a tombstone's version stops a straggler
+    * insert). `schemaOf`'s empty frame when `m` is absent or lacks the
+    * table. */
   private[graft] def readGroupAt(spark: SparkSession, m: Option[TxLog.Manifest],
                                  table: String, schemaOf: => DataFrame,
                                  deletedCol: Option[String]): DataFrame =
@@ -977,29 +935,40 @@ object PkTableSink {
     * versions, so reference-counting (not age) decides data deletion.
     */
   def vacuumTxGroup(spark: SparkSession, groupRoot: String,
-                    keepVersions: Int = 2): Seq[Long] = {
+                    keepVersions: Int = 2): Seq[Long] =
+    vacuumWith(spark, groupRoot, keepVersions, "vacuumTxGroup", _ => ())
+
+  /** The reference-counting retention behind [[vacuumTx]] and
+    * [[vacuumTxGroup]]: every manifest is read and passed to `refuse`
+    * before any delete; then each victim's manifest is deleted, and
+    * after it the dirs (`dataDir +: deltas` plus every table's dir
+    * list) that no kept manifest references. Returns the versions
+    * removed. */
+  private def vacuumWith(spark: SparkSession, root: String, keepVersions: Int, op: String,
+                         refuse: TxLog.Manifest => Unit): Seq[Long] = {
     require(keepVersions >= 1, "must keep at least the current version")
-    val fs = fsOf(spark, groupRoot)
-    // table values may be comma-joined dir LISTS (IvfIndex deltas)
+    val fs = fsOf(spark, root)
     def dirsOf(m: TxLog.Manifest): Seq[String] =
-      (m.tables.values.toSeq.flatMap(_.split(",")) :+ m.dataDir)
-        .filter(_.nonEmpty)
-    val all = TxLog.versions(spark, groupRoot)
-    val victims = all.dropRight(keepVersions)
+      ((m.dataDir +: m.deltas) ++ m.tables.values.flatMap(_.split(","))).filter(_.nonEmpty)
+    val all = TxLog.versions(spark, root).map(v => v -> TxLog.at(spark, root, v))
+    all.flatMap(_._2).foreach(refuse)
+    val (victims, kept) = all.splitAt(all.size - keepVersions)
     // a destructive op must be FAIL-SAFE on read errors: a kept
     // manifest that can't be re-read would silently drop its dirs
     // from the reference count and let the loop delete live data
-    val keptDirs = all.takeRight(keepVersions)
-      .map(v => TxLog.at(spark, groupRoot, v).getOrElse(throw new IllegalStateException(
-        s"vacuumTxGroup: kept manifest $v under $groupRoot is unreadable — aborting")))
-      .flatMap(dirsOf).toSet
-    victims.foreach { v =>
-      val m = TxLog.at(spark, groupRoot, v)
-      if (TxLog.delete(spark, groupRoot, v))
-        m.foreach(mf => dirsOf(mf).filterNot(keptDirs)
+    val keptDirs = kept.flatMap { case (v, m) => dirsOf(m.getOrElse(
+      throw new IllegalStateException(s"$op: kept manifest $v under $root is unreadable — aborting")))
+    }.toSet
+    victims.foreach { case (v, m) =>
+      // manifest FIRST, and only touch data once the manifest is
+      // confirmed gone: a crash or failed delete must leave an
+      // orphaned (harmless) data dir, never a live manifest pointing
+      // at deleted data
+      if (TxLog.delete(spark, root, v))
+        m.foreach(dirsOf(_).filterNot(keptDirs)
           .foreach(d => fs.delete(new org.apache.hadoop.fs.Path(d), true)))
     }
-    victims
+    victims.map(_._1)
   }
 
   private def dropTombstones(df: DataFrame): DataFrame =
@@ -1146,20 +1115,20 @@ object PkTableSink {
       .select(columns.map(col): _*)
   }
 
-  /** Point/range lookup on a [[TxLog]]-backed table, ZONE-MAP PRUNED:
+  /** Point/range lookup on a [[TxLog]]-backed table, FOOTER PRUNED:
     * resolves the key range [lo,hi] (inclusive, on the table's FIRST
-    * key column) against each dir's `_zonemap` sidecar and scans ONLY
-    * the files whose recorded range can match — after [[compactTx]]'s
-    * key-range-sorted bin-packing that is typically one file per dir,
-    * so a point lookup on a million-file table reads a handful of
-    * files instead of listing-and-opening every footer.
+    * key column) against each dir's parquet footers ([[Footers]]:
+    * min/max, dictionary, and for a point the bloom) and scans ONLY
+    * the files that can match — after [[compactTx]]'s key-range-sorted
+    * bin-packing that is typically one file per dir. The probe opens
+    * each file's footer on the driver, with zero jobs.
     *
     * Correctness under merge-on-read: every stored version of a key k
-    * lives in files whose [min,max] contains k, so pruning by zone can
-    * never hide a newer version from the latest-per-key merge; keys
-    * outside [lo,hi] that ride along in kept files are filtered after
-    * the merge. Dirs without a sidecar (legacy) scan fully. Returns
-    * the same rows as `readTx(...).where(key between lo and hi)`.
+    * lives in files whose [min,max] contains k, so pruning can never
+    * hide a newer version from the latest-per-key merge; keys outside
+    * [lo,hi] that ride along in kept files are filtered after the
+    * merge. Returns the same rows as
+    * `readTx(...).where(key between lo and hi)`.
     */
   def readTxRange(spark: SparkSession, root: String, schemaOf: => DataFrame,
                   lo: Long, hi: Long): DataFrame =
@@ -1185,15 +1154,15 @@ object PkTableSink {
       }
     }.getOrElse(schemaOf.limit(0))
 
-  // key-pruned ([[keyFiles]]) latest-per-key merge over an ordered dir
-  // list; bounds are Any (long/string/double key domains) — the probes
-  // use their canonical string rendering, the row filter a typed lit
+  // footer-pruned latest-per-key merge over an ordered dir list;
+  // bounds are Any (long/string/double/date key domains) — the probe
+  // reads them as the column's type, the row filter as a typed lit
   private def readPrunedDirs(spark: SparkSession, dirs: Seq[String],
                              keys: Seq[String], vers: Seq[String],
                              lo: Any, hi: Any): DataFrame = {
     val keyCol = keys.head
     val perDir = dirs.zipWithIndex.flatMap { case (d, i) =>
-      val files = keyFiles(spark, d, keyCol, lo, hi)
+      val files = Footers.pruneDir(spark, d, keyCol, lo, hi)
       if (files.isEmpty) None
       else Some(readFiles(spark, d, files).withColumn(CommitSeq, lit(i.toLong)))
     }
@@ -1211,7 +1180,7 @@ object PkTableSink {
     }
   }
 
-  /** Zone-map pruning decision for [lo,hi] on a table's first key
+  /** Footer pruning decision for [lo,hi] on a table's first key
     * column, without reading data: (files that would be scanned, total
     * data files across the current version's dirs). For plan asserts
     * and ops introspection. */
@@ -1221,15 +1190,14 @@ object PkTableSink {
     pruneStatsOn(spark, root, m.meta(MetaKeys).split(",").head, lo, hi)
   }
 
-  /** [[pruneStats]] on an arbitrary recorded zone column (a
-    * [[compactTxZOrder]] clustering column, typically). */
-  def pruneStatsOn(spark: SparkSession, root: String, zoneCol: String,
+  /** [[pruneStats]] on any column (a [[compactTxZOrder]] clustering
+    * column, typically). */
+  def pruneStatsOn(spark: SparkSession, root: String, column: String,
                    lo: Long, hi: Long): (Seq[String], Int) = {
     val m = committed(spark, root)
     val dirs = m.dataDir +: m.deltas
     val total = dirs.map(Footers.dataFiles(spark, _).size).sum
-    (dirs.flatMap(d => ZoneMap.pruneFiles(spark, d, zoneCol, lo.toString, hi.toString)),
-      total)
+    (dirs.flatMap(Footers.pruneDir(spark, _, column, lo, hi)), total)
   }
 
   /** Pruning decision of the TWO-PASS point lookup ([[readTxPointOn]]
@@ -1243,35 +1211,33 @@ object PkTableSink {
     val m = committed(spark, root)
     val dirs = m.dataDir +: m.deltas
     val total = dirs.map(Footers.dataFiles(spark, _).size).sum
-    val pass1 = dirs.map(d => d -> bloomed(spark, d, colName, value)).toMap
+    val pass1 = dirs.map(d => d -> Footers.pruneDir(spark, d, colName, value, value)).toMap
     val keyCol = m.meta(MetaKeys).split(",").head
     val pass2 = candidateKeyBounds(spark, dirs, keyCol,
       col(colName).cast("string") === value, pass1) match {
       case None => Nil
-      case Some((lo, hi)) => dirs.flatMap(keyFiles(spark, _, keyCol, lo, hi))
+      case Some((lo, hi)) => dirs.flatMap(Footers.pruneDir(spark, _, keyCol, lo, hi))
     }
     (dirs.flatMap(pass1), pass2, total)
   }
 
-  /** Range read pruned on an ARBITRARY recorded zone column — the read
-    * side of [[compactTxZOrder]] (the clustering columns are exactly
-    * the non-key columns worth range-scanning). Zone pruning on a
+  /** Range read pruned on ANY column by the footers' min/max — the
+    * read side of [[compactTxZOrder]] (the clustering columns are
+    * exactly the non-key columns worth range-scanning). Pruning on a
     * non-key column in ONE pass is only sound when no delta can
     * supersede a pruned base row, so: a fully-compacted table (single
-    * dir) scans just the zone-matching files; a table with DELTAS
+    * dir) scans just the matching files; a table with DELTAS
     * OUTSTANDING runs the same two-pass scheme as [[readTxPointOn]] —
-    * zone-pruned candidate discovery over every layer (mergeTx
-    * `statsCols` records the column in per-delta zone maps; a delta
-    * without recorded stats contributes all its batch-sized files,
-    * still correct), then the key-zone-pruned latest-per-key merge
-    * over the candidates' key range, re-filtered exactly. Key-column
-    * ranges should use [[readTxRange]], which prunes correctly
-    * through deltas in one pass.
+    * footer-pruned candidate discovery over every layer, then the
+    * key-pruned latest-per-key merge over the candidates' key range,
+    * re-filtered exactly. Key-column ranges should use
+    * [[readTxRange]], which prunes correctly through deltas in one
+    * pass.
     */
   def readTxRangeOn(spark: SparkSession, root: String, schemaOf: => DataFrame,
-                    zoneCol: String, lo: Long, hi: Long): DataFrame =
-    prunedRead(spark, root, schemaOf, "readTxRangeOn", col(zoneCol).between(lo, hi),
-      ZoneMap.pruneFiles(spark, _, zoneCol, lo.toString, hi.toString))
+                    column: String, lo: Long, hi: Long): DataFrame =
+    prunedRead(spark, root, schemaOf, "readTxRangeOn", col(column).between(lo, hi),
+      Footers.pruneDir(spark, _, column, lo, hi))
 
   /** Live contents as of a specific committed version (time travel). */
   def readTxAt(spark: SparkSession, root: String, version: Long): DataFrame =
@@ -1288,32 +1254,8 @@ object PkTableSink {
     * commit carries them forward — so deletion must reference-count,
     * never age out a dir by the version that first wrote it. Returns
     * the versions removed. */
-  def vacuumTx(spark: SparkSession, root: String, keepVersions: Int = 2): Seq[Long] = {
-    require(keepVersions >= 1, "must keep at least the current version")
-    val fs = fsOf(spark, root)
-    val all = TxLog.versions(spark, root)
-    // fail fast BEFORE any destructive step if this is a group/index
-    // root — those need the group vacuum's table-dir handling
-    all.flatMap(v => TxLog.at(spark, root, v)).foreach(requireSingleTable(_, root))
-    def dirsOf(m: TxLog.Manifest): Seq[String] = m.dataDir +: m.deltas
-    val victims = all.dropRight(keepVersions)
-    // a destructive op must be FAIL-SAFE on read errors: a kept
-    // manifest that can't be re-read would silently drop its dirs
-    // from the reference count and let the loop delete live data
-    val keptDirs = all.takeRight(keepVersions)
-      .map(v => TxLog.at(spark, root, v).getOrElse(throw new IllegalStateException(
-        s"vacuumTx: kept manifest $v under $root is unreadable — aborting")))
-      .flatMap(dirsOf).toSet
-    victims.foreach { v =>
-      // manifest FIRST, and only touch data once the manifest is
-      // confirmed gone: a crash or failed delete must leave an
-      // orphaned (harmless) data dir, never a live manifest pointing
-      // at deleted data
-      val m = TxLog.at(spark, root, v)
-      if (TxLog.delete(spark, root, v))
-        m.foreach(mf => dirsOf(mf).filterNot(keptDirs)
-          .foreach(d => fs.delete(new org.apache.hadoop.fs.Path(d), true)))
-    }
-    victims
-  }
+  def vacuumTx(spark: SparkSession, root: String, keepVersions: Int = 2): Seq[Long] =
+    // a group/index root needs the group vacuum's table-dir handling:
+    // refused before any destructive step
+    vacuumWith(spark, root, keepVersions, "vacuumTx", requireSingleTable(_, root))
 }

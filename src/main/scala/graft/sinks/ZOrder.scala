@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   * per-column global sort. Heavily skewed columns concentrate buckets
   * the way they concentrate values — rank-based bucketing (a
   * range-partition-id pass per column) is the upgrade path if a
-  * production corpus needs it; the zone-map contract is unaffected
-  * because pruning reads RECORDED file min/max, never the bucketing.
+  * production corpus needs it; pruning is unaffected because it reads
+  * the files' footer min/max, never the bucketing.
   *
   * All ops are plain integer Catalyst expressions inside whole-stage
   * codegen.

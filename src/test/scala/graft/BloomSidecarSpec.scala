@@ -36,7 +36,7 @@ class BloomSidecarSpec extends SparkSpec {
     val refs = (0L until 2000L by 97L).map(i => (i * 48271L + 11L) % 1000000007L)
     var scannedTotal = 0
     refs.foreach { r =>
-      val files = Footers.pruneFiles(spark, Footers.dataFiles(spark, dir), "ref", r.toString)
+      val files = Footers.pruneDir(spark, dir, "ref", r.toString, r.toString)
       scannedTotal += files.size
       val got = PkTableSink.readTxPointOn(spark, root, rows().drop("del"),
         "ref", r.toString).select("ref").as[Long].collect()
@@ -94,7 +94,7 @@ class BloomSidecarSpec extends SparkSpec {
   }
 
   test("delta-outstanding range reads prune via per-delta zone stats") {
-    // statsCols records a non-key column in every delta's zone map, so
+    // every delta's footers record min/max of every column, so
     // readTxRangeOn two-passes instead of full-merging a hot table
     val root = freshRoot()
     // val5 ascends with id (range-correlated) — compact sorts by id so
@@ -102,7 +102,7 @@ class BloomSidecarSpec extends SparkSpec {
     val base = (0L until 2000L).map(i => (i, 1L, i * 5, s"v$i", false))
       .toDF("id", "ver", "val5", "v", "del")
     PkTableSink.mergeTx(spark, root, base, Seq("id"), Seq("ver"), "del",
-      writer = "w", statsCols = Seq("val5"))
+      writer = "w")
     PkTableSink.compactTx(spark, root, "w", targetRowsPerFile = 200)
     PkTableSink.mergeTx(spark, root,
       Seq((50L, 2L, 99999L, "moved", false)).toDF("id", "ver", "val5", "v", "del"),
@@ -147,7 +147,7 @@ class BloomSidecarSpec extends SparkSpec {
     val byFile = spark.read.parquet(dir).select(col("grp"), input_file_name().as("f"))
       .distinct().collect().map(r => (r.getLong(0), new org.apache.hadoop.fs.Path(r.getString(1)).getName))
     (0L until 8L).foreach { g =>
-      val kept = Footers.pruneFiles(spark, files, "grp", g.toString)
+      val kept = Footers.pruneDir(spark, dir, "grp", g.toString, g.toString)
         .map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
       val needed = byFile.filter(_._1 == g).map(_._2).toSet
       assert(needed.subsetOf(kept), s"grp=$g: a file holding the value was pruned")

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.cdc.{MaterializedAgg, MaterializedJoin, MaterializedTopK}
+import graft.ops.{GraphIndex, IvfIndex, LshIndex}
 import graft.sinks.{PkTableSink, TxLog}
 import graft.streaming.KmvMv
 
@@ -18,10 +19,11 @@ class SchemaRecordSpec extends SparkSpec {
 
   /** Run `write` against `root` and check every dir it added: nothing
     * has read them yet, so a job-free schema can only be a record. */
-  private def checkNewDirs(root: String, expectAtLeast: Int)(write: => Any): Unit = {
+  private def checkNewDirs(root: String, expectAtLeast: Int,
+                           skip: String => Boolean = _ => false)(write: => Any): Unit = {
     val before = TxLog.current(spark, root).map(dirsOf).getOrElse(Set.empty)
     write
-    val added = dirsOf(TxLog.current(spark, root).get) -- before
+    val added = (dirsOf(TxLog.current(spark, root).get) -- before).filterNot(skip)
     assert(added.size >= expectAtLeast, s"expected new dirs under $root, got $added")
     added.foreach { d =>
       val (recorded, jobs) = JobCount(spark)(SchemaCache.schemaOf(spark, d))
@@ -56,7 +58,7 @@ class SchemaRecordSpec extends SparkSpec {
     // lack the column a later commit added, and read it as null
     val root = TestTmp.dir("schrec").toString + "/wide"
     def merge(df: DataFrame) = PkTableSink.mergeTx(spark, root, df, Seq("k"), Seq("ver"),
-      "del", writer = "w", bloomCols = Seq("g"), statsCols = Seq("ver"))
+      "del", writer = "w", bloomCols = Seq("g"))
     merge(b1)
     merge(chg((3L, 1L, "c", 1.0, false)).withColumn("note", lit("n")))
     merge(chg((4L, 1L, "d", 2.0, false)).withColumn("note", lit("m")))
@@ -96,5 +98,35 @@ class SchemaRecordSpec extends SparkSpec {
     // a sketch MV keeps no key state: one mv dir, with a binary sk column
     rounds(s"$base/kmv", dirs = 1)((b, id) => KmvMv.maintainTx(s"$base/kmv", b, id, Seq("g"), col("k"),
       writer = "j"))
+  }
+
+  test("the LSH, IVF and graph indexes record the schemas of their unpartitioned dirs") {
+    val base = TestTmp.dir("schrec").toString
+    val docs = (0L until 40L).map(i => (i, s"doc ${i % 6} shares words with doc ${i % 4}"))
+      .toDF("id", "text")
+    val lsh = s"$base/lsh"
+    checkNewDirs(lsh, 2)(LshIndex.build(docs.where(col("id") < 20), col("id"), col("text"), lsh))
+    checkNewDirs(lsh, 2)(LshIndex.add(docs.where(col("id") >= 20), col("id"), col("text"), lsh))
+    checkNewDirs(lsh, 2)(LshIndex.compact(spark, lsh))
+
+    val vecs = (0L until 60L).map(i => (i, Seq((i % 7).toDouble, (i % 5).toDouble, 1.0 + i % 3)))
+      .toDF("id", "vec")
+    val gone = vecs.where(col("id") < 5).select("id")
+    // the IVF vectors dir is partitioned by cell and stays on inference
+    val ivf = s"$base/ivf"
+    def cellPartitioned(d: String): Boolean = {
+      val p = new org.apache.hadoop.fs.Path(d)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+        .exists(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
+    }
+    checkNewDirs(ivf, 1, cellPartitioned)(IvfIndex.build(vecs, col("id"), col("vec"), ivf, k = 2))
+    checkNewDirs(ivf, 1, cellPartitioned)(IvfIndex.delete(spark, ivf, gone, col("id")))
+    checkNewDirs(ivf, 1, cellPartitioned)(IvfIndex.retrain(spark, ivf, k = 2))
+
+    val graph = s"$base/graph"
+    checkNewDirs(graph, 2)(GraphIndex.build(vecs.where(col("id") < 40), col("id"), col("vec"), graph))
+    checkNewDirs(graph, 2)(GraphIndex.add(vecs.where(col("id") >= 40), col("id"), col("vec"), graph))
+    checkNewDirs(graph, 1)(GraphIndex.delete(spark, graph, gone, col("id")))
+    checkNewDirs(graph, 2)(GraphIndex.compact(spark, graph))
   }
 }

@@ -54,7 +54,6 @@ class ZOrderSpec extends SparkSpec {
     // range intersects every file
     val (scanKb, totalK) = PkTableSink.pruneStatsOn(spark, rootK, "b", 10, 13)
     assert(totalK >= 12, s"expected a many-file base, got $totalK")
-    // (id files don't even record b zones: keyCols-only sidecar)
     assert(scanKb.size === totalK, "key-sorted layout cannot prune on b")
 
     // z-ordered: both a and b ranges prune to a strict subset (~√F

@@ -1,10 +1,11 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.sinks.{PkTableSink, TxLog, ZoneMap}
+import graft.sinks.{Footers, PkTableSink, TxLog}
 
-/** D14: zone-map sidecars + pruned point/range reads on the
-  * transactional PK lake. */
+/** D14: zone-map pruning on the transactional PK lake — the per-file
+  * min/max every parquet footer records, probed on the driver, prunes
+  * point and range reads; no commit writes a stats file. */
 class ZoneMapSpec extends SparkSpec {
   import spark.implicits._
 
@@ -64,7 +65,7 @@ class ZoneMapSpec extends SparkSpec {
       Seq("id"), Seq("ver"), "del", writer = "w")
     val m = TxLog.current(spark, root).get
     assert(m.deltas.size == 1)
-    val deltaFiles = ZoneMap.pruneFiles(spark, m.deltas.head, "id", "50", "60")
+    val deltaFiles = Footers.pruneDir(spark, m.deltas.head, "id", 50L, 60L)
     assert(deltaFiles.isEmpty, "far-away delta should prune to zero files")
     val got = PkTableSink.readTxRange(spark, root, batch().drop("del"), 50, 60)
       .select("id").as[Long].collect().toSet
@@ -77,12 +78,14 @@ class ZoneMapSpec extends SparkSpec {
       batch((0L until 200L).map(i => (i, 1L, s"a$i", false)): _*),
       Seq("id"), Seq("ver"), "del", writer = "w")
     val m = TxLog.current(spark, root).get
-    // simulate a pre-zone-map dir
+    // no commit writes a `_zonemap`; one left by an older writer is not
+    // a data file and is never read
     val sidecar = new java.io.File(s"${m.dataDir.stripPrefix("file:")}/_zonemap")
-    assert(!sidecar.exists() || sidecar.delete())
-    assert(ZoneMap.read(spark, m.dataDir).isEmpty)
-    val all = ZoneMap.pruneFiles(spark, m.dataDir, "id", "5", "5")
-    assert(all.nonEmpty, "no sidecar → all files scanned")
+    assert(!sidecar.exists(), "a commit wrote a _zonemap sidecar")
+    java.nio.file.Files.writeString(sidecar.toPath, "f=stale\tn=1\tid.kind=long\tid.min=900\tid.max=999\n")
+    assert(Footers.dataFiles(spark, m.dataDir).forall(!_.endsWith("_zonemap")))
+    val kept = Footers.pruneDir(spark, m.dataDir, "id", 5L, 5L)
+    assert(kept.nonEmpty, "the file holding id 5 is kept")
     val got = PkTableSink.readTxRange(spark, root, batch().drop("del"), 5, 5)
       .select("id", "v").as[(Long, String)].collect().toSet
     assert(got == Set((5L, "a5")))
@@ -105,20 +108,32 @@ class ZoneMapSpec extends SparkSpec {
     val m = TxLog.current(spark, root).get
     val dirs = m.tables("orders").split(",").toSeq
     assert(dirs.size == 2)
-    assert(ZoneMap.pruneFiles(spark, dirs(1), "id", "10", "20").isEmpty)
+    assert(Footers.pruneDir(spark, dirs(1), "id", 10L, 20L).isEmpty)
   }
 
   test("sidecar rides inside the data dir and survives the commit race loser's cleanup") {
+    // the zone map rides in the data files themselves: the
+    // footers of a committed dir carry its row count and key min/max
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
     val root = freshRoot()
     PkTableSink.mergeTx(spark, root,
       batch((0L until 50L).map(i => (i, 1L, s"a$i", false)): _*),
       Seq("id"), Seq("ver"), "del", writer = "w")
     val m = TxLog.current(spark, root).get
-    val stats = ZoneMap.read(spark, m.dataDir)
-    assert(stats.isDefined && stats.get.nonEmpty)
-    assert(stats.get.map(_.rows).sum == 50L)
-    val mn = stats.get.flatMap(_.mins.get("id")).map(_.toLong).min
-    val mx = stats.get.flatMap(_.maxs.get("id")).map(_.toLong).max
+    val files = Footers.dataFiles(spark, m.dataDir)
+    assert(files.nonEmpty && files.forall(_.endsWith(".parquet")), s"data files: $files")
+    assert(Footers.rowCount(spark, m.dataDir).contains(50L))
+    val conf = spark.sessionState.newHadoopConf()
+    val stats = files.flatMap { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f), conf))
+      try r.getRowGroups.asScala.map(_.getColumns.asScala.find(_.getPath.toDotString == "id")
+        .get.getStatistics)
+      finally r.close()
+    }.filter(_.hasNonNullValue)
+    val mn = stats.map(_.genericGetMin.asInstanceOf[java.lang.Long].longValue).min
+    val mx = stats.map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue).max
     assert(mn == 0L && mx == 49L)
   }
 }

@@ -28,6 +28,29 @@ class JobCountSpec extends SparkSpec {
     assert(PkTableSink.readTx(spark, root, batch(0L).drop("del")).count() == 75L)
   }
 
+  test("a mergeTx commit keyed on non-ASCII strings or on a decimal runs exactly one job") {
+    // no commit writes a stats file, so no key type sends one down a
+    // schema inference and a per-file stats job
+    def check(name: String, key: org.apache.spark.sql.Column): Unit = {
+      val root = TestTmp.dir("jobs").toString + s"/$name"
+      def batch(from: Long) = (from until from + 50L)
+        .map(i => (i, 1L, s"v$i", false)).toDF("i", "ver", "v", "del")
+        .withColumn("k", key).drop("i")
+        .coalesce(1)
+      def merge(from: Long) = PkTableSink.mergeTx(spark, root, batch(from), Seq("k"), Seq("ver"),
+        "del", writer = "w", compactAfterDeltas = Int.MaxValue)
+      val (_, baseJobs) = JobCount(spark)(merge(0L))
+      val (_, deltaJobs) = JobCount(spark)(merge(25L))
+      assert(baseJobs == 1, s"$name: base commit ran $baseJobs jobs")
+      assert(deltaJobs == 1, s"$name: delta commit ran $deltaJobs jobs")
+      assert(PkTableSink.readTx(spark, root, batch(0L).drop("del")).count() == 75L)
+    }
+    // min "é100000", max "ü100049": both ends non-ASCII
+    check("utf8", concat(when(col("i") % 2 === 0, lit("é")).otherwise(lit("ü")),
+      (col("i") + 100000L).cast("string")))
+    check("decimal", (col("i") * 1.25).cast("decimal(12,2)"))
+  }
+
   test("registerSketchSnapshot runs only its write's jobs, and MvDef.rows equals count()") {
     val base = TestTmp.dir("jobs").toString
     val (root, src, snap) = (s"$base/kmv", s"$base/src", s"$base/snap")
