@@ -46,6 +46,17 @@ object GraftSession {
       // nanos and convert at the loader (Tables.events)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // Janino compiles a generated class in 4-5 ms; the cache, keyed
+      // by the generated source, is what lets a steady round reuse it.
+      // Measured working set: one perfbench fresh_mixed cycle (lake
+      // merge, MV round, publish, point/range/MV-SQL reads) touches
+      // 150-175 distinct classes. With the cache at 100, 125 or 150
+      // entries steady batches recompiled 30-100 classes each, as
+      // least-recently-used eviction dropped them before the next
+      // batch; at 175 and above, 2 (CodegenMetrics counts per span,
+      // 4 vCPUs). 400 holds that set with room for the query mix;
+      // larger only adds heap. Static: read once, at first codegen.
+      .config("spark.sql.codegen.cache.maxEntries", "400")
 
   /** Post-create session setup that the Builder API cannot express:
     * registers the SQL-named aggregate surface (bitmap_* / mg_sketch —

@@ -1,13 +1,18 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import scala.collection.mutable
 
 /** Optimization-round measurement harness (guide §1): runs one named
   * query twice (untimed warm, then timed) with a job listener attached
   * and prints every Spark job's wall time + description, so the
   * job-count/overhead structure of the lifecycle gates is a table, not
-  * a guess. Not part of the driver contract — a diagnostic main.
+  * a guess. The header line also gives the timed run's Janino compiles
+  * and their time — driver-side codegen counters, no extra job — so a
+  * run that recompiles code its warm-up already compiled shows up as
+  * compile-bound. Not part of the driver contract — a diagnostic main.
   *
   * Usage: jrun.sh graft.JobProfile <sfDir> <query>[,<query>...]
   */
@@ -39,6 +44,9 @@ object JobProfile {
       }
     }
 
+    // Janino compiles in this JVM (driver and local executors)
+    def compileCount(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
     def exec(df: org.apache.spark.sql.DataFrame): Unit =
       df.queryExecution.toRdd.count()
 
@@ -47,12 +55,16 @@ object JobProfile {
       exec(fn(spark, sfDir)) // warm: JIT, codegen, footer caches
       jobs.synchronized { jobs.clear(); byId.clear() }
       spark.sparkContext.addSparkListener(listener)
+      val (compiles0, compileNs0) = (compileCount(), CodeGenerator.compileTime)
       val t0 = System.nanoTime()
       exec(fn(spark, sfDir))
       val total = (System.nanoTime() - t0) / 1e9
+      val compiles = compileCount() - compiles0
+      val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
       spark.sparkContext.removeSparkListener(listener)
       val snap = jobs.synchronized { jobs.toVector }
-      println(f"== $name: ${total}%.2f s, ${snap.size} jobs ==")
+      println(f"== $name: ${total}%.2f s, ${snap.size} jobs, $compiles compiles " +
+        f"(${compileMs}%.0f ms) ==")
       val byDesc = snap.groupBy(_.desc).map { case (d, js) =>
         (d, js.size, js.map(_.ms.max(0)).sum)
       }.toSeq.sortBy(-_._3)

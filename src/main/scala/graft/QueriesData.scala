@@ -1493,11 +1493,12 @@ object QueriesData {
     // overflow proof); RollingHashSpec pins kernel ≡ the
     // per-window-sum SQL form so both sides can only move together.
     "chunk_cdc" -> { (s, dir) =>
+      import org.apache.spark.sql.GraftSqlBridge
       import org.apache.spark.sql.graftshim.DatasetShim
       val d = Tables.documents(s, dir)
         .select(col("doc_id"), col("text"), length(col("text")).as("L"))
       val spans = d
-        .withColumn("bnds", DatasetShim.column(graft.functions.CdcBoundaries(
+        .withColumn("bnds", GraftSqlBridge.column(graft.functions.CdcBoundaries(
           DatasetShim.expression(col("text")))))
         .withColumn("starts", concat(array(lit(1)), transform(col("bnds"), b => b + 1)))
         .withColumn("ends", concat(col("bnds"), array(col("L"))))

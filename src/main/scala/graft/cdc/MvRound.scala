@@ -27,7 +27,10 @@ import graft.sinks.PkTableSink.TableBatch
   *     in ONE [[PkTableSink.mergeTxGroup]] manifest. Its claim fences
   *     the watermark against the base it lands on: a stalled zombie of
   *     a batch its restart already committed is refused there (its
-  *     dirs deleted) and the round returns false.
+  *     dirs deleted) and the round returns false;
+  *  6. FOLD: a table whose dir list the commit grew past
+  *     [[PkTableSink.CompactAfterDeltas]] deltas is compacted in a
+  *     commit of its own, so no round reads more layers than that.
   *
   * A live round lists the log twice: once to pin, once for the claim's
   * base. Single writer per `writer` id; different writers sharing a
@@ -85,6 +88,13 @@ private[graft] object MvRound {
       }
       PkTableSink.mergeTxGroup(spark, root, Map.empty, writer,
         extraMeta = meta + (wmKey -> batchId.toString), staged = staged ++ views)
+      // FOLD: a table whose list the commit grew to the lake's
+      // compaction depth is folded in its own commit, as mergeTx does;
+      // the depth is judged on the pinned lists, so no listing is added
+      val depth = PkTableSink.CompactAfterDeltas
+      (staged ++ views).map(_.table).filter(t =>
+        pinned.flatMap(_.tables.get(t)).exists(_.split(",").count(_.nonEmpty) >= depth))
+        .foreach(PkTableSink.compactTxGroup(spark, root, _, writer, minDeltas = depth))
       true
     } catch {
       case _: PkTableSink.StaleWatermark => false

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.graftshim.DatasetShim
 import graft.functions.BpeEncode
 
@@ -38,7 +39,7 @@ object Bpe {
 
   /** Apply a merge table to a words-array column (row-local). */
   def encode(words: Column, merges: Seq[(String, String)]): Column =
-    DatasetShim.column(BpeEncode(DatasetShim.expression(words), merges))
+    GraftSqlBridge.column(BpeEncode(DatasetShim.expression(words), merges))
 
   /** TRUE iterative BPE TRAINING (Sennrich et al. 2016's loop): round
     * r recounts adjacent pairs on the corpus AS TOKENIZED BY merges

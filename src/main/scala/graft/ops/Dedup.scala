@@ -498,8 +498,9 @@ object Dedup {
       .select(col("t0")).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bloom = r.stat.bloomFilter("t0", expectedShingles, fpp)
+    import org.apache.spark.sql.GraftSqlBridge
     import org.apache.spark.sql.graftshim.DatasetShim
-    val pruned = t.where(DatasetShim.column(
+    val pruned = t.where(GraftSqlBridge.column(
       graft.functions.BloomContains(DatasetShim.expression(col("t0")), bloom)))
     pruned.join(r, "t0")
       .groupBy(col("id"))
@@ -576,6 +577,7 @@ object Dedup {
   def editDistancePairs(df: DataFrame, id: Column, text: Column,
                         gramLen: Int = 6, maxHamming: Int = 3,
                         minEditSim: Double = 0.8): DataFrame = {
+    import org.apache.spark.sql.GraftSqlBridge
     import org.apache.spark.sql.graftshim.DatasetShim
     val bits = 64
     val nBands = maxHamming + 1
@@ -603,7 +605,7 @@ object Dedup {
     // the per-doc gram DP onto a single task (the shingleRows rule)
     val fpsIn = df.select(id.as("id"), text.as("__graft_t"))
       .repartition(df.sparkSession.sparkContext.defaultParallelism)
-    val fps = DatasetShim.column(graft.functions.SimHashGramsPair(
+    val fps = GraftSqlBridge.column(graft.functions.SimHashGramsPair(
       DatasetShim.expression(col("__graft_t")), gramLen))
     val sim = fpsIn.select(col("id"), fps.as("fps"),
         length(col("__graft_t")).cast("long").as("len"))
@@ -716,9 +718,10 @@ object Dedup {
     * bounds them from above). */
   def editDistanceBandRows(df: DataFrame, id: Column, text: Column,
                            gramLen: Int = 6, maxHamming: Int = 3): DataFrame = {
+    import org.apache.spark.sql.GraftSqlBridge
     import org.apache.spark.sql.graftshim.DatasetShim
     val sim = df.select(id.as("id"),
-      DatasetShim.column(graft.functions.SimHashGrams(
+      GraftSqlBridge.column(graft.functions.SimHashGrams(
         DatasetShim.expression(text), gramLen, "")).as("simhash"))
     simhashBandRows(sim, maxHamming, 64)
   }

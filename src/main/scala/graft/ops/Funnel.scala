@@ -205,8 +205,9 @@ object Funnel {
       if (maxEventsPerKey == Int.MaxValue) grouped
       else grouped.withColumn("evs",
         slice(array_sort(col("evs")), 1, maxEventsPerKey))
+    import org.apache.spark.sql.GraftSqlBridge
     import org.apache.spark.sql.graftshim.DatasetShim
-    val depthCol = DatasetShim.column(graft.functions.WindowFunnelMax(
+    val depthCol = GraftSqlBridge.column(graft.functions.WindowFunnelMax(
       DatasetShim.expression(col("evs")), steps, windowMicros, dedup,
       firstAnchorOnly))
     capped.select(col("key"), depthCol.as("depth"))

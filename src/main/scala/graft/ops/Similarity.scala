@@ -423,8 +423,9 @@ object Similarity {
     // unrolled 64-column formulation is identical math but costs the
     // planner a huge literal tree per query (measured 2s of the
     // query's wall time at sf0.1)
+    import org.apache.spark.sql.GraftSqlBridge
     import org.apache.spark.sql.graftshim.DatasetShim
-    val sigCol = DatasetShim.column(graft.functions.HyperplaneBands(
+    val sigCol = GraftSqlBridge.column(graft.functions.HyperplaneBands(
       DatasetShim.expression(col("v")), planes, planeBits))
     val banded = v.select(col("id"), col("v"), col("n2"),
       posexplode(sigCol).as(Seq("band", "bv")))
@@ -464,8 +465,9 @@ object Similarity {
     val planeBits = nPlanes / bands
     val planes = hyperplanes(nPlanes, 64)
     val v = df.select(id.as("id"), toDouble(vec).as("v")).withColumn("n2", normSq(col("v")))
+    import org.apache.spark.sql.GraftSqlBridge
     import org.apache.spark.sql.graftshim.DatasetShim
-    val sigCol = DatasetShim.column(graft.functions.HyperplaneBands(
+    val sigCol = GraftSqlBridge.column(graft.functions.HyperplaneBands(
       DatasetShim.expression(col("v")), planes, planeBits))
     val banded = v.select(col("id"), col("v"), col("n2"),
       posexplode(sigCol).as(Seq("band", "bv")))

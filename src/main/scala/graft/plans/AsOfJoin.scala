@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, Expression, GenericInternalRow, JoinedRow, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -145,6 +145,6 @@ object AsOfJoin {
       requireLong("left time", resolve(left, lPlan, leftTime)),
       requireLong("right time", resolve(right, rPlan, rightTime)),
       resolve(right, rPlan, rightTiebreak))
-    DatasetShim.ofRows(left.sparkSession, node)
+    GraftSqlBridge.ofRows(left.sparkSession, node)
   }
 }

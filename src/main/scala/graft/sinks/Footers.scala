@@ -1,7 +1,7 @@
 package graft.sinks
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.filter2.compat.{FilterCompat, RowGroupFilter}
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
@@ -39,10 +39,13 @@ private[graft] object Footers {
 
   /** The parquet data files directly under `dir` (sidecars, markers
     * and hidden files excluded); empty when `dir` is absent. */
-  def dataFiles(fs: FileSystem, dir: Path): Seq[Path] =
+  def dataFiles(fs: FileSystem, dir: Path): Seq[Path] = listData(fs, dir).map(_.getPath)
+
+  /** [[dataFiles]] with their file statuses, as a scan needs them. */
+  def listData(fs: FileSystem, dir: Path): Seq[FileStatus] =
     if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).toSeq.filter(_.isFile).map(_.getPath).filter { p =>
-      val n = p.getName; !n.startsWith("_") && !n.startsWith(".")
+    else fs.listStatus(dir).toSeq.filter { st =>
+      val n = st.getPath.getName; st.isFile && !n.startsWith("_") && !n.startsWith(".")
     }
 
   def dataFiles(spark: SparkSession, dir: String): Seq[String] = {
@@ -89,8 +92,14 @@ private[graft] object Footers {
     * `cast(colName as string) = value`). */
   def pruneDir(spark: SparkSession, dir: String, colName: String,
                lo: Any, hi: Any): Seq[String] = {
+    val keep = mayHold(spark, colName, lo, hi)
+    dataFiles(spark, dir).filter(f => keep(new Path(f)))
+  }
+
+  /** [[pruneDir]]'s probe as a test of one file. */
+  def mayHold(spark: SparkSession, colName: String, lo: Any, hi: Any): Path => Boolean = {
     val conf = spark.sessionState.newHadoopConf()
-    dataFiles(spark, dir).filter(f => mayContain(conf, new Path(f), colName, lo, hi))
+    mayContain(conf, _, colName, lo, hi)
   }
 
   private val Levels = Seq(RowGroupFilter.FilterLevel.STATISTICS,

@@ -1,5 +1,6 @@
 package graft.sinks
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.cdc.PkTable
@@ -63,7 +64,7 @@ object PkTableSink {
   // per-commit layering order for the read-time merge: among EQUAL
   // versions of a key, the later commit wins (deterministic, where
   // copy-on-write tie-break was unspecified)
-  private val CommitSeq = "__graft_commit_seq"
+  private val CommitSeq = LayeredScan.CommitSeq
 
   // fresh dir names: two writers (even with the same writer tag) never
   // share a dir, so a loser's cleanup only ever deletes its own files
@@ -86,41 +87,36 @@ object PkTableSink {
       s"$op: table has partial-update deltas outstanding — use " +
         "readTxPartial / compactTxPartial (or compact before whole-row ops)")
 
-  /** Latest-per-key view of base ∪ deltas (tombstones retained). */
+  /** Latest-per-key view of base ∪ deltas (tombstones retained), read
+    * as one layered scan ([[LayeredScan]]): the plan is the same at any
+    * delta depth. */
   private def mergeDirs(spark: SparkSession, dirs: Seq[String],
                         meta: Map[String, String],
                         project: Option[Seq[String]] = None): DataFrame = {
     requireNoPartial(meta, "whole-row merge")
-    // projection applied per dir, BELOW the union and the whole-row
-    // max_by: the latest-wins aggregate packs its payload into one
-    // struct, which blocks Catalyst's column pruning — so the narrow
-    // read must be requested here, where it reaches the parquet scan
-    // (see readTxCols). A widened table's older dirs simply lack some
-    // requested columns; the union fills them as null.
-    def rd(d: String) = {
-      // Tx dirs are immutable once written (nonce-named) — the cached
-      // read skips the per-open schema-inference job every consumer of
-      // every round otherwise pays (SchemaCache doc)
-      val df = graft.SchemaCache.read(spark, d)
-      project.fold(df)(want => df.select(
-        df.columns.filter(want.contains).map(col).toIndexedSeq: _*))
-    }
-    if (dirs.size == 1) rd(dirs.head)
-    else {
-      val keys = storedKeys(meta)
-      val vers = meta(MetaVers).split(",").toSeq
-      // allowMissingColumns: WIDENED tables (a later commit added a
-      // column) read older dirs with the new column as null — exactly
-      // the ALTER TABLE ADD COLUMN default. Narrowing never reaches
-      // here (mergeTx refuses commits missing a stored column), so
-      // this cannot mask a misspelled column name
-      val layered = dirs.zipWithIndex
-        .map { case (d, i) => rd(d).withColumn(CommitSeq, lit(i.toLong)) }
-        .reduce(_.unionByName(_, allowMissingColumns = true))
-      PkTable.latestPerKey(layered, keys, vers.map(col) :+ col(CommitSeq))
-        .drop(CommitSeq)
-    }
+    val scan = LayeredScan.scan(spark, dirs).getOrElse(LayeredScan.empty(spark, dirs))
+    // projection applied BELOW the whole-row max_by: the latest-wins
+    // aggregate packs its payload into one struct, which blocks
+    // Catalyst's column pruning — so the narrow read must be requested
+    // here, where it reaches the parquet scan (see readTxCols). A
+    // widened table's older dirs simply lack some requested columns;
+    // the scan reads them as null.
+    val layered = project.fold(scan)(want => scan.select(
+      scan.columns.filter(c => want.contains(c) || c == CommitSeq).map(col).toIndexedSeq: _*))
+    latest(layered, dirs.size, storedKeys(meta), meta(MetaVers).split(",").toSeq)
   }
+
+  /** Latest per key over a layered scan of `layers` dirs, equal
+    * versions ordered by commit; a single layer is already one row per
+    * key. */
+  private def latest(layered: DataFrame, layers: Int, keys: => Seq[String],
+                     vers: => Seq[String]): DataFrame =
+    if (layers == 1) layered.drop(CommitSeq)
+    else PkTable.latestPerKey(layered, keys, vers.map(col) :+ col(CommitSeq)).drop(CommitSeq)
+
+  /** The delta depth at which a table is folded back into one base:
+    * [[mergeTx]]'s default and the MV rounds' group tables. */
+  val CompactAfterDeltas = 32
 
   private def mergedTx(spark: SparkSession, m: TxLog.Manifest): DataFrame =
     mergeDirs(spark, m.dataDir +: m.deltas, m.meta)
@@ -148,7 +144,7 @@ object PkTableSink {
               keyCols: Seq[String], versionCols: Seq[String], deleteFlag: String,
               writer: String, maxAttempts: Int = 5,
               recoverTornAfterMs: Long = 60000L,
-              compactAfterDeltas: Int = 32,
+              compactAfterDeltas: Int = CompactAfterDeltas,
               bloomCols: Seq[String] = Nil,
               statsCols: Seq[String] = Nil,
               bloomExpectedPerFile: Long = 1L << 16): Long = {
@@ -370,28 +366,27 @@ object PkTableSink {
   def readTxPointOn(spark: SparkSession, root: String, schemaOf: => DataFrame,
                     colName: String, value: String): DataFrame =
     prunedRead(spark, root, schemaOf, "readTxPointOn",
-      col(colName).cast("string") === value, Footers.pruneDir(spark, _, colName, value, value))
+      col(colName).cast("string") === value, Footers.mayHold(spark, colName, value, value))
 
   /** The pruned non-key read behind [[readTxPointOn]] and
-    * [[readTxRangeOn]]: rows matching `cond`, `pruned` picking each
-    * dir's candidate files — one pass over a single-dir table, the two
+    * [[readTxRangeOn]]: rows matching `cond`, `keep` picking the
+    * candidate files — one pass over a single-dir table, the two
     * passes with deltas outstanding. */
   private def prunedRead(spark: SparkSession, root: String, schemaOf: => DataFrame,
                          op: String, cond: org.apache.spark.sql.Column,
-                         pruned: String => Seq[String]): DataFrame =
+                         keep: Path => Boolean): DataFrame =
     TxLog.current(spark, root) match {
       case None => schemaOf.limit(0)
       case Some(m0) =>
         val m = requireSingleTable(m0, root)
         requireNoPartial(m.meta, op)
-        if (m.deltas.isEmpty) {
-          val files = pruned(m.dataDir)
-          if (files.isEmpty) schemaOf.limit(0)
-          else dropTombstones(readFiles(spark, m.dataDir, files)).where(cond)
-        } else {
+        val dirs = m.dataDir +: m.deltas
+        if (m.deltas.isEmpty)
+          LayeredScan.scan(spark, dirs, keep).fold(schemaOf.limit(0))(s =>
+            dropTombstones(s.drop(CommitSeq)).where(cond))
+        else {
           val keys = storedKeys(m.meta)
-          val dirs = m.dataDir +: m.deltas
-          candidateKeyBounds(spark, dirs, keys.head, cond, pruned) match {
+          candidateKeyBounds(spark, dirs, keys.head, cond, keep) match {
             case None => schemaOf.limit(0)
             case Some((lo, hi)) =>
               readPrunedDirs(spark, dirs, keys, m.meta(MetaVers).split(",").toSeq, lo, hi)
@@ -404,41 +399,17 @@ object PkTableSink {
     meta.get(MetaKeys).filter(_.nonEmpty).getOrElse(throw new IllegalStateException(
       "manifest has no stored key columns")).split(",").toSeq
 
-  /** `files` of immutable Tx dir `dir`, read with the dir's recorded
-    * schema — no per-read inference job. */
-  private def readFiles(spark: SparkSession, dir: String, files: Seq[String]): DataFrame =
-    spark.read.schema(graft.SchemaCache.schemaOf(spark, dir)).parquet(files: _*)
-
-  /** Pass 1 of the delta-outstanding pruned lookups: scan each layer's
-    * pruned files for rows matching `cond` and return the candidates'
+  /** Pass 1 of the delta-outstanding pruned lookups: scan the layers'
+    * kept files for rows matching `cond` and return the candidates'
     * (min, max) on `keyCol` — None when nothing matches. One scalar
     * aggregate job over the matching files only. */
   private def candidateKeyBounds(spark: SparkSession, dirs: Seq[String],
                                  keyCol: String, cond: org.apache.spark.sql.Column,
-                                 pruned: String => Seq[String]): Option[(Any, Any)] = {
-    val perDir = dirs.flatMap { d =>
-      val files = pruned(d)
-      if (files.isEmpty) None else Some(readFiles(spark, d, files))
+                                 keep: Path => Boolean): Option[(Any, Any)] =
+    LayeredScan.scan(spark, dirs, keep).flatMap { s =>
+      val r = s.where(cond).agg(min(col(keyCol)), max(col(keyCol))).head()
+      if (r.isNullAt(0)) None else Some((r.get(0), r.get(1)))
     }
-    if (perDir.isEmpty) return None
-    val r = unionUnder(spark, dirs, perDir).where(cond)
-      .agg(min(col(keyCol)), max(col(keyCol))).head()
-    if (r.isNullAt(0)) None else Some((r.get(0), r.get(1)))
-  }
-
-  /** `frames` (reads of some of `dirs`) unioned by name under the
-    * columns merge-on-read gives `dirs`: a widened table's older dirs
-    * lack its newer columns, and so may every frame pruning kept — the
-    * missing ones read as null, in the merged read's order. */
-  private def unionUnder(spark: SparkSession, dirs: Seq[String],
-                         frames: Seq[DataFrame]): DataFrame = {
-    val u = frames.reduce(_.unionByName(_, allowMissingColumns = true))
-    val fields = dirs.map(graft.SchemaCache.schemaOf(spark, _).fields.toSeq)
-      .reduce((a, b) => a ++ b.filterNot(f => a.exists(_.name == f.name)))
-    u.select(fields.map(f => if (u.columns.contains(f.name)) col(f.name)
-      else lit(null).cast(f.dataType).as(f.name)) ++
-      u.columns.filterNot(c => fields.exists(_.name == c)).map(col): _*)
-  }
 
   /** PARTIAL-COLUMN upsert — the StarRocks primary-key
     * `partial_update` mode (Debezium patch-event shape): `changes`
@@ -878,7 +849,11 @@ object PkTableSink {
 
   /** Fold one group table's base + deltas into a single fresh dir
     * (same key-range-sorted bin-packing as [[compactTx]]); other
-    * tables carry forward untouched. */
+    * tables carry forward untouched.
+    *
+    * @param minDeltas skip (returning the current version, no commit)
+    *   unless the table has at least this many deltas (and always
+    *   unless it has one) */
   def compactTxGroup(spark: SparkSession, groupRoot: String, table: String,
                      writer: String, minDeltas: Int = 0,
                      targetRowsPerFile: Long = 4L << 20,
@@ -887,7 +862,7 @@ object PkTableSink {
         recoverTornAfterMs) { m =>
       val dirs = m.tables.getOrElse(table, throw new IllegalArgumentException(
         s"compactTxGroup: no table '$table' under $groupRoot")).split(",").toSeq
-      if (dirs.size < math.max(minDeltas, 2)) None
+      if (dirs.size - 1 < math.max(minDeltas, 1)) None
       else {
         val meta = groupTableMeta(m, table)
         Some(Fold(mergeDirs(spark, dirs, meta), byKey(storedKeys(meta)), s"$groupRoot/$table",
@@ -1161,23 +1136,10 @@ object PkTableSink {
                              keys: Seq[String], vers: Seq[String],
                              lo: Any, hi: Any): DataFrame = {
     val keyCol = keys.head
-    val perDir = dirs.zipWithIndex.flatMap { case (d, i) =>
-      val files = Footers.pruneDir(spark, d, keyCol, lo, hi)
-      if (files.isEmpty) None
-      else Some(readFiles(spark, d, files).withColumn(CommitSeq, lit(i.toLong)))
-    }
-    val range = col(keyCol).between(lo, hi)
-    perDir match {
-      case Seq() =>
-        dropTombstones(unionUnder(spark, dirs, Seq(graft.SchemaCache.read(spark, dirs.head).limit(0))))
-      case Seq(one) if dirs.size == 1 =>
-        // single-dir table: same no-merge path as readTx
-        dropTombstones(one.drop(CommitSeq)).where(range)
-      case some =>
-        val merged = PkTable.latestPerKey(unionUnder(spark, dirs, some).where(range),
-          keys, vers.map(col) :+ col(CommitSeq)).drop(CommitSeq)
-        dropTombstones(merged)
-    }
+    dropTombstones(LayeredScan.scan(spark, dirs, Footers.mayHold(spark, keyCol, lo, hi)) match {
+      case None => LayeredScan.empty(spark, dirs).drop(CommitSeq)
+      case Some(layered) => latest(layered.where(col(keyCol).between(lo, hi)), dirs.size, keys, vers)
+    })
   }
 
   /** Footer pruning decision for [lo,hi] on a table's first key
@@ -1211,14 +1173,14 @@ object PkTableSink {
     val m = committed(spark, root)
     val dirs = m.dataDir +: m.deltas
     val total = dirs.map(Footers.dataFiles(spark, _).size).sum
-    val pass1 = dirs.map(d => d -> Footers.pruneDir(spark, d, colName, value, value)).toMap
+    val pass1 = dirs.flatMap(Footers.pruneDir(spark, _, colName, value, value))
     val keyCol = m.meta(MetaKeys).split(",").head
     val pass2 = candidateKeyBounds(spark, dirs, keyCol,
-      col(colName).cast("string") === value, pass1) match {
+      col(colName).cast("string") === value, Footers.mayHold(spark, colName, value, value)) match {
       case None => Nil
       case Some((lo, hi)) => dirs.flatMap(Footers.pruneDir(spark, _, keyCol, lo, hi))
     }
-    (dirs.flatMap(pass1), pass2, total)
+    (pass1, pass2, total)
   }
 
   /** Range read pruned on ANY column by the footers' min/max — the
@@ -1237,7 +1199,7 @@ object PkTableSink {
   def readTxRangeOn(spark: SparkSession, root: String, schemaOf: => DataFrame,
                     column: String, lo: Long, hi: Long): DataFrame =
     prunedRead(spark, root, schemaOf, "readTxRangeOn", col(column).between(lo, hi),
-      Footers.pruneDir(spark, _, column, lo, hi))
+      Footers.mayHold(spark, column, lo, hi))
 
   /** Live contents as of a specific committed version (time travel). */
   def readTxAt(spark: SparkSession, root: String, version: Long): DataFrame =

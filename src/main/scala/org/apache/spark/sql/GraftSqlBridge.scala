@@ -31,11 +31,13 @@ object GraftSqlBridge {
   def expression(c: Column): Expression =
     classic.ColumnNodeToExpressionConverter(c.node)
 
-  /** DataFrame over an already-analyzed logical plan (classic
-    * `Dataset.ofRows` is private[sql]) — lets an optimizer rule build
-    * a REPLACEMENT subtree through the full Dataset/analysis pipeline
-    * (so udaf encoders resolve, functions bind) and splice the result
-    * back into the plan under rewrite. */
+  /** DataFrame over a logical plan (classic `Dataset.ofRows` is
+    * private[sql]) — lets an optimizer rule build a REPLACEMENT
+    * subtree through the full Dataset/analysis pipeline (so udaf
+    * encoders resolve, functions bind) and splice the result back into
+    * the plan under rewrite, and lets graft hand out frames over its
+    * own relations and operators (the layered lake scan, the as-of
+    * join). */
   def ofRows(spark: SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)

@@ -1,29 +1,23 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Minimal bridge to `Dataset.ofRows` / the analyzed child plans,
-  * which are `private[sql]`. Custom logical operators built by
-  * libraries need exactly these two hooks; placing the shim under
-  * `org.apache.spark.sql` is the established extension pattern for
-  * that (no Spark internals are modified).
+/** The two hooks of the Dataset API that [[org.apache.spark.sql.GraftSqlBridge]]
+  * does not give: the analyzed plan behind a frame, and the Dataset
+  * API's own Column → Expression wrap. Building a frame over a plan
+  * and wrapping an Expression as a Column go through the bridge.
   */
 object DatasetShim {
-  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-
   def analyzedPlan(df: DataFrame): LogicalPlan =
     df.queryExecution.analyzed
 
-  /** Wrap a raw Catalyst expression as a Column (for library-defined
-    * expressions that take non-expression parameters and so can't go
-    * through function registration). */
-  def column(e: org.apache.spark.sql.catalyst.expressions.Expression): org.apache.spark.sql.Column =
-    org.apache.spark.sql.classic.ExpressionUtils.column(e)
-
-  /** The Catalyst expression behind a Column. */
+  /** The Catalyst expression behind a Column, as the Dataset API
+    * entry points take it: a DSL-built Column arrives as an opaque
+    * `ColumnNodeExpression` that those entry points unwrap — right
+    * for an argument of a library expression handed back through
+    * `GraftSqlBridge.column`, unlike the bridge's full conversion,
+    * which an injected SQL function builder needs. */
   def expression(c: org.apache.spark.sql.Column): org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 }

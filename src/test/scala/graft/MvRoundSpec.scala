@@ -127,4 +127,30 @@ class MvRoundSpec extends SparkSpec {
     assert(listsOf(aggRound(root, chg((1L, 2L, "b", 4.0, false)), 2L)) == ((false, 1)))
     assert(mv(root) == Map("b" -> ((1L, 4.0))))
   }
+
+  test("round: group tables fold at the lake's compaction depth, and the view stays exact") {
+    val root = TestTmp.dir("mvfold").toString + "/g"
+    // 40 rounds over 10 keys: inserts, updates that move groups, deletes
+    val batches = (1 to 40).map { i =>
+      (0 until 3).map { j =>
+        val k = ((i * 3 + j) % 10).toLong
+        (k, i.toLong, s"g${(k + i) % 3}", (i * 10 + j).toDouble, (i + j) % 7 == 0)
+      }
+    }
+    batches.zipWithIndex.foreach { case (b, i) =>
+      assert(aggRound(root, chg(b: _*), i + 1L))
+    }
+    val lists = TxLog.versions(spark, root).flatMap(TxLog.at(spark, root, _))
+      .flatMap(_.tables.values.map(_.split(",").count(_.nonEmpty)))
+    assert(lists.max <= PkTableSink.CompactAfterDeltas + 1,
+      s"a table list reached ${lists.max} dirs")
+    val now = TxLog.current(spark, root).get.tables
+    assert(now("state").split(",").length < 40 && now("mv").split(",").length < 40,
+      s"no group table was folded: $now")
+    // the view equals a recompute over each key's latest change
+    val latest = batches.flatten.groupBy(_._1).values.map(_.maxBy(_._2))
+    val want = latest.filterNot(_._5).groupBy(_._3).map { case (g, rs) =>
+      g -> ((rs.size.toLong, rs.map(_._4).sum)) }
+    assert(mv(root) == want)
+  }
 }

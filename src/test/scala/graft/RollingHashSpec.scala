@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.graftshim.DatasetShim
 import graft.functions.{CdcBoundaries, CdcBoundariesImpl}
 import org.apache.spark.unsafe.types.UTF8String
@@ -43,7 +44,7 @@ class RollingHashSpec extends SparkSpec {
   test("kernel column == spelled-out window-sum SQL form on real documents") {
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
     val kernel = docs.withColumn("bnds",
-      DatasetShim.column(CdcBoundaries(DatasetShim.expression(col("text")))))
+      GraftSqlBridge.column(CdcBoundaries(DatasetShim.expression(col("text")))))
     // the same rule written the oracle's way: filter positions k..L by
     // the exact 8-term polynomial (ascii(substring) = DuckDB ord)
     val weights = (0 until K).map(j => math.pow(Base.toDouble, (K - 1 - j).toDouble).toLong)
@@ -71,7 +72,7 @@ class RollingHashSpec extends SparkSpec {
     val viaSql = spark.sql(
       "SELECT doc_id, cdc_boundaries(text) AS b FROM rh_docs")
     val viaKernel = docs.withColumn("b2",
-      DatasetShim.column(CdcBoundaries(DatasetShim.expression(col("text")))))
+      GraftSqlBridge.column(CdcBoundaries(DatasetShim.expression(col("text")))))
     val diff = viaSql.join(viaKernel.select(col("doc_id"), col("b2")), "doc_id")
       .where(not(col("b") <=> col("b2"))).count()
     assert(diff == 0)

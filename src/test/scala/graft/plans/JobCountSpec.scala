@@ -72,4 +72,25 @@ class JobCountSpec extends SparkSpec {
     assert(mv.rows == 5L)
     MvRewrite.deregister(src)
   }
+
+  test("reading a 40-layer table runs as many jobs as reading a 2-layer table") {
+    // one layered scan at any depth: no listing job, no per-layer plan
+    def lake(layers: Int): String = {
+      val root = TestTmp.dir("jobs").toString + s"/l$layers"
+      (0 until layers).foreach { i =>
+        PkTableSink.mergeTx(spark, root,
+          (0L until 10L).map(k => (k + i * 3L, i.toLong, s"v$i", k == 9L)).toDF("id", "ver", "v", "del"),
+          Seq("id"), Seq("ver"), "del", writer = "w", compactAfterDeltas = Int.MaxValue)
+      }
+      assert(TxLog.current(spark, root).get.deltas.size == layers - 1)
+      root
+    }
+    def read(root: String) = PkTableSink.readTx(spark, root, spark.emptyDataFrame).collect()
+    val (two, forty) = (lake(2), lake(40))
+    read(two); read(forty) // warm: the first read of a dir is not what is compared
+    val (rows2, jobs2) = JobCount(spark)(read(two))
+    val (rows40, jobs40) = JobCount(spark)(read(forty))
+    assert(jobs40 == jobs2, s"40 layers ran $jobs40 jobs, 2 layers $jobs2")
+    assert(rows2.length == 12 && rows40.length == 126)
+  }
 }
