@@ -16,12 +16,21 @@ import org.apache.spark.sql.DataFrame
   */
 object Ckpt {
 
-  /** Free a consumed localCheckpoint's blocks (no-op-safe on
-    * non-checkpointed frames). */
-  def free(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
+  /** Free a consumed localCheckpoint's blocks — `df` itself or a
+    * projection or filter of one, like the states of an MV step, which
+    * share their fold's checkpoint (no-op-safe on non-checkpointed
+    * frames). */
+  def free(df: DataFrame): Unit = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+    def base(p: LogicalPlan): LogicalPlan = p match {
+      case Project(_, c) => base(c)
+      case Filter(_, c) => base(c)
+      case other => other
+    }
+    base(df.queryExecution.analyzed) match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(false)
       case _ => df.unpersist(false)
     }
+  }
 }

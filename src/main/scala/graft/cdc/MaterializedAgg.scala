@@ -2,6 +2,7 @@ package graft.cdc
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.sinks.LayeredScan
 import graft.sinks.PkTableSink.TableBatch
 
 /** Incremental materialized AGGREGATE view over a keyed CDC changelog
@@ -30,11 +31,15 @@ import graft.sinks.PkTableSink.TableBatch
   * (the multi-writer rule from [[PkTable.latestPerKey]]), so a late
   * older insert cannot resurrect a deleted key's contribution.
   *
-  * Scale shape: each step is two hash aggregations over
-  * state ∪ batch (the state merge and the group delta) plus a
-  * broadcast-sized semi-join on the touched keys — commit work is
-  * proportional to the batch and the touched keys, never to the
-  * view's history. The MV itself stays group-cardinality-sized.
+  * Scale shape: a step is ONE aggregation over the key-state's stored
+  * layers ∪ the batch ([[Fold]]), which yields each key's old image,
+  * new image and whether the batch touched it. The transactional
+  * sum/count round filters the layers to the batch's keys (a
+  * broadcast semi-join) before that aggregation, so its shuffle
+  * carries only the touched keys; the non-self-maintainable views
+  * (min/max, top-k, joins), whose rescans need the whole new state,
+  * fold every key once and checkpoint the result once. The MV itself
+  * stays group-cardinality-sized.
   */
 object MaterializedAgg {
 
@@ -50,36 +55,86 @@ object MaterializedAgg {
   def emptyState(batch: DataFrame, deleteFlag: Column): DataFrame =
     batch.withColumn(Del, coalesce(deleteFlag, lit(false))).limit(0)
 
-  /** Advance the key-state by one batch and emit the signed delta.
-    * The caller should checkpoint/persist `state` between steps — it
-    * is referenced twice (as the old image and inside the successor).
-    *
-    * `materialize` (default identity) is applied to the successor
-    * state BEFORE the signed delta is built over it: a caller whose
-    * downstream reads the new state several times (every N-way delta
-    * term in [[MaterializedJoin.stepN]] does) passes
-    * `_.localCheckpoint(true)` so the full-state merge runs ONCE
-    * instead of once per consumer — semantics identical either way. */
+  /** Advance the key-state by one batch and emit the signed delta:
+    * the single-layer case of [[fold]], `state` being one row per key.
+    * The caller should checkpoint/persist the result between steps —
+    * `materialize` (default identity) is applied to the fold, so
+    * passing `_.localCheckpoint(true)` runs the one aggregation ONCE
+    * for the successor state and the signed delta alike (every N-way
+    * delta term in [[MaterializedJoin.stepN]] reads both). */
   def step(state: DataFrame, batch: DataFrame, keyCols: Seq[String],
            version: Seq[Column], deleteFlag: Column,
-           materialize: DataFrame => DataFrame = identity): Step = {
-    // the batch is NOT pre-compacted to latest-per-key before the
-    // merge: max_by over the version struct is associative, so
-    // latestPerKey(state ∪ batch) ≡ latestPerKey(state ∪
-    // latestPerKey(batch)) — the pre-compaction was one whole extra
-    // exchange (plus its AQE stage jobs) per table per round, paid by
-    // every maintenance path (r18 optimization, guide §2.4). The
-    // touched-key set feeds only left-semi joins, whose set semantics
-    // make batch-key duplicates harmless.
+           materialize: DataFrame => DataFrame = identity): Step =
+    fold(state.withColumn(LayeredScan.CommitSeq, lit(0L)), batch, keyCols, version, deleteFlag)
+      .map(materialize).step
+
+  // the batch's layer position: after every stored layer, so among
+  // equal versions the batch wins, as the next round's layered read
+  // (the batch staged as the newest delta) will decide
+  private val BatchSeq = Long.MaxValue
+  private val Old = "__mv_old"
+  private val New = "__mv_new"
+  private val Touched = "__mv_touched"
+
+  /** One round's fold of a key-state with a batch: per key, in one
+    * frame, the OLD image (latest stored row; set only for keys the
+    * batch touched — an untouched key's old image is its new one), the
+    * NEW image (latest over stored rows and batch) and whether the
+    * batch touched the key. `cols` is the images' column list. Every
+    * view of it is a projection, so materializing `frame` once
+    * materializes all three. */
+  private[cdc] final case class Fold(frame: DataFrame, cols: Seq[String]) {
+    private def image(img: String): Seq[Column] = cols.map(c => col(s"$img.$c").as(c))
+
+    def map(f: DataFrame => DataFrame): Fold = copy(frame = f(frame))
+
+    /** Every key's latest row, tombstones kept (as [[Del]]). */
+    def newState: DataFrame = frame.select(image(New): _*)
+
+    /** Every key's latest stored row, tombstones kept. */
+    def oldState: DataFrame =
+      frame.select(when(col(Touched), col(Old)).otherwise(col(New)).as(Old))
+        .where(col(Old).isNotNull).select(image(Old): _*)
+
+    /** Touched keys' old live rows with sign −1 and new live rows with
+      * sign +1, in one pass: a stale version loses to the stored one,
+      * and its −row/+row pair cancels downstream. */
+    def signedDelta: DataFrame = {
+      def signed(img: String, sign: Long, live: Column) =
+        when(live, struct(image(img) :+ lit(sign).as(Sign): _*))
+      frame.where(col(Touched))
+        .select(explode(array(
+          signed(Old, -1L, col(Old).isNotNull && !col(s"$Old.$Del")),
+          signed(New, 1L, !col(s"$New.$Del")))).as("__mv_d"))
+        .where(col("__mv_d").isNotNull).select(col("__mv_d.*"))
+    }
+
+    def step: Step = Step(newState, signedDelta)
+  }
+
+  /** Fold `layers` — a key-state's stored rows, unmerged, each with its
+    * layer position as [[LayeredScan.CommitSeq]] and boolean [[Del]] —
+    * with `batch` as the newest layer, in ONE aggregation keyed by
+    * `keyCols`. Rows order by (version…, layer position); the old image
+    * is the `max_by` over stored rows only, the new image over all. A
+    * column of the batch that the layers lack reads as null (the ADD
+    * COLUMN default); the images take the batch's columns plus [[Del]]. */
+  private[cdc] def fold(layers: DataFrame, batch: DataFrame, keyCols: Seq[String],
+                        version: Seq[Column], deleteFlag: Column): Fold = {
+    val seq = LayeredScan.CommitSeq
     val withDel = batch.withColumn(Del, coalesce(deleteFlag, lit(false)))
-    val newState = materialize(
-      PkTable.latestPerKey(state.unionByName(withDel), keyCols, version))
-    val touched = withDel.select(keyCols.map(col): _*)
-    def liveTouched(df: DataFrame) =
-      df.join(touched, keyCols, "left_semi").where(!col(Del))
-    Step(newState,
-      liveTouched(state).withColumn(Sign, lit(-1L))
-        .unionByName(liveTouched(newState).withColumn(Sign, lit(1L))))
+    val cols = withDel.columns.toSeq
+    val stored = layers.select(cols.map(c =>
+      if (layers.columns.contains(c)) col(c)
+      else lit(null).cast(withDel.schema(c).dataType).as(c)) :+ col(seq): _*)
+    val ord = struct(version :+ col(seq): _*)
+    val payload = struct(cols.map(col): _*)
+    val touched = max(col(seq)) === BatchSeq
+    Fold(stored.unionByName(withDel.withColumn(seq, lit(BatchSeq)))
+      .groupBy(keyCols.map(col): _*)
+      .agg(when(touched, max_by(payload, when(col(seq) =!= BatchSeq, ord))).as(Old),
+        max_by(payload, ord).as(New), touched.as(Touched))
+      .drop(keyCols: _*), cols)
   }
 
   /** Per-group adjustment of a signed delta: `n` (Σsign) plus
@@ -128,23 +183,24 @@ object MaterializedAgg {
                  writer: String): Boolean =
     MvRound.run(batch.sparkSession, root, batchId, writer,
         Seq("state" -> MvRound.stateBatch(batch, keyCols, versionCols, deleteFlag))) { r =>
-      // state WITH tombstones: a deleted key's version must stay visible
-      // so a straggler insert loses latestPerKey here exactly as it does
-      // in the stored table — view and table can never diverge
-      val state = r.readAll("state", emptyState(batch, deleteFlag), deletedCol = Del)
-      val s = step(state, batch, keyCols, versionCols.map(col), deleteFlag)
-      val delta = groupDelta(s.signedDelta, groupCols, sums).localCheckpoint(true)
+      // the stored rows WITH tombstones: a deleted key's version must
+      // stay visible so a straggler insert loses here exactly as it does
+      // in the stored table — view and table can never diverge. Only
+      // the batch's keys enter the fold, so its shuffle is batch-sized
+      val touched = MvRound.keyedBy(r.layers("state", emptyState(batch, deleteFlag), Del),
+        batch, keyCols)
+      val f = fold(touched, batch, keyCols, versionCols.map(col), deleteFlag)
+      val delta = groupDelta(f.signedDelta, groupCols, sums).localCheckpoint(true)
       r.freeAfterCommit(delta)
       sumView(r, delta, groupCols, sums.map(_._1), batchId)
     }
 
-  /** The sum view's batch for one round: the pinned view restricted to
-    * the delta's groups, merged additively; n = 0 becomes a tombstone.
+  /** The sum view's batch for one round: the pinned view's rows of the
+    * delta's groups, merged additively; n = 0 becomes a tombstone.
     * Shared with [[MaterializedJoin.maintainAggTx]]. */
   private[cdc] def sumView(r: MvRound.Pinned, delta: DataFrame, groupCols: Seq[String],
                            sumNames: Seq[String], batchId: Long): Map[String, TableBatch] = {
-    val touched = delta.select(groupCols.map(col): _*)
-    viewBatch(mergeMvAllowZero(r.read("mv", delta).join(touched, groupCols, "left_semi"),
+    viewBatch(mergeMvAllowZero(r.readKeys("mv", delta, delta, groupCols),
       delta, groupCols, sumNames), groupCols, batchId)
   }
 
@@ -155,7 +211,6 @@ object MaterializedAgg {
                               sums: Seq[(String, Column)], exts: Seq[Extremum],
                               batchId: Long): Map[String, TableBatch] = {
     val delta = groupDelta(st.signedDelta, groupCols, sums)
-    val touched = delta.select(groupCols.map(col): _*)
     // empty-lake schema fallback: the view's shape derived from the
     // state (never evaluated once a manifest exists)
     val mvSchema = st.state.groupBy(groupCols.map(col): _*)
@@ -163,7 +218,7 @@ object MaterializedAgg {
         sums.map { case (nm, c) => sum(c).as(nm) } ++
           exts.map(e => (if (e.isMin) min(e.value) else max(e.value)).as(e.name)): _*)
       .limit(0)
-    val curMv = r.read("mv", mvSchema).join(touched, groupCols, "left_semi")
+    val curMv = r.readKeys("mv", mvSchema, delta, groupCols)
     viewBatch(attachExtrema(
         mergeMvAllowZero(curMv.drop(exts.map(_.name): _*), delta, groupCols, sums.map(_._1)),
         Some(curMv), st, groupCols, sums, exts),
@@ -343,23 +398,22 @@ object MaterializedAgg {
         groupCols, sums, exts, batchId)
     }
 
-  /** A single-table round's [[step]] from the pinned key-state — WITH
-    * tombstones, so a straggler insert of a deleted key loses
-    * latestPerKey — for the non-self-maintainable views (min/max, top-k):
-    * their legs (insert candidates, retraction trigger, rescan
-    * recompute) all read the successor state and the signed delta, so
-    * each is materialized ONCE (step hook + signed-delta checkpoint,
-    * r18) and freed after the commit. The group delta and current
-    * view stay LAZY: every consumer sits inside the single mv-batch
-    * write job, so dedicated checkpoint waves would buy nothing. */
+  /** A single-table round's [[Step]] for the non-self-maintainable
+    * views (min/max, top-k): one [[fold]] of the pinned key-state's
+    * layers — WITH tombstones, so a straggler insert of a deleted key
+    * loses — and the batch, checkpointed ONCE. Their legs (insert
+    * candidates, retraction trigger, rescan recompute) read the
+    * successor state and the signed delta, both projections of that
+    * checkpoint, which is freed after the commit. The group delta and
+    * current view stay LAZY: every consumer sits inside the single
+    * mv-batch write job. */
   private[cdc] def pinnedStep(r: MvRound.Pinned, batch: DataFrame, keyCols: Seq[String],
                               versionCols: Seq[String], deleteFlag: Column): Step = {
-    val state = r.readAll("state", emptyState(batch, deleteFlag), deletedCol = Del)
-    val st = step(state, batch, keyCols, versionCols.map(col), deleteFlag,
-      materialize = _.localCheckpoint(true))
-    val sd = st.signedDelta.localCheckpoint(true)
-    r.freeAfterCommit(st.state, sd)
-    Step(state = st.state, signedDelta = sd)
+    val f = fold(r.layers("state", emptyState(batch, deleteFlag), Del), batch, keyCols,
+        versionCols.map(col), deleteFlag)
+      .map(_.localCheckpoint(true))
+    r.freeAfterCommit(f.frame)
+    f.step
   }
 
   /** [[maintain]] with MIN/MAX columns — same batch loop, same

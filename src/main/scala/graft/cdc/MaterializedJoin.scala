@@ -135,13 +135,31 @@ object MaterializedJoin {
     * corpus ⋈ corpus (a left-to-right fold would pay a full
     * fact ⋈ dim join in every dim-delta term). The N states advance
     * via per-table [[MaterializedAgg.step]] with its out-of-order/
-    * duplicate guarantees. */
+    * duplicate guarantees.
+    *
+    * Each state is read by EVERY term whose prefix/delta touches it,
+    * so each table's step is materialized once (measured 2-3×
+    * recompute per round at N=3 without this); the returned states
+    * ARE those checkpoints: callers must not re-checkpoint, and free
+    * them once the round's delta is consumed. The N steps are
+    * independent jobs — overlapped from driver threads (guide §2.6),
+    * which recovers their fixed per-job overhead at any batch size. */
   def stepN(tables: Seq[TableIn], joinPairs: Seq[(String, String)],
-            outCols: Seq[String]): StepN = {
-    require(tables.size >= 2, "stepN needs at least two tables")
-    require(joinPairs.size >= tables.size - 1,
-      s"need ≥ ${tables.size - 1} equi-key pairs to connect ${tables.size} tables")
-    val cols: Seq[Set[String]] = tables.map(_.batch.columns.toSet)
+            outCols: Seq[String]): StepN =
+    foldedN(tables.map(_.batch), graft.Par.map(tables)(t => MaterializedAgg.fold(
+        t.state.withColumn(graft.sinks.LayeredScan.CommitSeq, lit(0L)),
+        t.batch, t.key, t.ver, t.delFlag).map(_.localCheckpoint(true))),
+      joinPairs, outCols)
+
+  /** [[stepN]] over the N tables' materialized [[MaterializedAgg.Fold]]s:
+    * each term reads its tables' old states, new states and signed
+    * delta as projections of one fold. */
+  private def foldedN(batches: Seq[DataFrame], folds: Seq[MaterializedAgg.Fold],
+                      joinPairs: Seq[(String, String)], outCols: Seq[String]): StepN = {
+    require(batches.size >= 2, "stepN needs at least two tables")
+    require(joinPairs.size >= batches.size - 1,
+      s"need ≥ ${batches.size - 1} equi-key pairs to connect ${batches.size} tables")
+    val cols: Seq[Set[String]] = batches.map(_.columns.toSet)
     // unique ownership of every pair column (names must not repeat
     // across tables — the registerJoin/MaterializedJoin contract)
     joinPairs.foreach { case (a, b) =>
@@ -153,19 +171,8 @@ object MaterializedJoin {
         s"pair ($a, $b) must span two different tables")
     }
     def bfsFrom(start: Int): Seq[Int] = bfsOrder(start, cols, joinPairs)
-    require(bfsFrom(0).size == tables.size,
+    require(bfsFrom(0).size == batches.size,
       "the equi-pair graph must connect every table (no cross joins)")
-
-    // each new state is read by EVERY term whose prefix/delta touches
-    // it — materialize the full-state merge once (measured 2-3×
-    // recompute per round at N=3 without this); the returned states
-    // ARE these checkpoints: callers must not re-checkpoint, and free
-    // them once the round's delta is consumed. The N merges are
-    // independent jobs — overlapped from driver threads (guide §2.6),
-    // which recovers their fixed per-job overhead at any batch size
-    val stepped = graft.Par.map(tables)(t =>
-      MaterializedAgg.step(t.state, t.batch, t.key, t.ver, t.delFlag,
-        materialize = _.localCheckpoint(true)))
 
     def live(df: DataFrame): DataFrame = df.where(!col(Del)).drop(Del)
 
@@ -174,15 +181,14 @@ object MaterializedJoin {
     // folded delta-outward along the join graph
     def term(i: Int): DataFrame = {
       def frame(j: Int): DataFrame =
-        if (j < i) live(stepped(j).state)
-        else if (j == i) live(stepped(i).signedDelta)
-        else live(tables(j).state)
+        if (j < i) live(folds(j).newState)
+        else if (j == i) live(folds(i).signedDelta)
+        else live(folds(j).oldState)
       joinAlong(bfsFrom(i), cols, joinPairs)(frame)
         .select(col(Sign) +: outCols.map(col): _*)
     }
 
-    StepN(stepped.map(_.state),
-      tables.indices.map(term).reduce(_ unionByName _))
+    StepN(folds.map(_.newState), batches.indices.map(term).reduce(_ unionByName _))
   }
 
   // tables in BFS order over the equi-pair graph from `start`
@@ -255,15 +261,14 @@ object MaterializedJoin {
                     groupCols: Seq[String], sums: Seq[(String, Column)],
                     batchId: Long, writer: String): Boolean =
     nWayRound(root, tables, batchId, writer) { r =>
-      // old states stay LAZY merge-on-read (r18): each consumer (the N
-      // state merges stepN checkpoints, the delta terms' old-state legs)
-      // folds the lake scan into a job that already exists instead of
-      // paying a dedicated N-checkpoint serial wave; the group delta
-      // below stays the round's ONE materialization of the N-way join
-      val s = stepN(pinnedStates(r, tables), joinPairs, outCols)
-      val delta = MaterializedAgg.groupDelta(s.delta, groupCols, sums)
+      // each table's old state, new state and signed delta come from
+      // its one checkpointed fold; the group delta below stays the
+      // round's ONE materialization of the N-way join
+      val folds = pinnedFolds(r, tables)
+      val delta = MaterializedAgg.groupDelta(
+          foldedN(tables.map(_.batch), folds, joinPairs, outCols).delta, groupCols, sums)
         .localCheckpoint(true)
-      s.states.foreach(graft.Ckpt.free)
+      folds.foreach(f => graft.Ckpt.free(f.frame))
       r.freeAfterCommit(delta)
       MaterializedAgg.sumView(r, delta, groupCols, sums.map(_._1), batchId)
     }
@@ -280,38 +285,30 @@ object MaterializedJoin {
         MvRound.stateBatch(t.batch, t.key, t.verCols, t.delFlag)))(body)
   }
 
-  /** The N tables' key-states (tombstones kept) at the round's pinned
-    * version, as [[stepN]] inputs. */
-  private def pinnedStates(r: MvRound.Pinned, tables: Seq[BatchIn]): Seq[TableIn] =
-    tables.map { t =>
-      TableIn(r.readAll(s"state_${t.name}",
-          MaterializedAgg.emptyState(t.batch, t.delFlag), deletedCol = Del),
-        t.batch, t.key, t.verCols.map(col), t.delFlag)
-    }
+  /** The N tables' [[MaterializedAgg.fold]]s of their pinned key-state
+    * layers (tombstones kept) with their batches, each checkpointed
+    * once — independent jobs, overlapped from driver threads. */
+  private def pinnedFolds(r: MvRound.Pinned, tables: Seq[BatchIn]): Seq[MaterializedAgg.Fold] =
+    graft.Par.map(tables)(t => MaterializedAgg.fold(
+      r.layers(s"state_${t.name}", MaterializedAgg.emptyState(t.batch, t.delFlag), Del),
+      t.batch, t.key, t.verCols.map(col), t.delFlag).map(_.localCheckpoint(true)))
 
   /** Shared N-way scaffolding for the non-self-maintainable view
-    * kinds (min/max, top-k): advance the N pinned lake states through
-    * [[stepN]] (which checkpoints the N state merges), checkpoint the
-    * signed join delta ONCE (it feeds several maintenance legs — the
-    * N-way telescoped join must not re-run per leg), and pair it with
-    * the LIVE JOIN of the round's NEW states as the step's state (the
-    * rescan recompute source — lazy; consumers restrict it with a
-    * group-keyed semi join that Catalyst pushes below the join, so it
-    * never evaluates corpus ⋈ corpus). The checkpoints are freed once
-    * the round's commit has consumed them.
-    *
-    * The lake reads stay LAZY (r18): the manifest is pinned
-    * driver-side, but the merge-on-read plan is left for each
-    * consumer's own job — the old-state legs of the signed delta and
-    * the N state merges each fold the scan into jobs that already
-    * exist, instead of paying a dedicated N-checkpoint serial wave per
-    * round. */
+    * kinds (min/max, top-k): the N pinned folds ([[pinnedFolds]]), the
+    * signed join delta over them checkpointed ONCE (it feeds several
+    * maintenance legs — the N-way telescoped join must not re-run per
+    * leg), paired with the LIVE JOIN of the round's NEW states as the
+    * step's state (the rescan recompute source — lazy; consumers
+    * restrict it with a group-keyed semi join that Catalyst pushes
+    * below the join, so it never evaluates corpus ⋈ corpus). The
+    * checkpoints are freed once the round's commit has consumed them. */
   private def stepNTx(r: MvRound.Pinned, tables: Seq[BatchIn],
                       joinPairs: Seq[(String, String)],
                       outCols: Seq[String]): MaterializedAgg.Step = {
-    val s = stepN(pinnedStates(r, tables), joinPairs, outCols)
+    val folds = pinnedFolds(r, tables)
+    val s = foldedN(tables.map(_.batch), folds, joinPairs, outCols)
     val signedDelta = s.delta.localCheckpoint(true)
-    r.freeAfterCommit(s.states :+ signedDelta: _*)
+    r.freeAfterCommit(folds.map(_.frame) :+ signedDelta: _*)
     // live join of the NEW states: BFS fold over the same pair graph
     val cols = tables.map(_.batch.columns.toSet)
     val liveJoin = joinAlong(bfsOrder(0, cols, joinPairs), cols, joinPairs)(i =>

@@ -26,7 +26,7 @@ import graft.sinks.PkTableSink
   *  - an UPDATE to a member arrives as −member/+new and lands in the
   *    rescan leg; an update to a non-member merges like an insert.
   *
-  * Deltas come from [[MaterializedAgg.step]]'s state diff, so
+  * Deltas come from [[MaterializedAgg.fold]]'s state diff, so
   * out-of-order and duplicate deliveries cancel before they reach the
   * view (the A24/A39 discipline — tombstones stay in the state, a
   * straggler insert loses `latestPerKey`).
@@ -135,9 +135,8 @@ object MaterializedTopK {
     // LAZY (r18): every consumer sits inside the single mv-batch write
     // job, so the recompute is 2-3 view-lake scans ∝ touched groups' k
     // within that job, never a new serial wave
-    val curMv = r.read("mv", mvSchema)
+    val curMv = r.readKeys("mv", mvSchema, touched, groupCols)
       .select(gkCols.map(col) :+ col(Val): _*)
-      .join(touched, groupCols, "left_semi")
     val newRows = mergeTopK(Some(curMv), st, groupCols, keyCols, value, k)
     // single-pass tombstone diff: union + per-(group,key) argmax — a
     // gk present in newRows keeps the NEW row (__mv_gone = false), a gk

@@ -2,7 +2,7 @@ package graft.cdc
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sinks.{PkTableSink, TxLog}
+import graft.sinks.{LayeredScan, PkTableSink, TxLog}
 import graft.sinks.PkTableSink.TableBatch
 
 /** The exactly-once maintenance round every transactional MV kernel
@@ -46,16 +46,39 @@ private[graft] object MvRound {
 
     /** Live rows of `table` at the pinned version. */
     def read(table: String, schemaOf: => DataFrame): DataFrame =
-      PkTableSink.readGroupAt(spark, manifest, table, schemaOf, None)
+      PkTableSink.readGroupAt(spark, manifest, table, schemaOf)
 
-    /** `table` at the pinned version with its tombstones kept, as
-      * boolean `deletedCol`. */
-    def readAll(table: String, schemaOf: => DataFrame, deletedCol: String): DataFrame =
-      PkTableSink.readGroupAt(spark, manifest, table, schemaOf, Some(deletedCol))
+    /** Every stored row of key-state table `table` at the pinned
+      * version, unmerged, in one plan at any layer count:
+      * [[graft.sinks.LayeredScan.CommitSeq]] orders equal versions by
+      * commit, the stored tombstone reads as boolean `deletedCol`.
+      * `schemaOf`'s empty frame (which carries `deletedCol`) when the
+      * pinned version lacks the table. */
+    def layers(table: String, schemaOf: => DataFrame, deletedCol: String): DataFrame =
+      PkTableSink.layersAt(spark, manifest, table, deletedCol).getOrElse(
+        schemaOf.limit(0).withColumn(LayeredScan.CommitSeq, lit(0L)))
+
+    /** Live rows of view table `table` at the pinned version whose `on`
+      * columns (its key columns or a prefix of them) appear in `keys`,
+      * filtered before the latest-per-key fold; `schemaOf`'s empty
+      * frame when the pinned version lacks the table. */
+    def readKeys(table: String, schemaOf: => DataFrame, keys: DataFrame,
+                 on: Seq[String]): DataFrame =
+      PkTableSink.readKeysAt(spark, manifest, table, schemaOf, keyedBy(_, keys, on))
 
     /** Free these checkpoints once the round's commit has consumed
       * them. */
     def freeAfterCommit(dfs: DataFrame*): Unit = held ++= dfs
+  }
+
+  /** The rows of `df` whose `on` columns equal (null-safely) a row of
+    * `keys`. The key set is broadcast: a round's keys are batch-sized,
+    * and a broadcast filters `df` inside its own scan's stage, before
+    * any shuffle above it. */
+  def keyedBy(df: DataFrame, keys: DataFrame, on: Seq[String]): DataFrame = {
+    val k = on.indices.map(i => s"__mv_k$i")
+    df.join(broadcast(keys.select(on.zip(k).map { case (c, n) => col(c).as(n) }: _*)),
+      on.zip(k).map { case (c, n) => col(c) <=> col(n) }.reduce(_ && _), "left_semi")
   }
 
   /** One key-state table's batch: the raw changes, delete flag

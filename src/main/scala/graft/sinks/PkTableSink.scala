@@ -875,27 +875,44 @@ object PkTableSink {
     * merge-on-read over the table's dir list. */
   def readTxGroup(spark: SparkSession, groupRoot: String, table: String,
                   schemaOf: => DataFrame): DataFrame =
-    readGroupAt(spark, TxLog.current(spark, groupRoot), table, schemaOf, None)
+    readGroupAt(spark, TxLog.current(spark, groupRoot), table, schemaOf)
 
-  /** One group table as of manifest `m` — live rows, or with
-    * `deletedCol` every row, stored tombstones surfaced as that boolean
-    * column (false when the table predates deletes), for maintenance
-    * whose derived state must see deleted keys' versions (an MV
-    * round's state, where a tombstone's version stops a straggler
-    * insert). `schemaOf`'s empty frame when `m` is absent or lacks the
-    * table. */
+  /** Live rows of one group table as of manifest `m`; `schemaOf`'s
+    * empty frame when `m` is absent or lacks the table. */
   private[graft] def readGroupAt(spark: SparkSession, m: Option[TxLog.Manifest],
-                                 table: String, schemaOf: => DataFrame,
-                                 deletedCol: Option[String]): DataFrame =
-    m.flatMap(mf => mf.tables.get(table).map { list =>
-      val merged = mergeDirs(spark, list.split(",").toSeq.filter(_.nonEmpty),
-        groupTableMeta(mf, table))
-      deletedCol match {
-        case None => dropTombstones(merged)
-        case Some(d) if merged.columns.contains(Tombstone) =>
-          merged.withColumnRenamed(Tombstone, d)
-        case Some(d) => merged.withColumn(d, lit(false))
-      }
+                                 table: String, schemaOf: => DataFrame): DataFrame =
+    m.flatMap(mf => mf.tables.get(table).map(list => dropTombstones(
+      mergeDirs(spark, list.split(",").toSeq.filter(_.nonEmpty), groupTableMeta(mf, table)))))
+      .getOrElse(schemaOf.limit(0))
+
+  /** Every stored row of one group table as of manifest `m`, unmerged:
+    * one [[LayeredScan]], whose plan is the same at any layer count,
+    * with the stored tombstone as boolean `deletedCol` (a layer written
+    * without one reads as live). None when `m` lacks the table. */
+  private[graft] def layersAt(spark: SparkSession, m: Option[TxLog.Manifest], table: String,
+                              deletedCol: String): Option[DataFrame] =
+    m.flatMap(_.tables.get(table)).map { list =>
+      val dirs = list.split(",").toSeq.filter(_.nonEmpty)
+      val scan = LayeredScan.scan(spark, dirs).getOrElse(LayeredScan.empty(spark, dirs))
+      scan.select(scan.columns.filterNot(_ == Tombstone).map(col).toIndexedSeq :+
+        (if (scan.columns.contains(Tombstone)) coalesce(col(Tombstone), lit(false))
+         else lit(false)).as(deletedCol): _*)
+    }
+
+  /** Live rows of one group table as of manifest `m` for the keys
+    * `restrict` keeps: it filters the raw layers ([[layersAt]]) BEFORE
+    * the latest-per-key fold, so the fold's shuffle carries only those
+    * keys. `restrict` must keep or drop all of a key's rows together
+    * (filter on key columns or a prefix of them). `schemaOf`'s empty
+    * frame when `m` lacks the table. */
+  private[graft] def readKeysAt(spark: SparkSession, m: Option[TxLog.Manifest], table: String,
+                                schemaOf: => DataFrame,
+                                restrict: DataFrame => DataFrame): DataFrame =
+    m.flatMap(mf => layersAt(spark, m, table, Tombstone).map { layers =>
+      val meta = groupTableMeta(mf, table)
+      PkTable.latestPerKey(restrict(layers), storedKeys(meta),
+        meta(MetaVers).split(",").toSeq.map(col) :+ col(CommitSeq))
+        .where(!col(Tombstone)).drop(Tombstone, CommitSeq)
     }).getOrElse(schemaOf.limit(0))
 
   // one group table's key/version meta in the single-table shape

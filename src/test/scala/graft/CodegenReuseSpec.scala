@@ -3,13 +3,13 @@ package graft
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.cdc.MaterializedAgg
+import graft.cdc.{MaterializedAgg, MaterializedJoin, MaterializedTopK}
 import graft.sinks.PkTableSink
 
-/** Steady maintenance rounds reuse their generated code: merge-on-read
-  * is one layered scan whatever the delta depth, and the codegen cache
-  * holds the round's classes, so a round compiles only what differs in
-  * it (its `batch_id` literal). */
+/** Steady maintenance rounds reuse their generated code: an MV round
+  * reads its tables' layers as one scan whatever their count, and the
+  * codegen cache holds the round's classes, so a round compiles only
+  * what differs in it (its `batch_id` literal). */
 class CodegenReuseSpec extends SparkSpec {
   import spark.implicits._
 
@@ -22,6 +22,12 @@ class CodegenReuseSpec extends SparkSpec {
     val k = ((i * 7 + j) % 20).toLong
     (k, i.toLong, s"g${(k + i) % 4}", (i * 10 + j).toDouble, j % 5 == 4)
   }.toDF("k", "ver", "g", "v", "del")
+
+  // three of five customers per round, one of them renamed
+  private def custs(i: Int): DataFrame = (0 until 3).map { j =>
+    val c = ((i + j) % 5).toLong
+    (c, i.toLong, s"s${(c + i) % 2}", false)
+  }.toDF("cid", "cver", "seg", "cdel")
 
   test("MaterializedAgg rounds 4-6 on one root compile at most 2 classes each") {
     val root = TestTmp.dir("codegen").toString + "/mv"
@@ -39,5 +45,34 @@ class CodegenReuseSpec extends SparkSpec {
       .select(col("g"), col("n"), col("total")).as[(String, Long, Double)].collect()
       .map { case (g, n, t) => g -> ((n, t)) }.toMap
     assert(got == want)
+  }
+
+  test("agg, min/max, top-k and join rounds 2-6 compile at most 2 classes each") {
+    val sums = Seq("total" -> col("v"))
+    val exts = Seq(MaterializedAgg.Extremum("lo", col("v"), isMin = true),
+      MaterializedAgg.Extremum("hi", col("v"), isMin = false))
+    val kernels = Seq[(String, (String, Int) => Boolean)](
+      "agg" -> ((r, i) => MaterializedAgg.maintainTx(r, batch(i), i.toLong, Seq("k"),
+        Seq("ver"), col("del"), Seq("g"), sums, writer = "job")),
+      "min/max" -> ((r, i) => MaterializedAgg.maintainMinMaxTx(r, batch(i), i.toLong, Seq("k"),
+        Seq("ver"), col("del"), Seq("g"), sums, exts, writer = "job")),
+      "top-k" -> ((r, i) => MaterializedTopK.maintainTx(r, batch(i), i.toLong, Seq("k"),
+        Seq("ver"), col("del"), Seq("g"), col("v"), k = 2, writer = "job")),
+      "join" -> ((r, i) => MaterializedJoin.maintainAggTx(r, Seq(
+          MaterializedJoin.BatchIn("o", batch(i).withColumn("c", col("k") % 5), Seq("k"),
+            Seq("ver"), col("del")),
+          MaterializedJoin.BatchIn("c", custs(i), Seq("cid"), Seq("cver"), col("cdel"))),
+        Seq("c" -> "cid"), Seq("seg", "v"), Seq("seg"), sums, i.toLong, writer = "job")))
+    val counts = kernels.map { case (name, round) =>
+      // a first root's first two rounds: a first round has no layers to
+      // read, so the lake-side code first runs, and compiles, in the
+      // second; from then on the plan is the same at every depth
+      val warm = TestTmp.dir("codegen").toString + "/warm"
+      (1 to 2).foreach(i => assert(round(warm, i)))
+      val root = TestTmp.dir("codegen").toString + "/mv"
+      name -> (1 to 6).map { i => val c0 = compiles(); assert(round(root, i)); compiles() - c0 }
+    }
+    assert(counts.forall(_._2.drop(1).forall(_ <= 2)), counts.map { case (k, c) =>
+      s"$k compiles in rounds 1-6: ${c.mkString(", ")}" }.mkString("; "))
   }
 }

@@ -96,7 +96,7 @@ class MvRoundSpec extends SparkSpec {
       PkTableSink.mergeTxGroup(spark, root, side(9L, 2L, 2.0), writer = "foreign")
       assert(TxLog.current(spark, root).map(_.version) != r.manifest.map(_.version))
       assert(kv(r.read("side", chg())) == Set((9L, 1.0)))
-      assert(kv(r.readAll("state", chg(), deletedCol = "gone")) == Set((1L, 10.0)))
+      assert(kv(r.layers("state", chg(), deletedCol = "gone")) == Set((1L, 10.0)))
       assert(r.read("mv", chg()).select("g", "n").as[(String, Long)].collect().toSeq ==
         Seq(("a", 1L)))
       Map("mv" -> TableBatch(Seq(("a", 2L, 20.0, 2L, false))

@@ -1,7 +1,13 @@
 package graft.plans
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.{JobCount, SparkSpec, TestTmp}
+import graft.cdc.{MaterializedAgg, MaterializedJoin, MaterializedTopK}
 import graft.sinks.{PkTableSink, TxLog}
 import graft.streaming.KmvMv
 
@@ -92,5 +98,60 @@ class JobCountSpec extends SparkSpec {
     val (rows40, jobs40) = JobCount(spark)(read(forty))
     assert(jobs40 == jobs2, s"40 layers ran $jobs40 jobs, 2 layers $jobs2")
     assert(rows2.length == 12 && rows40.length == 126)
+  }
+
+  // changelog rows over 20 keys: inserts, group moves and deletes
+  private def mvBatch(i: Int): DataFrame = (0 until 12).map { j =>
+    val k = ((i * 7 + j) % 20).toLong
+    (k, i.toLong, s"g${(k + i) % 4}", (i * 10 + j).toDouble, j % 5 == 4, k % 5)
+  }.toDF("k", "ver", "g", "v", "del", "c")
+
+  private def custBatch(i: Int): DataFrame = (0 until 3).map { j =>
+    val c = ((i + j) % 5).toLong
+    (c, i.toLong, s"s${(c + i) % 2}", false)
+  }.toDF("cid", "cver", "seg", "cdel")
+
+  /** Jobs and `localCheckpoint` queries of round 4 of a kernel on a
+    * fresh root (rounds 1-3 untimed, so round 4 reads a 3-layer state). */
+  private def steadyRound(round: (String, Int) => Boolean): (Int, Int) = {
+    val root = TestTmp.dir("jobs").toString + "/mv"
+    (1 to 3).foreach(i => assert(round(root, i)))
+    val ckpts = new AtomicInteger()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") ckpts.incrementAndGet()
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    // the fence that ends JobCount's block rides the same listener
+    // queue, so every checkpoint of the round has been seen after it
+    try { val (ok, jobs) = JobCount(spark)(round(root, 4)); assert(ok); (jobs, ckpts.get) }
+    finally spark.listenerManager.unregister(listener)
+  }
+
+  test("a steady MV round runs no more jobs than the two-pass round did, and one checkpoint") {
+    val sums = Seq("total" -> col("v"))
+    val exts = Seq(MaterializedAgg.Extremum("lo", col("v"), isMin = true),
+      MaterializedAgg.Extremum("hi", col("v"), isMin = false))
+    val got = Map(
+      "agg" -> steadyRound((r, i) => MaterializedAgg.maintainTx(r, mvBatch(i), i.toLong,
+        Seq("k"), Seq("ver"), col("del"), Seq("g"), sums, writer = "job")),
+      "minmax" -> steadyRound((r, i) => MaterializedAgg.maintainMinMaxTx(r, mvBatch(i), i.toLong,
+        Seq("k"), Seq("ver"), col("del"), Seq("g"), sums, exts, writer = "job")),
+      "topk" -> steadyRound((r, i) => MaterializedTopK.maintainTx(r, mvBatch(i), i.toLong,
+        Seq("k"), Seq("ver"), col("del"), Seq("g"), col("v"), k = 2, writer = "job")),
+      "join" -> steadyRound((r, i) => MaterializedJoin.maintainAggTx(r, Seq(
+          MaterializedJoin.BatchIn("o", mvBatch(i), Seq("k"), Seq("ver"), col("del")),
+          MaterializedJoin.BatchIn("c", custBatch(i), Seq("cid"), Seq("cver"), col("cdel"))),
+        Seq("c" -> "cid"), Seq("seg", "v"), Seq("seg"), sums, i.toLong, writer = "job")))
+    info(got.toSeq.sortBy(_._1).map { case (k, (j, c)) => s"$k: $j jobs, $c checkpoints" }
+      .mkString("; "))
+    // jobs of the same round under the two-pass kernels, which ran 2
+    // checkpoints for min/max and top-k (now 10, 16, 11 and 16 jobs)
+    val before = Map("agg" -> 11, "minmax" -> 20, "topk" -> 15, "join" -> 22)
+    got.foreach { case (k, (jobs, _)) =>
+      assert(jobs <= before(k), s"$k: $jobs jobs, the two-pass round ran ${before(k)}") }
+    assert(got("minmax")._2 == 1 && got("topk")._2 == 1,
+      s"min/max and top-k checkpoints per round: ${got("minmax")._2}, ${got("topk")._2}")
   }
 }
