@@ -2,18 +2,18 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sinks.TxLog
+import graft.sinks.{PkTableSink, TxLog}
 
 /** Persisted TRANSACTIONAL MinHash-LSH dedup index — the
   * build / add / probe lifecycle of incremental crawl dedup
   * ([[Dedup.minhashLshPairsAgainst]]'s "corpus band rows are a
-  * precomputed table" made literal) on the same commit log the PK lake
-  * and the IVF index use ([[graft.sinks.TxLog]]):
+  * precomputed table" made literal) as two PK group tables under the
+  * root's manifest, like the IVF and graph indexes ([[IndexTables]]):
   *
   * {{{
-  *   <root>/_log/<v>.manifest   t.bands=<d1,d2,…>  t.sigs=<d1,d2,…>
-  *   <root>/b-<nonce>/          (id, band, bh) band-bucket rows
-  *   <root>/s-<nonce>/          (id, sig[k])   MinHash signatures
+  *   <root>/_log/<v>.manifest   t.bands=<dirs>  t.sigs=<dirs>
+  *   <root>/bands/<dir>/        (id, band, bh)  keyed by (id, band)
+  *   <root>/sigs/<dir>/         (id, sig[k])    keyed by id
   * }}}
   *
   * The index stores k longs + `bands` bucket keys per document — NEVER
@@ -37,53 +37,24 @@ object LshIndex {
   private val Bands = "bands"
   private val Sigs = "sigs"
 
-  private def nonce() = java.util.UUID.randomUUID().toString.take(8)
-
-  private def dirs(m: TxLog.Manifest, key: String): Seq[String] =
-    m.tables.get(key).toSeq.flatMap(_.split(",")).filter(_.nonEmpty)
-
-  /** Like IvfIndex's adapter, plus a meta map — banding parameters
-    * live in manifest META, never in `tables`, whose values the
-    * reference-counted vacuum treats as directory paths. */
-  private def commitWith(spark: SparkSession, root: String, writer: String,
-                         maxAttempts: Int, recoverTornAfterMs: Long)(
-      work: Option[TxLog.Manifest] =>
-        (Map[String, String], Map[String, String], Seq[String])): Long = {
-    require(!root.contains(","), s"index root may not contain ',': $root")
-    TxLog.commitWith(spark, root, writer, maxAttempts, recoverTornAfterMs) { base =>
-      val (tables, meta, written) = work(base)
-      TxLog.Prepared(tables = tables, meta = meta, written = written)
-    }
-  }
-
-  /** Write one batch's (sigs, bands) dirs and return them. */
-  private def writeBatch(df: DataFrame, id: Column, text: Column, root: String,
-                         shingleN: Int, k: Int, bands: Int): (String, String) = {
-    val spark = df.sparkSession
+  /** One batch's rows of both tables, one document per id (a batch
+    * carrying an id twice keeps one copy): the bands derive from the
+    * same materialized signatures, so both tables of the commit agree
+    * even if the input frame is non-deterministic. */
+  private def batchRows(df: DataFrame, id: Column, text: Column,
+                        shingleN: Int, k: Int, bands: Int): Map[String, PkTableSink.TableBatch] = {
+    val docs = df.select(id.as("id"), text.as("text")).dropDuplicates("id")
     val sigs = Dedup.minhashSignatures(
-      Dedup.shingleRows(df, id, text, shingleN), k)
-    val sDir = s"$root/s-${nonce()}"
-    graft.SchemaCache.writeNew(sigs, sDir)
-    val bDir = s"$root/b-${nonce()}"
-    // derive bands from the WRITTEN sigs so both tables of the commit
-    // are consistent even if the input frame is non-deterministic
-    graft.SchemaCache.writeNew(Dedup.bandRowsOfSigs(graft.SchemaCache.read(spark, sDir), k, bands), bDir)
-    (sDir, bDir)
+      Dedup.shingleRows(docs, col("id"), col("text"), shingleN), k).localCheckpoint(true)
+    Map(Sigs -> IndexTables.rows(sigs, "id"),
+      Bands -> IndexTables.rows(Dedup.bandRowsOfSigs(sigs, k, bands), "id", "band"))
   }
-
-  private def currentOrFail(spark: SparkSession, root: String): TxLog.Manifest =
-    TxLog.current(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed LSH index under $root"))
-
-  private def readAll(spark: SparkSession, m: TxLog.Manifest,
-                      key: String): DataFrame =
-    dirs(m, key).map(graft.SchemaCache.read(spark, _)).reduce(_ unionByName _)
 
   /** Index a corpus as version 0 (or a full rebuild). Like
     * IvfIndex.build, a rebuild REPLACES the index, so it aborts loudly
     * if a concurrent commit lands mid-build. k/bands/shingleN are
     * fixed at build time and recorded in the manifest meta — adds and
-    * probes read them back, so every delta banded compatibly. */
+    * probes read them back, so every layer banded compatibly. */
   def build(df: DataFrame, id: Column, text: Column, root: String,
             shingleN: Int = 3, k: Int = 32, bands: Int = 8,
             writer: String = "build",
@@ -91,43 +62,34 @@ object LshIndex {
     require(k > 0 && bands > 0 && k % bands == 0,
       s"k ($k) must divide evenly into bands ($bands)")
     val spark = df.sparkSession
-    val baseAtEntry = TxLog.current(spark, root).map(_.version)
-    commitWith(spark, root, writer, maxAttempts, recoverTornAfterMs) { base =>
-      if (base.map(_.version) != baseAtEntry)
-        throw new IllegalStateException(
-          s"LshIndex.build: concurrent commit landed on $root during the " +
-            "rebuild — re-run build against the new current version")
-      val (sDir, bDir) = writeBatch(df, id, text, root, shingleN, k, bands)
-      (Map(Sigs -> sDir, Bands -> bDir),
-        Map("shingleN" -> shingleN.toString, "k" -> k.toString,
-          "bands" -> bands.toString),
-        Seq(sDir, bDir))
-    }
+    val entry = TxLog.current(spark, root).map(_.version)
+    IndexTables.rebuild(spark, root, "LshIndex.build", entry,
+      batchRows(df, id, text, shingleN, k, bands),
+      Map("shingleN" -> shingleN.toString, "k" -> k.toString, "bands" -> bands.toString),
+      writer, maxAttempts, recoverTornAfterMs)
   }
 
   private def params(m: TxLog.Manifest): (Int, Int, Int) =
     (m.meta("shingleN").toInt, m.meta("k").toInt, m.meta("bands").toInt)
 
-  /** Index a NEW batch as a delta commit (crawl-increment shape):
-    * signatures + band rows for the batch only, appended to the
-    * manifest's dir lists — commit I/O ∝ batch, the existing corpus is
-    * untouched. Batch ids are assumed fresh (dedup decisions happen at
-    * probe time; re-adding an id duplicates its rows until the caller
-    * rewrites via build). */
+  /** Index a NEW batch as a layer of each table (crawl-increment
+    * shape): signatures + band rows for the batch only — commit I/O ∝
+    * batch, the existing corpus is untouched. Dedup decisions happen
+    * at probe time; a re-added id replaces its signature and bands
+    * (the latest commit of a key wins). The commit aborts if a
+    * rebuild changed the banding meanwhile. */
   def add(df: DataFrame, id: Column, text: Column, root: String,
           writer: String = "add",
           maxAttempts: Int = 5, recoverTornAfterMs: Long = 60000L): Long = {
     val spark = df.sparkSession
-    commitWith(spark, root, writer, maxAttempts, recoverTornAfterMs) { base =>
-      val m = base.getOrElse(throw new IllegalStateException(
-        s"LshIndex.add: no committed index under $root — build first"))
-      val (n, k, b) = params(m)
-      val (sDir, bDir) = writeBatch(df, id, text, root, n, k, b)
-      (m.tables
-        + (Sigs -> (dirs(m, Sigs) :+ sDir).mkString(","))
-        + (Bands -> (dirs(m, Bands) :+ bDir).mkString(",")),
-        m.meta, Seq(sDir, bDir))
-    }
+    val p = params(IndexTables.current(spark, root, "LSH"))
+    val (n, k, b) = p
+    PkTableSink.mergeTxGroup(spark, root, batchRows(df, id, text, n, k, b),
+      writer, maxAttempts, recoverTornAfterMs, onClaim = base => {
+        require(base.map(params).contains(p),
+          s"LshIndex.add: $root was rebuilt with other banding during the add — re-run it")
+        Map.empty
+      })
   }
 
   /** Near-duplicates of a BATCH against the CURRENT index version:
@@ -139,12 +101,12 @@ object LshIndex {
   def probe(batch: DataFrame, id: Column, text: Column, root: String,
             thresholdNum: Int = 4, thresholdDen: Int = 5): DataFrame = {
     val spark = batch.sparkSession
-    val m = currentOrFail(spark, root)
+    val m = IndexTables.current(spark, root, "LSH")
     val (n, k, b) = params(m)
     val sigs = Dedup.minhashSignatures(
       Dedup.shingleRows(batch, id, text, n), k)
     val bandRows = Dedup.bandRowsOfSigs(sigs, k, b)
-    val cand = bandRows.as("q").join(readAll(spark, m, Bands).as("c"),
+    val cand = bandRows.as("q").join(IndexTables.read(spark, m, Bands).as("c"),
         col("q.band") === col("c.band") && col("q.bh") === col("c.bh"))
       .select(col("q.id").as("new_id"), col("c.id").as("prior_id"))
       .distinct()
@@ -153,7 +115,7 @@ object LshIndex {
       x => x === 1))
     cand
       .join(sigs.select(col("id").as("new_id"), col("sig").as("qsig")), "new_id")
-      .join(readAll(spark, m, Sigs)
+      .join(IndexTables.read(spark, m, Sigs)
         .select(col("id").as("prior_id"), col("sig").as("csig")), "prior_id")
       .withColumn("mk", matches)
       .where(col("mk") * thresholdDen >= lit(k) * thresholdNum)
@@ -162,26 +124,18 @@ object LshIndex {
           .as("est_jaccard"))
   }
 
-  /** Fold the accumulated delta dirs into ONE dir per table (same
-    * contents, fewer files). Conflict-safe: a retry re-reads the
-    * winner's dir lists, so a concurrent add is folded, never
-    * dropped. */
+  /** Fold both tables' layers into ONE layer each, in one commit
+    * (same contents, fewer files). Conflict-safe: a retry re-reads the
+    * winner's layers, so a concurrent add is folded, never dropped. */
   def compact(spark: SparkSession, root: String,
               writer: String = "compact",
               maxAttempts: Int = 5, recoverTornAfterMs: Long = 60000L): Long =
-    commitWith(spark, root, writer, maxAttempts, recoverTornAfterMs) { base =>
-      val m = base.getOrElse(throw new IllegalStateException(
-        s"LshIndex.compact: no committed index under $root"))
-      val sDir = s"$root/s-${nonce()}"
-      graft.SchemaCache.writeNew(readAll(spark, m, Sigs).coalesce(4), sDir)
-      val bDir = s"$root/b-${nonce()}"
-      graft.SchemaCache.writeNew(readAll(spark, m, Bands).coalesce(4), bDir)
-      (m.tables + (Sigs -> sDir) + (Bands -> bDir), m.meta, Seq(sDir, bDir))
-    }
+    PkTableSink.compactGroup(spark, root, Seq(Sigs, Bands), writer,
+      maxAttempts = maxAttempts, recoverTornAfterMs = recoverTornAfterMs)()
 
   /** Indexed document count at the current version. */
   def count(spark: SparkSession, root: String): Long =
-    readAll(spark, currentOrFail(spark, root), Sigs).count()
+    IndexTables.read(spark, IndexTables.current(spark, root, "LSH"), Sigs).count()
 
   /** Retention: reference-counted against kept manifests (shared
     * carried-forward dirs survive). */

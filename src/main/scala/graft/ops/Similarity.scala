@@ -897,9 +897,9 @@ object Similarity {
   val NndLocalMaxNodes = 1 << 16
 
   /** Edge-count ceiling for the task-local walk, as a per-node
-    * factor: node count alone doesn't bound the collect — a committed
-    * [[GraphIndex]] accumulates cross-dir duplicate edges under
-    * incremental adds, so a ≤ [[NndLocalMaxNodes]]-node but edge-heavy
+    * factor: node count alone doesn't bound the collect — incremental
+    * [[GraphIndex]] adds keep adding (keyed, so never duplicate) edges
+    * to old nodes, so a ≤ [[NndLocalMaxNodes]]-node but edge-heavy
     * index must stay on the BSP path. 64 edges/node ≈ 4M (long, long)
     * rows ≈ 64 MB at the node ceiling — the broadcast-side class. */
   val NndLocalEdgeFactor = 64
@@ -1103,9 +1103,9 @@ object Similarity {
       // bounded ID-ONLY probes: an over-threshold corpus learns it is
       // too big from a ≤ (n+1)-row id scan — vector payloads never
       // ship to the driver unless the local path will actually run.
-      // The edge probe guards the other axis: a committed GraphIndex
-      // accumulates cross-dir duplicate edges under incremental adds,
-      // so a small-node but edge-heavy index stays on the BSP path
+      // The edge probe guards the other axis: incremental GraphIndex
+      // adds keep adding edges to old nodes, so a small-node but
+      // edge-heavy index stays on the BSP path
       // instead of blowing driver memory on the collect.
       val maxEdges =
         math.min(localMaxNodes.toLong * NndLocalEdgeFactor, Int.MaxValue - 1L).toInt
@@ -1255,9 +1255,10 @@ object Similarity {
       val s = idx.get(e.getLong(0)); val d = idx.get(e.getLong(1))
       if (s != null && d != null) adjB(s.intValue) += d.intValue
     }
-    // .distinct: a committed GraphIndex can carry cross-dir duplicate
-    // edges — dedupe in the adjacency arrays (order-preserving, cheap)
-    // rather than paying a shuffle to dedupe the frame before collect
+    // .distinct: a committed GraphIndex's edges are keyed by (src, dst),
+    // but a caller's graph frame may repeat an edge — dedupe in the
+    // adjacency arrays (order-preserving, cheap) rather than paying a
+    // shuffle to dedupe the frame before collect
     val adj: Array[Array[Int]] = adjB.map(_.result().distinct)
     // entry points: md5-smallest ids — java.security MD5 hex equals
     // Spark's md5() hex, and (String, Long) tuple order equals the

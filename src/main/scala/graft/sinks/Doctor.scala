@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, countDistinct, when}
 
 /** Table-health DIAGNOSTIC — the code counterpart of
   * docs/TROUBLESHOOTING.md: one call reports everything the freshness
@@ -44,10 +45,10 @@ object Doctor {
 
   /** Examine `root` — a PK lake table OR one of the three persisted
     * index roots (IVF / LSH / graph-ANN), dispatched on the
-    * manifest's tables vocabulary. Index findings reuse each index's
-    * own serving rule (`count()` = live rows after tombstone
-    * ordinals) plus the drift counters the index verbs maintain, so
-    * the report cannot disagree with what a search actually pays.
+    * manifest's tables vocabulary. Index findings read the index's
+    * group tables the way a search does (`count()` = live rows of the
+    * merged layers) plus the drift counters the index verbs maintain,
+    * so the report cannot disagree with what a search actually pays.
     * Throws only when the root has no committed version at all
     * (nothing to diagnose). */
   def examine(spark: SparkSession, root: String): Report = {
@@ -55,9 +56,15 @@ object Doctor {
       s"Doctor.examine: no committed version under $root"))
     val t = m.tables
     if (t.contains("centroids") && t.contains("vectors"))
-      return examineIvf(spark, root, m)
+      return examineVectors(spark, root, m, "IvfIndex", graft.ops.IvfIndex.count(spark, root),
+        graft.ops.IvfIndex.AddsKey, "centroid staleness",
+        "vector(s) added since the centroids were trained",
+        "IvfIndex.retrain re-trains on the live set (then compact)")
     if (t.contains("graph") && t.contains("vectors"))
-      return examineGraph(spark, root, m)
+      return examineVectors(spark, root, m, "GraphIndex", graft.ops.GraphIndex.count(spark, root),
+        graft.ops.GraphIndex.AddsKey, "graph drift",
+        "node(s) inserted incrementally since the last full build",
+        "GraphIndex.rebuild re-derives the NN-descent graph")
     if (t.contains("sigs") && t.contains("bands"))
       return examineLsh(spark, root, m)
     if (t.nonEmpty)
@@ -130,76 +137,46 @@ object Doctor {
     Report(root, m.version, findings.result())
   }
 
-  /** Shared index checks: merge-on-read chain depth (every search
-    * unions the listed delta dirs) and tombstone mass vs live rows
-    * (dead rows are read + anti-joined on every search until a
-    * compact folds them). `live` is the index's own serving-rule
-    * count. */
-  private def indexCommon(chainDirs: Int, tombRows: Long,
-                          live: Long, compactCall: String): Seq[Finding] = {
-    val chain = Finding("delta chain", chainDirs <= 8,
-      s"$chainDirs delta dir(s) unioned per search",
-      if (chainDirs > 8) s"$compactCall folds them into one snapshot" else "")
+  /** IVF or graph-ANN index root, checked over its `vectors` table:
+    * merge-on-read chain depth (every search merges its layers),
+    * tombstone mass vs live rows (dead rows are read and merged away
+    * on every search until a compact drops them), and the DRIFT the
+    * index's adds counter measures — IVF's `adds_since_retrain`
+    * (vectors assigned to stale centroids crowd the wrong cells and
+    * cell-probe recall decays) or the graph's `adds_since_rebuild`
+    * (incremental inserts never revisit old nodes' edge lists, so
+    * neighborhood quality decays). Compact carries either counter:
+    * folding files neither retrains nor re-derives the graph. `live`
+    * is the index's own count. */
+  private def examineVectors(spark: SparkSession, root: String, m: TxLog.Manifest,
+                             index: String, live: Long, addsKey: String,
+                             drift: String, added: String, cure: String): Report = {
+    val layers = idxDirs(m, "vectors").size
+    val chain = Finding("delta chain", layers <= 8,
+      s"$layers layer(s) merged per read",
+      if (layers > 8) s"$index.compact folds them into one snapshot" else "")
+    // the tombstoned ids of every layer, counted in one job
+    val tombRows = PkTableSink.layersAt(spark, Some(m), "vectors", "dead").fold(0L)(
+      _.agg(countDistinct(when(col("dead"), col("id")))).head().getLong(0))
     val tombOk = tombRows == 0 || tombRows * 5 <= live
     val tomb = Finding("tombstone mass", tombOk,
-      s"$tombRows tombstone row(s) vs $live live — every search pays the anti-join",
-      if (!tombOk) s"$compactCall drops dead rows physically" else "")
-    Seq(chain, tomb)
-  }
-
-  private def tombRowsOf(spark: SparkSession, m: TxLog.Manifest): Long = {
-    val dirs = idxDirs(m, "tombstones")
-    if (dirs.isEmpty) 0L
-    else dirs.map(d => spark.read.parquet(d)).reduce(_ unionByName _)
-      .select("id").distinct().count()
-  }
-
-  /** IVF index root: chain, tombstones, and CENTROID STALENESS — the
-    * `adds_since_retrain` counter the index verbs maintain (compact
-    * carries it: folding files doesn't retrain). Vectors assigned to
-    * stale centroids crowd the wrong cells and cell-probe recall
-    * decays. */
-  private def examineIvf(spark: SparkSession, root: String,
-                         m: TxLog.Manifest): Report = {
-    val live = graft.ops.IvfIndex.count(spark, root)
-    val adds = m.meta.get(graft.ops.IvfIndex.AddsKey).map(_.toLong).getOrElse(0L)
+      s"$tombRows tombstoned id(s) vs $live live — every read merges them away",
+      if (!tombOk) s"$index.compact drops dead rows physically" else "")
+    val adds = m.meta.get(addsKey).map(_.toLong).getOrElse(0L)
     val driftOk = adds == 0 || adds * 2 <= live
-    val findings = indexCommon(idxDirs(m, "vectors").size,
-      tombRowsOf(spark, m), live, "IvfIndex.compact") :+
-      Finding("centroid staleness", driftOk,
-        s"$adds vector(s) added since the centroids were trained ($live live)",
-        if (!driftOk) "IvfIndex.retrain re-trains on the live set (then compact)"
-        else "")
-    Report(root, m.version, findings)
-  }
-
-  /** Graph-ANN index root: chain, tombstones, and GRAPH-QUALITY DRIFT
-    * — `adds_since_rebuild` (incremental inserts never revisit old
-    * nodes' edge lists, so neighborhood quality decays as the
-    * incrementally-added share grows; compact folds files but cannot
-    * cure this — only rebuild re-derives the graph). */
-  private def examineGraph(spark: SparkSession, root: String,
-                           m: TxLog.Manifest): Report = {
-    val live = graft.ops.GraphIndex.count(spark, root)
-    val adds = m.meta.get(graft.ops.GraphIndex.AddsKey).map(_.toLong).getOrElse(0L)
-    val driftOk = adds == 0 || adds * 2 <= live
-    val findings = indexCommon(idxDirs(m, "vectors").size,
-      tombRowsOf(spark, m), live, "GraphIndex.compact") :+
-      Finding("graph drift", driftOk,
-        s"$adds node(s) inserted incrementally since the last full build ($live live)",
-        if (!driftOk) "GraphIndex.rebuild re-derives the NN-descent graph" else "")
-    Report(root, m.version, findings)
+    Report(root, m.version, Seq(chain, tomb,
+      Finding(drift, driftOk, s"$adds $added ($live live)", if (!driftOk) cure else "")))
   }
 
   /** LSH dedup index root: chain depth only — signatures are exact
     * content functions (no drift), and the index has no delete verb
     * (dedup corpora only grow; quality never decays, only probe cost
-    * as the delta chain deepens). */
+    * as the layers accumulate). */
   private def examineLsh(spark: SparkSession, root: String,
                          m: TxLog.Manifest): Report = {
     val nSigs = idxDirs(m, "sigs").size
     val findings = Seq(Finding("delta chain", nSigs <= 8,
-      s"$nSigs signature delta dir(s) unioned per probe " +
+      s"$nSigs signature layer(s) merged per probe " +
         s"(${graft.ops.LshIndex.count(spark, root)} signatures live)",
       if (nSigs > 8) "LshIndex.compact folds them into one snapshot" else ""))
     Report(root, m.version, findings)
@@ -208,7 +185,7 @@ object Doctor {
   /** Generic multi-table GROUP root (mergeTxGroup commits: the
     * sketch-MV roots QskMv/KmvMv maintain, or any TableBatch group):
     * one merge-on-read chain finding PER TABLE — every read of table
-    * `t` unions its listed dirs, and a per-micro-batch writer grows
+    * `t` merges its listed layers, and a per-micro-batch writer grows
     * each list by one dir per commit, so an unmaintained MV degrades
     * linearly in batches until a compact folds it. */
   private def examineGroup(spark: SparkSession, root: String,
@@ -216,7 +193,7 @@ object Doctor {
     val findings = m.tables.keys.toSeq.sorted.map { tbl =>
       val n = idxDirs(m, tbl).size
       Finding(s"delta chain '$tbl'", n <= 8,
-        s"$n delta dir(s) unioned per read of '$tbl'",
+        s"$n layer(s) merged per read of '$tbl'",
         if (n > 8)
           s"""PkTableSink.compactTxGroup(root, "$tbl") folds them into one snapshot"""
         else "")
@@ -238,7 +215,8 @@ object Doctor {
       if (bad("delta chain") || bad("tombstone mass"))
         graft.ops.IvfIndex.compact(spark, root, writer = writer)
       if (bad("centroid staleness")) {
-        val k = spark.read.parquet(t("centroids")).count().toInt
+        val k = PkTableSink.readTxGroup(spark, root, "centroids", spark.emptyDataFrame)
+          .count().toInt
         graft.ops.IvfIndex.retrain(spark, root, k = math.max(1, k),
           writer = writer)
       }
@@ -252,7 +230,7 @@ object Doctor {
         graft.ops.LshIndex.compact(spark, root, writer = writer)
     } else if (t.nonEmpty) {
       // generic group root (sketch MVs et al.): compact each
-      // over-chained table — reads after this union ONE dir per table
+      // over-chained table — reads after this merge ONE layer per table
       t.keys.toSeq.sorted.foreach { tbl =>
         if (bad(s"delta chain '$tbl'"))
           PkTableSink.compactTxGroup(spark, root, tbl, writer = writer)

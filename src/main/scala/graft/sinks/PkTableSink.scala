@@ -103,8 +103,13 @@ object PkTableSink {
     // the scan reads them as null.
     val layered = project.fold(scan)(want => scan.select(
       scan.columns.filter(c => want.contains(c) || c == CommitSeq).map(col).toIndexedSeq: _*))
-    latest(layered, dirs.size, storedKeys(meta), meta(MetaVers).split(",").toSeq)
+    latest(layered, dirs.size, storedKeys(meta), versOf(meta))
   }
+
+  /** A table's version columns; none for a commit-ordered table (the
+    * index tables), whose latest row per key is its latest commit's. */
+  private def versOf(meta: Map[String, String]): Seq[String] =
+    meta.getOrElse(MetaVers, "").split(",").toSeq.filter(_.nonEmpty)
 
   /** Latest per key over a layered scan of `layers` dirs, equal
     * versions ordered by commit; a single layer is already one row per
@@ -214,31 +219,34 @@ object PkTableSink {
 
   private final case class CompactSkip(version: Long) extends RuntimeException
 
-  /** What one compaction folds: the merged `rows`, laid out by `pack`
-    * into the given number of files and written with `options`, then
-    * `claim`ed as the commit for the new dir under `dirPrefix`. */
+  /** What one compaction writes into one new dir under `dirPrefix`:
+    * the merged `rows`, laid out by `pack` into the given number of
+    * files and written with `options`. */
   private final case class Fold(rows: DataFrame, pack: (DataFrame, Int) => DataFrame,
-                                dirPrefix: String, claim: String => TxLog.Prepared,
-                                options: Map[String, String] = Map.empty)
+                                dirPrefix: String, options: Map[String, String] = Map.empty)
 
   /** The base rewrite every compaction shares: under `root`'s claim,
-    * `fold` sees the current manifest and returns what to rewrite — or
-    * None to skip, returning the current version with no commit. A
-    * count pass sizes the file count (compaction is already an
-    * O(live keys) rewrite; one aggregate-only pass is noise), and the
-    * packed rows land in a fresh nonce-named `t<version>` dir. */
+    * `plan` sees the current manifest and returns the folds to write
+    * and the commit of their new dirs (in fold order) — or None to
+    * skip, returning the current version with no commit. A count pass
+    * sizes each fold's file count (compaction is already an O(live
+    * keys) rewrite; one aggregate-only pass is noise), and the packed
+    * rows land in a fresh nonce-named `t<version>` dir. */
   private def compactWith(spark: SparkSession, root: String, writer: String, op: String,
-                          targetRowsPerFile: Long, maxAttempts: Int,
-                          recoverTornAfterMs: Long)(fold: TxLog.Manifest => Option[Fold]): Long =
+                          targetRowsPerFile: Long, maxAttempts: Int, recoverTornAfterMs: Long)(
+      plan: TxLog.Manifest => Option[(Seq[Fold], Seq[String] => TxLog.Prepared)]): Long =
     try TxLog.commitWith(spark, root, writer, maxAttempts, recoverTornAfterMs) { base =>
       val m = base.getOrElse(throw new IllegalStateException(
         s"$op: no committed version under $root"))
-      val f = fold(m).getOrElse(throw CompactSkip(m.version))
-      val dir = s"${f.dirPrefix}/t${m.version + 1}-$writer-${nonce()}"
-      val rows = f.rows.count()
-      val nFiles = math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-      graft.SchemaCache.writeNew(f.pack(f.rows, nFiles), dir, f.options)
-      f.claim(dir)
+      val (folds, claim) = plan(m).getOrElse(throw CompactSkip(m.version))
+      val dirs = folds.map { f =>
+        val dir = s"${f.dirPrefix}/t${m.version + 1}-$writer-${nonce()}"
+        val rows = f.rows.count()
+        val nFiles = math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile).toInt
+        graft.SchemaCache.writeNew(f.pack(f.rows, nFiles), dir, f.options)
+        dir
+      }
+      claim(dirs).copy(written = dirs)
     } catch { case CompactSkip(v) => v }
 
   /** Key-range-sorted bin-packing: each file covers a disjoint range
@@ -282,10 +290,10 @@ object PkTableSink {
         // default bloom capacity = the packing target, so each file's
         // filter is sized for the rows actually landing in it (a fixed
         // smaller default realizes ~25-30% fpp at 4M-row files)
-        Some(Fold(mergedTx(spark, m), byKey(keyColsOf(m.meta)), root,
-          dir => TxLog.Prepared(dataDir = dir, meta = keptMeta, written = Seq(dir)),
+        Some(Seq(Fold(mergedTx(spark, m), byKey(keyColsOf(m.meta)), root,
           Footers.bloomOptions(effBloom,
-            if (bloomExpectedPerFile > 0) bloomExpectedPerFile else targetRowsPerFile)))
+            if (bloomExpectedPerFile > 0) bloomExpectedPerFile else targetRowsPerFile))) ->
+          (ds => TxLog.Prepared(dataDir = ds.head, meta = keptMeta)))
       }
     }
 
@@ -330,8 +338,8 @@ object PkTableSink {
         recoverTornAfterMs) { m0 =>
       val m = requireSingleTable(m0, root)
       if (m.deltas.size < minDeltas) None
-      else Some(Fold(mergedTx(spark, m), zorder, root, dir => TxLog.Prepared(dataDir = dir,
-        meta = m.meta + ("zorder" -> zCols.mkString(",")), written = Seq(dir))))
+      else Some(Seq(Fold(mergedTx(spark, m), zorder, root)) -> (ds => TxLog.Prepared(
+        dataDir = ds.head, meta = m.meta + ("zorder" -> zCols.mkString(",")))))
     }
   }
 
@@ -546,8 +554,8 @@ object PkTableSink {
       val (live, dead) = partialMerge(spark, m)
       val full = live.withColumn(Tombstone, lit(false))
         .unionByName(dead.withColumn(Tombstone, lit(true)))
-      Some(Fold(full, byKey(keyColsOf(m.meta)), root, dir => TxLog.Prepared(dataDir = dir,
-        meta = m.meta.filterNot(_._1.startsWith(PcolsPrefix)), written = Seq(dir))))
+      Some(Seq(Fold(full, byKey(keyColsOf(m.meta)), root)) -> (ds => TxLog.Prepared(
+        dataDir = ds.head, meta = m.meta.filterNot(_._1.startsWith(PcolsPrefix)))))
     }
 
   /** CHANGE FEED between two committed versions (Delta CDF /
@@ -690,6 +698,7 @@ object PkTableSink {
       .withColumn(Tombstone, coalesce(col(b.deleteFlag), lit(false)))
       .drop(b.deleteFlag)
     if (b.preCompacted) withTomb
+    else if (b.versionCols.isEmpty) withTomb.dropDuplicates(b.keyCols)
     else PkTable.latestPerKey(withTomb, b.keyCols, b.versionCols.map(col))
   }
 
@@ -780,13 +789,24 @@ object PkTableSink {
     * one batch and a late retry cannot lower the watermark.
     * [[compactTxGroup]] folds a table's list back to one dir;
     * [[vacuumTxGroup]] reference-counts shared dirs.
+    *
+    * A table named in `replace` becomes its batch alone (its dir
+    * replaces the list instead of extending it) — a rebuild. `onClaim`
+    * runs in every claim attempt with the base that attempt claims:
+    * the meta it returns rides in the manifest (a counter added to
+    * the base the commit LANDS on, not the one its caller read, so a
+    * lost race drops no other writer's count), and a throw aborts
+    * the commit, every written dir deleted (how a rebuild refuses a
+    * base that moved since it read its input).
     */
   def mergeTxGroup(spark: SparkSession, groupRoot: String,
                    batches: Map[String, TableBatch], writer: String,
                    maxAttempts: Int = 5,
                    recoverTornAfterMs: Long = 60000L,
                    extraMeta: Map[String, String] = Map.empty,
-                   staged: Seq[StagedBatch] = Nil): Long = {
+                   staged: Seq[StagedBatch] = Nil,
+                   replace: Set[String] = Set.empty,
+                   onClaim: Option[TxLog.Manifest] => Map[String, String] = _ => Map.empty): Long = {
     require(batches.nonEmpty || staged.nonEmpty, "mergeTxGroup: no batches")
     // ',' joins dir LISTS in manifest values — keep it out of every
     // path component we control
@@ -826,11 +846,13 @@ object PkTableSink {
         // caller meta (e.g. per-writer batch watermarks) rides in the
         // same manifest flip — readable driver-side with zero jobs;
         // table key/version meta wins on any key collision
+        val claimMeta = onClaim(base)
         TxLog.Prepared(
           tables = prevTables ++ all.map { s =>
-            s.table -> (prevTables.get(s.table).toSeq.filter(_.nonEmpty) :+ s.dir).mkString(",")
+            s.table -> (if (replace(s.table)) s.dir
+              else (prevTables.get(s.table).toSeq.filter(_.nonEmpty) :+ s.dir).mkString(","))
           },
-          meta = prevMeta ++ extraMeta ++ all.flatMap(_.meta),
+          meta = prevMeta ++ extraMeta ++ claimMeta ++ all.flatMap(_.meta),
           written = Nil)
       }
     } catch { case e: Throwable => discard(spark, groupRoot, all.toSeq); throw e }
@@ -858,17 +880,30 @@ object PkTableSink {
                      writer: String, minDeltas: Int = 0,
                      targetRowsPerFile: Long = 4L << 20,
                      maxAttempts: Int = 5, recoverTornAfterMs: Long = 60000L): Long =
+    compactGroup(spark, groupRoot, Seq(table), writer, minDeltas, targetRowsPerFile,
+      maxAttempts, recoverTornAfterMs)()
+
+  /** [[compactTxGroup]] over several tables in ONE commit: once any of
+    * them has enough deltas, every one is folded, `keep(m, table,
+    * rows)` choosing which of a table's merged rows the fold writes.
+    * A commit-ordered table (no version columns) also drops its
+    * tombstones: whatever commits after the fold is newer than it. */
+  private[graft] def compactGroup(spark: SparkSession, groupRoot: String, tables: Seq[String],
+                                  writer: String, minDeltas: Int = 0,
+                                  targetRowsPerFile: Long = 4L << 20, maxAttempts: Int = 5,
+                                  recoverTornAfterMs: Long = 60000L)(
+      keep: (TxLog.Manifest, String, DataFrame) => DataFrame = (_, _, rows) => rows): Long =
     compactWith(spark, groupRoot, writer, "compactTxGroup", targetRowsPerFile, maxAttempts,
         recoverTornAfterMs) { m =>
-      val dirs = m.tables.getOrElse(table, throw new IllegalArgumentException(
-        s"compactTxGroup: no table '$table' under $groupRoot")).split(",").toSeq
-      if (dirs.size - 1 < math.max(minDeltas, 1)) None
-      else {
-        val meta = groupTableMeta(m, table)
-        Some(Fold(mergeDirs(spark, dirs, meta), byKey(storedKeys(meta)), s"$groupRoot/$table",
-          dir => TxLog.Prepared(tables = m.tables + (table -> dir), meta = m.meta,
-            written = Seq(dir))))
-      }
+      val dirs = tables.map(t => m.tables.getOrElse(t, throw new IllegalArgumentException(
+        s"compactTxGroup: no table '$t' under $groupRoot")).split(",").toSeq)
+      if (dirs.forall(_.size - 1 < math.max(minDeltas, 1))) None
+      else Some(tables.zip(dirs).map { case (t, ds) =>
+        val meta = groupTableMeta(m, t)
+        val rows = mergeDirs(spark, ds, meta)
+        Fold(keep(m, t, if (versOf(meta).isEmpty) rows.where(!col(Tombstone)) else rows),
+          byKey(storedKeys(meta)), s"$groupRoot/$t")
+      } -> (ds => TxLog.Prepared(tables = m.tables ++ tables.zip(ds), meta = m.meta)))
     }
 
   /** Live contents of one table of a group-committed snapshot —
@@ -877,12 +912,15 @@ object PkTableSink {
                   schemaOf: => DataFrame): DataFrame =
     readGroupAt(spark, TxLog.current(spark, groupRoot), table, schemaOf)
 
-  /** Live rows of one group table as of manifest `m`; `schemaOf`'s
-    * empty frame when `m` is absent or lacks the table. */
+  /** Live rows of one group table as of manifest `m`, narrowed to the
+    * `project` columns when given; `schemaOf`'s empty frame when `m`
+    * is absent or lacks the table. */
   private[graft] def readGroupAt(spark: SparkSession, m: Option[TxLog.Manifest],
-                                 table: String, schemaOf: => DataFrame): DataFrame =
+                                 table: String, schemaOf: => DataFrame,
+                                 project: Option[Seq[String]] = None): DataFrame =
     m.flatMap(mf => mf.tables.get(table).map(list => dropTombstones(
-      mergeDirs(spark, list.split(",").toSeq.filter(_.nonEmpty), groupTableMeta(mf, table)))))
+      mergeDirs(spark, list.split(",").toSeq.filter(_.nonEmpty), groupTableMeta(mf, table),
+        project.map(_ :+ Tombstone)))))
       .getOrElse(schemaOf.limit(0))
 
   /** Every stored row of one group table as of manifest `m`, unmerged:
@@ -911,7 +949,7 @@ object PkTableSink {
     m.flatMap(mf => layersAt(spark, m, table, Tombstone).map { layers =>
       val meta = groupTableMeta(mf, table)
       PkTable.latestPerKey(restrict(layers), storedKeys(meta),
-        meta(MetaVers).split(",").toSeq.map(col) :+ col(CommitSeq))
+        versOf(meta).map(col) :+ col(CommitSeq))
         .where(!col(Tombstone)).drop(Tombstone, CommitSeq)
     }).getOrElse(schemaOf.limit(0))
 

@@ -75,4 +75,43 @@ class CodegenReuseSpec extends SparkSpec {
     assert(counts.forall(_._2.drop(1).forall(_ <= 2)), counts.map { case (k, c) =>
       s"$k compiles in rounds 1-6: ${c.mkString(", ")}" }.mkString("; "))
   }
+
+  test("IVF and graph index searches after 40 adds run the jobs and compile the " +
+    "classes of a search after 2") {
+    // a layered read's plan is the same at every depth; an N-way union
+    // of the layers would add a branch, and its classes, per add
+    import graft.ops.{GraphIndex, IvfIndex}
+    val emb = Tables.embeddings(spark, sfDir)
+    val queries = emb.where(col("vec_id") % 50 === 0)
+      .select((col("vec_id") + 100000L).as("qid"), col("embedding").as("qvec"))
+    def one(i: Int) = emb.where(col("vec_id") === 200L + i)
+    // (jobs, compiles) of one search
+    def cost(search: => DataFrame): (Int, Long) = {
+      val c0 = compiles()
+      val (_, jobs) = JobCount(spark)(search.collect())
+      (jobs, compiles() - c0)
+    }
+    val indexes = Seq[(String, String => Unit, (String, Int) => Unit, String => DataFrame)](
+      ("ivf",
+        r => IvfIndex.build(emb.where(col("vec_id") < 200), col("vec_id"), col("embedding"), r,
+          k = 4),
+        (r, i) => IvfIndex.add(one(i), col("vec_id"), col("embedding"), r),
+        r => IvfIndex.search(spark, r, queries, col("qid"), col("qvec"), k = 3, nprobe = 2)),
+      ("graph",
+        r => GraphIndex.build(emb.where(col("vec_id") < 200), col("vec_id"), col("embedding"), r),
+        (r, i) => GraphIndex.add(one(i), col("vec_id"), col("embedding"), r),
+        r => GraphIndex.search(spark, r, queries, col("qid"), col("qvec"), k = 3)))
+    indexes.foreach { case (name, build, add, search) =>
+      val root = TestTmp.dir("codegen").toString + s"/$name"
+      build(root)
+      (0 until 2).foreach(add(root, _))
+      search(root).collect() // warm: the first search compiles its plan
+      val at2 = cost(search(root))
+      (2 until 40).foreach(add(root, _))
+      val at40 = cost(search(root))
+      // compiles are counted JVM-wide, so allow the MV cases' 2 strays
+      assert(at40._1 == at2._1 && at40._2 <= at2._2 + 2,
+        s"$name (jobs, compiles) after 2 adds $at2, after 40 $at40")
+    }
+  }
 }

@@ -122,11 +122,11 @@ class KMeansSpec extends SparkSpec {
       s.groupBy(_._1).view.mapValues(_.map(_._3)).toMap
     assert(byQ(fromIndex) == byQ(inMemSet))
 
-    // physical layout: the committed vectors dir is partitioned by
-    // cell — the property directory-pruning probes depend on
+    // physical layout: the committed vectors dir stores each vector's
+    // cell as a plain long column
     val m0 = TxLog.at(spark, root, 0L).get
-    assert(new java.io.File(m0.tables("vectors")).listFiles()
-      .exists(_.getName.startsWith("cell=")))
+    assert(spark.read.parquet(m0.tables("vectors")).schema("cell").dataType ==
+      org.apache.spark.sql.types.LongType)
 
     // incremental add commits a delta version; contents grow
     val v1 = IvfIndex.add(emb.where(col("vec_id") >= 250 && col("vec_id") < 260),
@@ -191,6 +191,27 @@ class KMeansSpec extends SparkSpec {
       .select(col("id")).as[Long].collect().toSet
     assert(raw.size == 81 && !raw.exists(i => i < 20 && i != 5))
     assert(raw.contains(5L))
+  }
+
+  test("IVF index: a re-added live id is stored once — counted once, ranked at most once per query") {
+    import graft.ops.IvfIndex
+    import spark.implicits._
+    val root = TestTmp.dir("ivfreadd").toString + "/idx"
+    IvfIndex.build(emb.where(col("vec_id") < 100), col("vec_id"), col("embedding"), root, k = 4)
+    // re-add ten live ids, one of them twice in the same batch
+    val again = emb.where(col("vec_id") < 10)
+    IvfIndex.add(again.unionByName(again.where(col("vec_id") === 3)),
+      col("vec_id"), col("embedding"), root)
+    assert(IvfIndex.count(spark, root) == 100)
+    // nprobe = k: every cell is probed, so a stored copy would surface
+    val queries = emb.where(col("vec_id") < 40)
+      .select((col("vec_id") + 100000L).as("qid"), col("embedding").as("qvec"))
+    val hits = IvfIndex.search(spark, root, queries, col("qid"), col("qvec"), k = 10, nprobe = 4)
+      .select(col("qid"), col("nid")).as[(Long, Long)].collect()
+    assert(hits.exists(_._2 < 10))
+    hits.groupBy(_._1).foreach { case (q, hs) =>
+      assert(hs.map(_._2).distinct.length == hs.length, s"query $q ranked a neighbor twice")
+    }
   }
 
   test("ann_ivf_kmeans query returns ranked neighbors for every query point") {

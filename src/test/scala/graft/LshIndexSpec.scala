@@ -94,8 +94,23 @@ class LshIndexSpec extends SparkSpec {
     assert(LshIndex.count(spark, r) == 5L)
     val fs = new org.apache.hadoop.fs.Path(r)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = fs.listStatus(new org.apache.hadoop.fs.Path(r))
-      .map(_.getPath.getName).filter(n => n.startsWith("s-") || n.startsWith("b-"))
-    assert(live.length == 2, s"expected only the compacted dirs, got ${live.toSeq}")
+    val live = Seq("sigs", "bands").flatMap(t =>
+      fs.listStatus(new org.apache.hadoop.fs.Path(s"$r/$t")).map(_.getPath.getName))
+    assert(live.sorted == Seq(mc.tables("sigs"), mc.tables("bands"))
+      .map(d => new org.apache.hadoop.fs.Path(d).getName).sorted,
+      s"expected only the compacted dirs, got $live")
+  }
+
+  test("a re-added id replaces its rows: counted once, at most once per probe") {
+    val r = root("lsh-readd")
+    LshIndex.build(corpus, col("doc_id"), col("text"), r)
+    // re-add doc 1, twice in the same batch
+    val again = corpus.where(col("doc_id") === 1L)
+    LshIndex.add(again.unionByName(again), col("doc_id"), col("text"), r)
+    assert(LshIndex.count(spark, r) == 3L)
+    val got = LshIndex.probe(batch, col("doc_id"), col("text"), r,
+        thresholdNum = 1, thresholdDen = 2)
+      .select(col("new_id"), col("prior_id")).as[(Long, Long)].collect().toSeq
+    assert(got == Seq((10L, 1L)), s"got $got")
   }
 }

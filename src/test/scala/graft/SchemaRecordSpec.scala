@@ -19,11 +19,10 @@ class SchemaRecordSpec extends SparkSpec {
 
   /** Run `write` against `root` and check every dir it added: nothing
     * has read them yet, so a job-free schema can only be a record. */
-  private def checkNewDirs(root: String, expectAtLeast: Int,
-                           skip: String => Boolean = _ => false)(write: => Any): Unit = {
+  private def checkNewDirs(root: String, expectAtLeast: Int)(write: => Any): Unit = {
     val before = TxLog.current(spark, root).map(dirsOf).getOrElse(Set.empty)
     write
-    val added = (dirsOf(TxLog.current(spark, root).get) -- before).filterNot(skip)
+    val added = dirsOf(TxLog.current(spark, root).get) -- before
     assert(added.size >= expectAtLeast, s"expected new dirs under $root, got $added")
     added.foreach { d =>
       val (recorded, jobs) = JobCount(spark)(SchemaCache.schemaOf(spark, d))
@@ -112,16 +111,10 @@ class SchemaRecordSpec extends SparkSpec {
     val vecs = (0L until 60L).map(i => (i, Seq((i % 7).toDouble, (i % 5).toDouble, 1.0 + i % 3)))
       .toDF("id", "vec")
     val gone = vecs.where(col("id") < 5).select("id")
-    // the IVF vectors dir is partitioned by cell and stays on inference
     val ivf = s"$base/ivf"
-    def cellPartitioned(d: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(d)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
-        .exists(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-    }
-    checkNewDirs(ivf, 1, cellPartitioned)(IvfIndex.build(vecs, col("id"), col("vec"), ivf, k = 2))
-    checkNewDirs(ivf, 1, cellPartitioned)(IvfIndex.delete(spark, ivf, gone, col("id")))
-    checkNewDirs(ivf, 1, cellPartitioned)(IvfIndex.retrain(spark, ivf, k = 2))
+    checkNewDirs(ivf, 2)(IvfIndex.build(vecs, col("id"), col("vec"), ivf, k = 2))
+    checkNewDirs(ivf, 1)(IvfIndex.delete(spark, ivf, gone, col("id")))
+    checkNewDirs(ivf, 2)(IvfIndex.retrain(spark, ivf, k = 2))
 
     val graph = s"$base/graph"
     checkNewDirs(graph, 2)(GraphIndex.build(vecs.where(col("id") < 40), col("id"), col("vec"), graph))
