@@ -59,6 +59,26 @@ object FilteredAnn {
       .select(col("qid"), (col("pos") + 1).cast("long").as("rank"),
         col("e._2").as("nid"), Rounding.r(col("e._1"), 4).as("cos"))
 
+  /** The two-regime strategy over a persisted index's live vectors
+    * `live = (id, v, n2, …)`: no rows when nothing is eligible, the
+    * exact leg when at most `bruteCut` of `live` is eligible, else the
+    * index's eligible-only ranked top-k, `broad(liveElig, elig)`,
+    * filled exactly ([[fillExact]]). Output (qid, rank, nid, cos). */
+  def overIndex(live: DataFrame, eligible: DataFrame, eligibleId: Column, q: DataFrame,
+                k: Int, bruteCut: Double)(
+      broad: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val elig = eligible.select(eligibleId.cast("long").as("id")).distinct()
+    val liveElig = live.join(elig, Seq("id"), "left_semi")
+    val nLive = live.count()
+    val nElig = liveElig.count()
+    val corpus = liveElig.select(col("id"), col("v"), col("n2"))
+    if (nElig == 0)
+      q.select(col("qid"), lit(0L).as("rank"), col("qid").as("nid"), lit(0.0).as("cos"))
+        .where(lit(false))
+    else if (nLive == 0 || nElig.toDouble / nLive <= bruteCut) bruteTopk(corpus, q, k)
+    else fillExact(broad(liveElig, elig), corpus, q, k, nElig)
+  }
+
   /** Post-filter a bounded candidate frame `cand = (qid, nid, cos)`
     * to eligible ids and re-rank to top-k. `elig` may be corpus-scale:
     * it streams once against the broadcast candidates (inner join on

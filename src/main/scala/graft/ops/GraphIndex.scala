@@ -46,14 +46,18 @@ object GraphIndex {
     * re-deriving the graph; only [[rebuild]]/[[build]] reset it). */
   val AddsKey = "adds_since_rebuild"
 
-  private def prep(df: DataFrame, id: Column, vec: Column): DataFrame =
-    df.select(id.as("id"), Similarity.toDouble(vec).as("v")).dropDuplicates("id")
-      .withColumn("n2", Similarity.normSq(col("v")))
+  /** The committed edges for a walk: the stored rows, unmerged. An
+    * add that densifies a live node can store an edge again in a later
+    * layer; both walks dedupe their frontier's neighbors, so the
+    * repeat costs them nothing, while a latest-per-key merge would
+    * shuffle every edge on every read. */
+  private def walkEdges(spark: SparkSession, m: TxLog.Manifest): DataFrame =
+    IndexTables.stored(spark, m, Graph).select(col("src"), col("dst"))
 
-  private def replaceAll(spark: SparkSession, root: String, op: String, entry: Option[Long],
+  private def replaceAll(spark: SparkSession, root: String, m: Option[TxLog.Manifest],
                          v: DataFrame, g: DataFrame, writer: String,
                          maxAttempts: Int, recoverTornAfterMs: Long): Long =
-    IndexTables.rebuild(spark, root, op, entry, Map(
+    IndexTables.rebuild(spark, root, m, Map(
         Vectors -> IndexTables.rows(v.select(col("id"), col("v"), col("n2")), "id"),
         Graph -> IndexTables.rows(g.select(col("src"), col("dst")).distinct(), "src", "dst")),
       Map(AddsKey -> "0"), writer, maxAttempts, recoverTornAfterMs)
@@ -66,15 +70,14 @@ object GraphIndex {
             writer: String = "build",
             maxAttempts: Int = 5, recoverTornAfterMs: Long = 60000L,
             graphOpt: Option[DataFrame] = None): Long = {
-    val spark = df.sparkSession
-    val entry = TxLog.current(spark, root).map(_.version)
     // graphOpt: a caller already holding THE nndSearchGraph of df
     // (e.g. an amortized per-corpus build shared with in-memory
     // queries) passes it in to skip the recompute — the build is
     // deterministic, so the committed index is identical either way
     val g = graphOpt.getOrElse(Similarity.nndSearchGraph(df, id, vec))
-    replaceAll(spark, root, "GraphIndex.build", entry, prep(df, id, vec), g, writer,
-      maxAttempts, recoverTornAfterMs)
+    IndexTables.optimistic(df.sparkSession, root, "GraphIndex.build", 1)(m =>
+      replaceAll(df.sparkSession, root, m, IndexTables.vectors(df, id, vec), g, writer,
+        maxAttempts, recoverTornAfterMs))
   }
 
   /** Incremental insert — the batched HNSW construction step: beam-
@@ -85,42 +88,50 @@ object GraphIndex {
     * that make the node REACHABLE from the old graph), and the
     * batch's own internal K-NN graph (so a dense new cluster routes
     * within itself). Work ∝ batch·hops·beam·K — independent of the
-    * indexed corpus size. Returns the committed version. */
+    * indexed corpus size. The search and the live anti-join below
+    * read one version; if another commit lands before the claim, the
+    * add re-runs against it (so a delete of a re-added id that lands
+    * first is resurrected, and two adds of one new id count it once).
+    * Returns the committed version. */
   def add(df: DataFrame, id: Column, vec: Column, root: String,
           writer: String = "add",
           maxAttempts: Int = 5, recoverTornAfterMs: Long = 60000L): Long = {
     val spark = df.sparkSession
-    val batch = prep(df, id, vec).localCheckpoint(true)
+    val batch = IndexTables.vectors(df, id, vec).localCheckpoint(true)
     val internal =
       if (batch.limit(2).count() < 2)
         spark.range(0).select(col("id").as("src"), col("id").as("dst"))
       else Similarity.nnDescentGraph(batch, col("id"), col("v"))
-    val m = IndexTables.current(spark, root, "graph")
-    val live = IndexTables.read(spark, m, Vectors)
-    val q = batch.select(col("id").as("qid"), col("v").as("qv"),
-      col("n2").as("qn2"))
-    val found = Similarity.nndBeamSearch(live, IndexTables.read(spark, m, Graph), q,
-        k = Similarity.NndGraphK)
-      .select(col("qid").as("src"), col("nid").as("dst"))
-      .localCheckpoint(true)
-    val edges = found
-      .unionByName(found.select(col("dst").as("src"), col("src").as("dst")))
-      .unionByName(internal)
-    // CONTRACT: re-adding a live id is edge densification ONLY — the
-    // stored vector is kept even if the batch carries a changed one
-    // (a vector UPDATE is delete(id) then add(id), two commits), so
-    // the anti-join keeps it out of the vectors layer and out of the
-    // drift counter. Its edges stay: every endpoint is live. A
-    // TOMBSTONED id is not live and so resurrects.
-    val fresh = batch.join(live.select(col("id")), Seq("id"), "left_anti")
-      .localCheckpoint(true)
-    val nFresh = fresh.count()
-    PkTableSink.mergeTxGroup(spark, root, Map(
-        Vectors -> IndexTables.rows(fresh.select(col("id"), col("v"), col("n2")), "id"),
-        Graph -> IndexTables.rows(edges.select(col("src"), col("dst")).distinct(),
-          "src", "dst")),
-      writer, maxAttempts, recoverTornAfterMs,
-      onClaim = base => Map(AddsKey -> (IndexTables.counter(base, AddsKey) + nFresh).toString))
+    IndexTables.optimistic(spark, root, "GraphIndex.add", maxAttempts) { cur =>
+      val m = IndexTables.get(cur, root, "graph")
+      val live = IndexTables.read(spark, m, Vectors)
+      val q = batch.select(col("id").as("qid"), col("v").as("qv"),
+        col("n2").as("qn2"))
+      val found = Similarity.nndBeamSearch(live, walkEdges(spark, m), q,
+          k = Similarity.NndGraphK)
+        .select(col("qid").as("src"), col("nid").as("dst"))
+        .localCheckpoint(true)
+      val edges = found
+        .unionByName(found.select(col("dst").as("src"), col("src").as("dst")))
+        .unionByName(internal)
+      // CONTRACT: re-adding a live id is edge densification ONLY — the
+      // stored vector is kept even if the batch carries a changed one
+      // (a vector UPDATE is delete(id) then add(id), two commits), so
+      // the anti-join keeps it out of the vectors layer and out of the
+      // drift counter. Its edges stay: every endpoint is live. A
+      // TOMBSTONED id is not live and so resurrects.
+      val fresh = batch.join(live.select(col("id")), Seq("id"), "left_anti")
+        .localCheckpoint(true)
+      val nFresh = fresh.count()
+      PkTableSink.mergeTxGroup(spark, root, Map(
+          Vectors -> IndexTables.rows(fresh.select(col("id"), col("v"), col("n2")), "id")
+            .copy(newKeys = true),
+          Graph -> IndexTables.rows(edges.select(col("src"), col("dst")).distinct(),
+            "src", "dst")),
+        writer, maxAttempts, recoverTornAfterMs,
+        onClaim = base => IndexTables.unmoved(base.map(_.version).contains(m.version))(
+          Map(AddsKey -> (IndexTables.counter(base, AddsKey) + nFresh).toString)))
+    }
   }
 
   /** Tombstone a batch of node ids as a layer (I/O ∝ batch; no vector
@@ -149,18 +160,18 @@ object GraphIndex {
 
   /** Re-derive the whole graph from the live vectors (the drift cure
     * after many adds/deletes — incremental inserts never revisit old
-    * nodes' edge lists, so neighborhood quality decays slowly). Like
-    * [[build]] it replaces the index, so it aborts if a commit lands
-    * meanwhile. */
+    * nodes' edge lists, so neighborhood quality decays slowly). It
+    * replaces the index, so a commit that lands meanwhile makes it
+    * re-run over the winner's vectors, never drop them. */
   def rebuild(spark: SparkSession, root: String,
               writer: String = "rebuild",
-              maxAttempts: Int = 5, recoverTornAfterMs: Long = 60000L): Long = {
-    val m = IndexTables.current(spark, root, "graph")
-    val live = IndexTables.read(spark, m, Vectors).localCheckpoint(true)
-    replaceAll(spark, root, "GraphIndex.rebuild", Some(m.version), live,
-      Similarity.nndSearchGraph(live, col("id"), col("v")), writer,
-      maxAttempts, recoverTornAfterMs)
-  }
+              maxAttempts: Int = 5, recoverTornAfterMs: Long = 60000L): Long =
+    IndexTables.optimistic(spark, root, "GraphIndex.rebuild", maxAttempts) { m =>
+      val live = IndexTables.read(spark, IndexTables.get(m, root, "graph"), Vectors)
+        .localCheckpoint(true)
+      replaceAll(spark, root, m, live, Similarity.nndSearchGraph(live, col("id"), col("v")),
+        writer, maxAttempts, recoverTornAfterMs)
+    }
 
   /** Top-k cosine neighbors from the CURRENT version for an external
     * query frame `(qid, qvec)` — [[Similarity.nndBeamSearch]] over
@@ -168,11 +179,8 @@ object GraphIndex {
   def search(spark: SparkSession, root: String, queries: DataFrame,
              qid: Column, qvec: Column, k: Int): DataFrame = {
     val m = IndexTables.current(spark, root, "graph")
-    val q = queries.select(qid.as("qid"),
-        Similarity.toDouble(qvec).as("qv"))
-      .withColumn("qn2", Similarity.normSq(col("qv")))
-    Similarity.nndBeamSearch(IndexTables.read(spark, m, Vectors),
-      IndexTables.read(spark, m, Graph), q, k)
+    Similarity.nndBeamSearch(IndexTables.read(spark, m, Vectors), walkEdges(spark, m),
+      IndexTables.queries(queries, qid, qvec), k)
   }
 
   /** Metadata-FILTERED top-k from the CURRENT version: neighbors of
@@ -197,22 +205,10 @@ object GraphIndex {
     require(k >= 1 && overFetch >= 1)
     val m = IndexTables.current(spark, root, "graph")
     val live = IndexTables.read(spark, m, Vectors)
-    val elig = eligible.select(eligibleId.cast("long").as("id")).distinct()
-    val liveElig = live.join(elig, Seq("id"), "left_semi")
-    val q = queries.select(qid.as("qid"), Similarity.toDouble(qvec).as("qv"))
-      .withColumn("qn2", Similarity.normSq(col("qv")))
-    val nLive = live.count()
-    val nElig = liveElig.count()
-    if (nElig == 0)
-      return q.select(col("qid"), lit(0L).as("rank"),
-        col("qid").as("nid"), lit(0.0).as("cos")).where(lit(false))
-    if (nLive == 0 || nElig.toDouble / nLive <= bruteCut)
-      FilteredAnn.bruteTopk(liveElig, q, k)
-    else {
-      val raw = Similarity.nndBeamSearch(live, IndexTables.read(spark, m, Graph), q,
-        k * overFetch).select(col("qid"), col("nid"), col("cos"))
-      FilteredAnn.fillExact(
-        FilteredAnn.postFilterTopk(raw, elig, k), liveElig, q, k, nElig)
+    val q = IndexTables.queries(queries, qid, qvec)
+    FilteredAnn.overIndex(live, eligible, eligibleId, q, k, bruteCut) { (_, elig) =>
+      FilteredAnn.postFilterTopk(Similarity.nndBeamSearch(live, walkEdges(spark, m), q,
+        k * overFetch).select(col("qid"), col("nid"), col("cos")), elig, k)
     }
   }
 

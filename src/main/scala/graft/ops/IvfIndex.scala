@@ -44,22 +44,18 @@ object IvfIndex {
     * persists). [[graft.sinks.Doctor]] reads it. */
   val AddsKey = "adds_since_retrain"
 
-  // one row per id: a batch carrying an id twice keeps one copy
-  private def prep(df: DataFrame, id: Column, vec: Column): DataFrame =
-    df.select(id.as("id"), vec.cast("array<double>").as("v")).dropDuplicates("id")
-      .withColumn("n2", Similarity.normSq(col("v")))
-
   /** Train k centroids on `v` (id, v, n2), assign every vector, and
-    * replace both tables (see [[IndexTables.rebuild]]). */
-  private def trainAndReplace(v: DataFrame, k: Int, root: String, op: String,
-                              entry: Option[Long], writer: String,
+    * replace both tables (see [[IndexTables.rebuild]]); `v` was read
+    * at `m`. */
+  private def trainAndReplace(v: DataFrame, k: Int, root: String, m: Option[TxLog.Manifest],
+                              writer: String,
                               maxAttempts: Int, recoverTornAfterMs: Long): Long = {
     val spark = v.sparkSession
     import spark.implicits._
     val cents = Similarity.kmeansCentroids(v, col("id"), col("v"), k)
       .map { case (cid, c) => (cid, c.toSeq) }.toDF("cid", "cv")
       .withColumn("cn2", Similarity.normSq(col("cv"))).coalesce(1)
-    IndexTables.rebuild(spark, root, op, entry, Map(
+    IndexTables.rebuild(spark, root, m, Map(
         Centroids -> IndexTables.rows(cents, "cid"),
         Vectors -> IndexTables.rows(Similarity.assignCells(v, cents), "id")),
       Map(AddsKey -> "0"), writer, maxAttempts, recoverTornAfterMs)
@@ -73,31 +69,30 @@ object IvfIndex {
   def build(df: DataFrame, id: Column, vec: Column, root: String,
             k: Int = 16, writer: String = "build",
             maxAttempts: Int = 5, recoverTornAfterMs: Long = 60000L): Long = {
-    val entry = TxLog.current(df.sparkSession, root).map(_.version)
-    trainAndReplace(prep(df, id, vec), k, root, "IvfIndex.build", entry, writer,
-      maxAttempts, recoverTornAfterMs)
+    IndexTables.optimistic(df.sparkSession, root, "IvfIndex.build", 1)(m =>
+      trainAndReplace(IndexTables.vectors(df, id, vec), k, root, m, writer, maxAttempts, recoverTornAfterMs))
   }
 
   /** Assign a new batch against the CURRENT centroids and commit it
     * as a vectors layer (no retraining); a re-added id replaces its
-    * stored vector. The commit aborts if a retrain or rebuild
-    * replaced the centroids meanwhile. Returns the committed
-    * version. */
+    * stored vector. If a retrain or rebuild replaces the centroids
+    * before the claim, the batch is re-assigned against the new ones.
+    * Returns the committed version. */
   def add(df: DataFrame, id: Column, vec: Column, root: String,
           writer: String = "add",
           maxAttempts: Int = 5, recoverTornAfterMs: Long = 60000L): Long = {
     val spark = df.sparkSession
-    val m = IndexTables.current(spark, root, "IVF")
-    val assigned = Similarity.assignCells(prep(df, id, vec),
-        IndexTables.read(spark, m, Centroids))
-      .localCheckpoint(true)
-    val nAdded = assigned.count()
-    PkTableSink.mergeTxGroup(spark, root, Map(Vectors -> IndexTables.rows(assigned, "id")),
-      writer, maxAttempts, recoverTornAfterMs, onClaim = base => {
-        require(base.flatMap(_.tables.get(Centroids)) == m.tables.get(Centroids),
-          s"IvfIndex.add: the centroids of $root were replaced during the add — re-run it")
-        Map(AddsKey -> (IndexTables.counter(base, AddsKey) + nAdded).toString)
-      })
+    IndexTables.optimistic(spark, root, "IvfIndex.add", maxAttempts) { cur =>
+      val m = IndexTables.get(cur, root, "IVF")
+      val assigned = Similarity.assignCells(IndexTables.vectors(df, id, vec),
+          IndexTables.read(spark, m, Centroids))
+        .localCheckpoint(true)
+      val nAdded = assigned.count()
+      PkTableSink.mergeTxGroup(spark, root, Map(Vectors -> IndexTables.rows(assigned, "id")),
+        writer, maxAttempts, recoverTornAfterMs, onClaim = base =>
+          IndexTables.unmoved(base.flatMap(_.tables.get(Centroids)) == m.tables.get(Centroids))(
+            Map(AddsKey -> (IndexTables.counter(base, AddsKey) + nAdded).toString)))
+    }
   }
 
   /** Tombstone a batch of vector ids as a layer (no rewrite of any
@@ -121,25 +116,24 @@ object IvfIndex {
       maxAttempts = maxAttempts, recoverTornAfterMs = recoverTornAfterMs)
 
   /** Re-train centroids on everything indexed and re-assign (the
-    * drift cure after many adds). Like [[build]] it replaces the
-    * index, so it aborts if a commit lands while it trains. */
+    * drift cure after many adds). It replaces the index, so a commit
+    * that lands while it trains makes it re-run over the winner's
+    * vectors, never drop them. */
   def retrain(spark: SparkSession, root: String, k: Int = 16,
               writer: String = "retrain",
-              maxAttempts: Int = 5, recoverTornAfterMs: Long = 60000L): Long = {
-    val m = IndexTables.current(spark, root, "IVF")
-    trainAndReplace(IndexTables.read(spark, m, Vectors).select(col("id"), col("v"), col("n2")),
-      k, root, "IvfIndex.retrain", Some(m.version), writer, maxAttempts, recoverTornAfterMs)
-  }
+              maxAttempts: Int = 5, recoverTornAfterMs: Long = 60000L): Long =
+    IndexTables.optimistic(spark, root, "IvfIndex.retrain", maxAttempts)(m =>
+      trainAndReplace(IndexTables.read(spark, IndexTables.get(m, root, "IVF"), Vectors)
+          .select(col("id"), col("v"), col("n2")),
+        k, root, m, writer, maxAttempts, recoverTornAfterMs))
 
   /** Top-k cosine neighbors from the CURRENT index version for a
     * query frame `(qid, qvec)`. Output: (qid, cell, rank, nid, cos). */
   def search(spark: SparkSession, root: String, queries: DataFrame,
              qid: Column, qvec: Column, k: Int, nprobe: Int = 1): DataFrame = {
     val m = IndexTables.current(spark, root, "IVF")
-    val q = queries.select(qid.as("qid"), qvec.cast("array<double>").as("qv"))
-      .withColumn("qn2", Similarity.normSq(col("qv")))
     Similarity.searchAssigned(IndexTables.read(spark, m, Vectors),
-      IndexTables.read(spark, m, Centroids), q, k, nprobe)
+      IndexTables.read(spark, m, Centroids), IndexTables.queries(queries, qid, qvec), k, nprobe)
   }
 
   /** Metadata-FILTERED top-k from the CURRENT index version —
@@ -164,23 +158,10 @@ object IvfIndex {
     require(k >= 1 && nprobe >= 1)
     val m = IndexTables.current(spark, root, "IVF")
     val assigned = IndexTables.read(spark, m, Vectors)
-    val elig = eligible.select(eligibleId.cast("long").as("id")).distinct()
-    val assignedElig = assigned.join(elig, Seq("id"), "left_semi")
-    val q = queries.select(qid.as("qid"), qvec.cast("array<double>").as("qv"))
-      .withColumn("qn2", Similarity.normSq(col("qv")))
-    val nLive = assigned.count()
-    val nElig = assignedElig.count()
-    if (nElig == 0)
-      return q.select(col("qid"), lit(0L).as("rank"),
-        col("qid").as("nid"), lit(0.0).as("cos")).where(lit(false))
-    val corpusElig = assignedElig.select(col("id"), col("v"), col("n2"))
-    if (nLive == 0 || nElig.toDouble / nLive <= bruteCut)
-      FilteredAnn.bruteTopk(corpusElig, q, k)
-    else {
-      val probed = Similarity.searchAssigned(assignedElig,
-          IndexTables.read(spark, m, Centroids), q, k, nprobe)
+    val q = IndexTables.queries(queries, qid, qvec)
+    FilteredAnn.overIndex(assigned, eligible, eligibleId, q, k, bruteCut) { (assignedElig, _) =>
+      Similarity.searchAssigned(assignedElig, IndexTables.read(spark, m, Centroids), q, k, nprobe)
         .select(col("qid"), col("rank"), col("nid"), col("cos"))
-      FilteredAnn.fillExact(probed, corpusElig, q, k, nElig)
     }
   }
 

@@ -62,11 +62,10 @@ object LshIndex {
     require(k > 0 && bands > 0 && k % bands == 0,
       s"k ($k) must divide evenly into bands ($bands)")
     val spark = df.sparkSession
-    val entry = TxLog.current(spark, root).map(_.version)
-    IndexTables.rebuild(spark, root, "LshIndex.build", entry,
-      batchRows(df, id, text, shingleN, k, bands),
-      Map("shingleN" -> shingleN.toString, "k" -> k.toString, "bands" -> bands.toString),
-      writer, maxAttempts, recoverTornAfterMs)
+    IndexTables.optimistic(spark, root, "LshIndex.build", 1)(m =>
+      IndexTables.rebuild(spark, root, m, batchRows(df, id, text, shingleN, k, bands),
+        Map("shingleN" -> shingleN.toString, "k" -> k.toString, "bands" -> bands.toString),
+        writer, maxAttempts, recoverTornAfterMs))
   }
 
   private def params(m: TxLog.Manifest): (Int, Int, Int) =
@@ -76,20 +75,18 @@ object LshIndex {
     * shape): signatures + band rows for the batch only — commit I/O ∝
     * batch, the existing corpus is untouched. Dedup decisions happen
     * at probe time; a re-added id replaces its signature and bands
-    * (the latest commit of a key wins). The commit aborts if a
-    * rebuild changed the banding meanwhile. */
+    * (the latest commit of a key wins). If a rebuild changes the
+    * banding before the claim, the batch is re-banded to match. */
   def add(df: DataFrame, id: Column, text: Column, root: String,
           writer: String = "add",
           maxAttempts: Int = 5, recoverTornAfterMs: Long = 60000L): Long = {
     val spark = df.sparkSession
-    val p = params(IndexTables.current(spark, root, "LSH"))
-    val (n, k, b) = p
-    PkTableSink.mergeTxGroup(spark, root, batchRows(df, id, text, n, k, b),
-      writer, maxAttempts, recoverTornAfterMs, onClaim = base => {
-        require(base.map(params).contains(p),
-          s"LshIndex.add: $root was rebuilt with other banding during the add — re-run it")
-        Map.empty
-      })
+    IndexTables.optimistic(spark, root, "LshIndex.add", maxAttempts) { m =>
+      val p @ (n, k, b) = params(IndexTables.get(m, root, "LSH"))
+      PkTableSink.mergeTxGroup(spark, root, batchRows(df, id, text, n, k, b),
+        writer, maxAttempts, recoverTornAfterMs,
+        onClaim = base => IndexTables.unmoved(base.map(params).contains(p))(Map.empty))
+    }
   }
 
   /** Near-duplicates of a BATCH against the CURRENT index version:

@@ -898,9 +898,10 @@ object Similarity {
 
   /** Edge-count ceiling for the task-local walk, as a per-node
     * factor: node count alone doesn't bound the collect — incremental
-    * [[GraphIndex]] adds keep adding (keyed, so never duplicate) edges
-    * to old nodes, so a ≤ [[NndLocalMaxNodes]]-node but edge-heavy
-    * index must stay on the BSP path. 64 edges/node ≈ 4M (long, long)
+    * [[GraphIndex]] adds keep adding edges to old nodes (and a walk
+    * reads the committed edge layers unmerged, so an edge stored again
+    * by a later add counts twice), so a ≤ [[NndLocalMaxNodes]]-node
+    * but edge-heavy index must stay on the BSP path. 64 edges/node ≈ 4M (long, long)
     * rows ≈ 64 MB at the node ceiling — the broadcast-side class. */
   val NndLocalEdgeFactor = 64
 
@@ -1255,8 +1256,8 @@ object Similarity {
       val s = idx.get(e.getLong(0)); val d = idx.get(e.getLong(1))
       if (s != null && d != null) adjB(s.intValue) += d.intValue
     }
-    // .distinct: a committed GraphIndex's edges are keyed by (src, dst),
-    // but a caller's graph frame may repeat an edge — dedupe in the
+    // .distinct: a committed GraphIndex's edge layers are read unmerged,
+    // and a caller's graph frame may repeat an edge too — dedupe in the
     // adjacency arrays (order-preserving, cheap) rather than paying a
     // shuffle to dedupe the frame before collect
     val adj: Array[Array[Int]] = adjB.map(_.result().distinct)

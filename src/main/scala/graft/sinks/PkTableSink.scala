@@ -61,6 +61,11 @@ object PkTableSink {
   // stored column are refused (a whole-row latest-wins merge would
   // silently null the column on every key the commit touches)
   private val MetaCols = "cols"
+  // set on a commit-ordered table (no version columns) once a layer
+  // may repeat a stored key or carries tombstones; a fold or replace
+  // clears it. Unset, no key repeats across layers, so a read is the
+  // plain layered scan, with no latest-per-key shuffle.
+  private val MetaOverlap = "overlap"
   // per-commit layering order for the read-time merge: among EQUAL
   // versions of a key, the later commit wins (deterministic, where
   // copy-on-write tie-break was unspecified)
@@ -103,7 +108,8 @@ object PkTableSink {
     // the scan reads them as null.
     val layered = project.fold(scan)(want => scan.select(
       scan.columns.filter(c => want.contains(c) || c == CommitSeq).map(col).toIndexedSeq: _*))
-    latest(layered, dirs.size, storedKeys(meta), versOf(meta))
+    if (versOf(meta).isEmpty && !meta.contains(MetaOverlap)) layered.drop(CommitSeq)
+    else latest(layered, dirs.size, storedKeys(meta), versOf(meta))
   }
 
   /** A table's version columns; none for a commit-ordered table (the
@@ -679,10 +685,17 @@ object PkTableSink {
     * table per commit. Safety: merge-on-read re-compacts over
     * base ∪ deltas at read time anyway, but the caller MUST keep the
     * uniqueness guarantee — two rows with one key AND one version in
-    * one delta dir would tie max_by nondeterministically. */
+    * one delta dir would tie max_by nondeterministically.
+    *
+    * `newKeys = true`, for a table with no version columns, asserts
+    * that the batch has no tombstones and none of its keys is live in
+    * the table at the base the commit claims. While every layer since
+    * the table's last fold or replace was so written, no key repeats
+    * across layers and the table's reads skip the latest-per-key
+    * merge. */
   final case class TableBatch(changes: DataFrame, keyCols: Seq[String],
                               versionCols: Seq[String], deleteFlag: String,
-                              preCompacted: Boolean = false)
+                              preCompacted: Boolean = false, newKeys: Boolean = false)
 
   private def groupMetaOf(table: String, keyCols: Seq[String],
                           versionCols: Seq[String]): Map[String, String] =
@@ -698,7 +711,6 @@ object PkTableSink {
       .withColumn(Tombstone, coalesce(col(b.deleteFlag), lit(false)))
       .drop(b.deleteFlag)
     if (b.preCompacted) withTomb
-    else if (b.versionCols.isEmpty) withTomb.dropDuplicates(b.keyCols)
     else PkTable.latestPerKey(withTomb, b.keyCols, b.versionCols.map(col))
   }
 
@@ -744,7 +756,9 @@ object PkTableSink {
     val chg = compactedWithTomb(b)
     // the recorded schema spares the dir's first reader (next round's
     // merge-on-read) its inference job
-    StagedBatch(table, dir, groupMetaOf(table, b.keyCols, b.versionCols),
+    val overlap =
+      if (b.versionCols.isEmpty && !b.newKeys) Map(s"$MetaOverlap.$table" -> "1") else Map()
+    StagedBatch(table, dir, groupMetaOf(table, b.keyCols, b.versionCols) ++ overlap,
       run(() => graft.SchemaCache.writeNew(chg, dir)))
   }
 
@@ -791,13 +805,14 @@ object PkTableSink {
     * [[vacuumTxGroup]] reference-counts shared dirs.
     *
     * A table named in `replace` becomes its batch alone (its dir
-    * replaces the list instead of extending it) — a rebuild. `onClaim`
+    * replaces the list instead of extending it, one row per key) — a
+    * rebuild. `onClaim`
     * runs in every claim attempt with the base that attempt claims:
     * the meta it returns rides in the manifest (a counter added to
     * the base the commit LANDS on, not the one its caller read, so a
     * lost race drops no other writer's count), and a throw aborts
-    * the commit, every written dir deleted (how a rebuild refuses a
-    * base that moved since it read its input).
+    * the commit, every written dir deleted (how an index verb refuses
+    * a base that moved since it read its input, before re-running).
     */
   def mergeTxGroup(spark: SparkSession, groupRoot: String,
                    batches: Map[String, TableBatch], writer: String,
@@ -852,7 +867,8 @@ object PkTableSink {
             s.table -> (if (replace(s.table)) s.dir
               else (prevTables.get(s.table).toSeq.filter(_.nonEmpty) :+ s.dir).mkString(","))
           },
-          meta = prevMeta ++ extraMeta ++ claimMeta ++ all.flatMap(_.meta),
+          meta = (prevMeta ++ extraMeta ++ claimMeta ++ all.flatMap(_.meta)) --
+            replace.map(t => s"$MetaOverlap.$t"),
           written = Nil)
       }
     } catch { case e: Throwable => discard(spark, groupRoot, all.toSeq); throw e }
@@ -903,7 +919,8 @@ object PkTableSink {
         val rows = mergeDirs(spark, ds, meta)
         Fold(keep(m, t, if (versOf(meta).isEmpty) rows.where(!col(Tombstone)) else rows),
           byKey(storedKeys(meta)), s"$groupRoot/$t")
-      } -> (ds => TxLog.Prepared(tables = m.tables ++ tables.zip(ds), meta = m.meta)))
+      } -> (ds => TxLog.Prepared(tables = m.tables ++ tables.zip(ds),
+        meta = m.meta -- tables.map(t => s"$MetaOverlap.$t"))))
     }
 
   /** Live contents of one table of a group-committed snapshot —
@@ -957,7 +974,8 @@ object PkTableSink {
   // mergeDirs reads
   private def groupTableMeta(m: TxLog.Manifest, table: String): Map[String, String] =
     Map(MetaKeys -> m.meta.getOrElse(s"$MetaKeys.$table", ""),
-      MetaVers -> m.meta.getOrElse(s"$MetaVers.$table", ""))
+      MetaVers -> m.meta.getOrElse(s"$MetaVers.$table", "")) ++
+      m.meta.get(s"$MetaOverlap.$table").map(MetaOverlap -> _)
 
   /** Group retention: drop manifests older than the `keepVersions`
     * most recent, then delete only data dirs NO KEPT manifest still

@@ -15,10 +15,12 @@ import graft.sinks.TxLog
   * ([[GraphIndex.add]], the batched-HNSW insert).
   *
   * This is the shape of an embedding-dedup crawl/ingest tier at
-  * 100 TB: the corpus lives in the index's committed parquet deltas,
-  * a batch's membership and nearest-neighbor checks are
-  * bounded-broadcast beam walks, and no stage ever rescans or
-  * shuffles the corpus.
+  * 100 TB: the corpus lives in the index's committed parquet layers,
+  * and a batch's membership and nearest-neighbor checks are an id
+  * scan and bounded-broadcast beam walks over them. No stage shuffles
+  * the corpus while the index has no deletes since its last compact:
+  * until then no id repeats across the vectors layers, so their read
+  * is a plain scan, not a merge per id.
   *
   * Duplicate-free downstream WITHOUT a watermark: the front door
   * anti-joins the batch against [[GraphIndex.liveIds]] first —

@@ -115,4 +115,32 @@ class GraphIndexSpec extends SparkSpec {
              (col("dst") < 20 && col("dst") =!= 5)).count()
     assert(deadEdges == 0L)
   }
+
+  test("graph index reads: adds keep the vectors a plain layered scan; a delete " +
+    "makes the read merge per id until compact") {
+    import spark.implicits._
+    val root = TestTmp.dir("gidxscan").toString + "/idx"
+    def add(lo: Long, hi: Long) = GraphIndex.add(
+      emb.where(col("vec_id") >= lo && col("vec_id") < hi), col("vec_id"), col("embedding"), root)
+    // the live-id read merges per id iff its plan aggregates
+    def merges = GraphIndex.liveIds(spark, root).queryExecution.executedPlan
+      .toString.contains("Aggregate")
+    def liveOnce(n: Long) = {
+      val ids = GraphIndex.liveIds(spark, root).as[Long].collect()
+      assert(ids.length == n && ids.distinct.length == n)
+    }
+    GraphIndex.build(emb.where(col("vec_id") < 60), col("vec_id"), col("embedding"), root)
+    add(60, 70); add(70, 80)
+    assert(!merges); liveOnce(80)
+    // re-adding live ids only densifies: no id lands twice
+    add(65, 75)
+    assert(!merges); liveOnce(80)
+    GraphIndex.delete(spark, root, Seq(3L).toDF("id"), col("id"))
+    assert(merges); liveOnce(79)
+    add(3, 4)
+    assert(merges); liveOnce(80)
+    GraphIndex.compact(spark, root)
+    add(80, 90)
+    assert(!merges); liveOnce(90)
+  }
 }

@@ -24,8 +24,9 @@ class ClaimHookFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 
 /** The index verbs on the group-commit path under a foreign commit
   * that lands mid-verb: concurrent adds both land with their drift
-  * counts summed, a rebuild aborts rather than drop the foreign
-  * commit, and a compaction folds it in. */
+  * counts summed, a build aborts rather than drop the foreign commit,
+  * a retrain/rebuild or a search-dependent add re-runs over it, and a
+  * compaction folds it in. */
 class IndexRaceSpec extends SparkSpec {
   import spark.implicits._
 
@@ -62,7 +63,7 @@ class IndexRaceSpec extends SparkSpec {
   }
 
   test("IVF: racing adds both land and sum their drift; a build over a foreign " +
-    "commit aborts; a compact folds a racing add in") {
+    "commit aborts; a retrain or an add re-runs over one; a compact folds a racing add in") {
     val root = hookRoot("ivfrace")
     def add(lo: Long, hi: Long, w: String) =
       IvfIndex.add(ids(lo, hi), col("vec_id"), col("embedding"), root, writer = w)
@@ -79,15 +80,32 @@ class IndexRaceSpec extends SparkSpec {
     assert(IvfIndex.count(spark, root) == 140 &&
       meta(root, IvfIndex.AddsKey).contains("40"))
 
+    // a retrain overtaken by an add re-trains over the winner's vectors
     beforeNextClaim(root)(add(140, 150, "foreign"))
+    IvfIndex.retrain(spark, root, k = 4)
+    assert(IvfIndex.count(spark, root) == 150 &&
+      meta(root, IvfIndex.AddsKey).contains("0"))
+
+    // an add overtaken by a retrain to 3 cells is re-assigned against
+    // the new centroids: no vector keeps a cell the index no longer has
+    beforeNextClaim(root)(IvfIndex.retrain(spark, root, k = 3))
+    add(150, 160, "mine")
+    assert(IvfIndex.count(spark, root) == 160 &&
+      meta(root, IvfIndex.AddsKey).contains("10"))
+    val m = TxLog.current(spark, root).get
+    assert(spark.read.parquet(m.tables("vectors").split(","): _*)
+      .where(col("cell") >= 3).count() == 0L)
+
+    beforeNextClaim(root)(add(160, 170, "foreign"))
     IvfIndex.compact(spark, root)
     assert(TxLog.current(spark, root).get.tables("vectors").split(",").length == 1)
-    assert(IvfIndex.count(spark, root) == 150)
+    assert(IvfIndex.count(spark, root) == 170)
     noOrphans(root)
   }
 
-  test("graph: racing adds both land and sum their drift; a rebuild over a " +
-    "foreign commit aborts; a compact folds a racing delete in") {
+  test("graph: racing adds both land and sum their drift, once per id; a build " +
+    "over a foreign commit aborts; a rebuild re-runs over one; an add of a live id " +
+    "overtaken by its delete resurrects it; a compact folds a racing delete in") {
     val root = hookRoot("graphrace")
     def add(lo: Long, hi: Long, w: String) =
       GraphIndex.add(ids(lo, hi), col("vec_id"), col("embedding"), root, writer = w)
@@ -98,16 +116,38 @@ class IndexRaceSpec extends SparkSpec {
       meta(root, GraphIndex.AddsKey).contains("15"))
 
     beforeNextClaim(root)(add(95, 100, "foreign"))
-    intercept[IllegalStateException](GraphIndex.rebuild(spark, root))
+    intercept[IllegalStateException](
+      GraphIndex.build(ids(0, 20), col("vec_id"), col("embedding"), root))
     assert(GraphIndex.count(spark, root) == 100 &&
       meta(root, GraphIndex.AddsKey).contains("20"))
+
+    // a rebuild overtaken by an add re-derives the graph over it
+    beforeNextClaim(root)(add(100, 105, "foreign"))
+    GraphIndex.rebuild(spark, root)
+    assert(GraphIndex.count(spark, root) == 105 &&
+      meta(root, GraphIndex.AddsKey).contains("0"))
+
+    // two adds of the same new ids: the loser re-runs, finds them
+    // live, and counts none of them again
+    beforeNextClaim(root)(add(105, 110, "foreign"))
+    add(105, 110, "mine")
+    assert(GraphIndex.count(spark, root) == 110 &&
+      meta(root, GraphIndex.AddsKey).contains("5"))
+
+    // id 3 is live when its re-add starts and deleted before the
+    // re-add claims: the re-add, committed later, leaves it live
+    beforeNextClaim(root)(GraphIndex.delete(spark, root, Seq(3L).toDF("id"), col("id")))
+    add(3, 4, "mine")
+    assert(GraphIndex.liveIds(spark, root).where(col("id") === 3L).count() == 1L)
+    assert(GraphIndex.count(spark, root) == 110 &&
+      meta(root, GraphIndex.AddsKey).contains("6"))
 
     beforeNextClaim(root)(GraphIndex.delete(spark, root, Seq(1L, 2L).toDF("id"), col("id")))
     GraphIndex.compact(spark, root)
     val m = TxLog.current(spark, root).get
     assert(m.tables("vectors").split(",").length == 1 &&
       m.tables("graph").split(",").length == 1)
-    assert(GraphIndex.count(spark, root) == 98)
+    assert(GraphIndex.count(spark, root) == 108)
     // the folded edges lost the dead nodes with the racing delete
     val dead = spark.read.parquet(m.tables("graph"))
       .where(col("src").isin(1L, 2L) || col("dst").isin(1L, 2L)).count()
